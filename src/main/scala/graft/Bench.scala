@@ -261,21 +261,30 @@ object Bench {
     // the full artifact; the 14-round count() series stays the
     // comparison key ("value"/"queries" are untouched). Off by default
     // so the driver's wall time and methodology stay unchanged.
+    // A query that fails here has no timing: it is left out of
+    // "queries_noop" and named in the pass's stderr summary.
     val noopTimes: Option[Map[String, Double]] =
       if (sys.env.get("SPARK_GRAFT_BENCH_NOOP").contains("1")) Some {
         val order = new scala.util.Random(0x9e3779b9L + passes + 1).shuffle(names)
-        order.map { name =>
+        val timed = order.flatMap { name =>
           spark.sparkContext.setJobDescription(s"bench[noop]: $name")
           val t0 = System.nanoTime()
-          try queries(name)(spark, sfDir).write.format("noop")
-            .mode("overwrite").save()
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] noop $name failed: ${e.getMessage}")
-          }
-          val dt = (System.nanoTime() - t0) / 1e9
+          val dt =
+            try {
+              queries(name)(spark, sfDir).write.format("noop")
+                .mode("overwrite").save()
+              Some((System.nanoTime() - t0) / 1e9)
+            } catch { case e: Throwable =>
+              System.err.println(s"[bench] noop $name failed: ${e.getMessage}")
+              None
+            }
           spark.sparkContext.setJobDescription(null)
-          name -> dt
+          dt.map(name -> _)
         }.toMap
+        val failed = order.filterNot(timed.contains)
+        System.err.println(s"[bench] noop pass: ${timed.size}/${order.size} timed" +
+          (if (failed.isEmpty) "" else s"; failed, omitted: ${failed.mkString(", ")}"))
+        timed
       } else None
     val results = names.map(n => n -> median(samples.map(_(n))))
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.{Text, WritableUtils}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
@@ -223,13 +224,16 @@ final class DwrfDataSource extends TableProvider with DataSourceRegister {
 }
 
 /** Process-wide planning telemetry: how many footers scan planning
-  * opened and how many files manifest-carried stats pruned before any
-  * footer I/O. The numbers accumulate across queries (single-JVM test
-  * reality); gates read a delta around one query. Correctness never
-  * depends on them.
+  * opened (split into reuses of a cached parse and fresh parses — every
+  * open still reads the tail, see [[DwrfFileReader.FooterCache]]) and how
+  * many files manifest-carried stats pruned before any footer I/O. The
+  * numbers accumulate across queries (single-JVM test reality); gates
+  * read a delta around one query. Correctness never depends on them.
   */
 object DwrfPlanningProbe {
   val footerReads = new java.util.concurrent.atomic.AtomicLong
+  val footerCacheHits = new java.util.concurrent.atomic.AtomicLong
+  val footerCacheMisses = new java.util.concurrent.atomic.AtomicLong
   val manifestPruned = new java.util.concurrent.atomic.AtomicLong
 }
 
@@ -465,17 +469,35 @@ object DwrfUtil {
 /** Hadoop Configuration is not Serializable; wrap it for shipping to
   * executor-side reader/writer factories (same role as Spark's internal
   * SerializableConfiguration).
+  *
+  * Encoding: a vint entry count, then each raw key and value of
+  * `Configuration.iterator()` as `Text.writeString` (vint length + UTF-8,
+  * so values over 64 KB and non-ASCII text survive), read back with `set`
+  * into a defaults-free Configuration. Unlike `Configuration.write` it
+  * drops each entry's source provenance — a gzipped string array per
+  * entry that nothing in graft reads, and that made a ~1,100-entry
+  * session conf ~110 KB and ~8 ms to decode in every task.
   */
 final class SerializableHadoopConf(@transient var value: Configuration)
     extends Serializable {
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
     out.defaultWriteObject()
-    value.write(out)
+    val entries = value.iterator().asScala.toSeq
+    WritableUtils.writeVInt(out, entries.size)
+    entries.foreach { e =>
+      Text.writeString(out, e.getKey)
+      Text.writeString(out, e.getValue)
+    }
   }
   private def readObject(in: java.io.ObjectInputStream): Unit = {
     in.defaultReadObject()
     value = new Configuration(false)
-    value.readFields(in)
+    val n = WritableUtils.readVInt(in)
+    var i = 0
+    while (i < n) {
+      value.set(Text.readString(in), Text.readString(in))
+      i += 1
+    }
   }
 }
 
@@ -1226,6 +1248,8 @@ final class DwrfScan(tableSchema: StructType, readSchema: StructType, path: Stri
     DwrfUtil.parMap(manifestSurvivors) { file =>
       DwrfPlanningProbe.footerReads.incrementAndGet()
       val r = new DwrfFileReader(file, hadoopConf.value)
+      (if (r.footerCacheHit) DwrfPlanningProbe.footerCacheHits
+       else DwrfPlanningProbe.footerCacheMisses).incrementAndGet()
       try {
         // keyed by dotted path (top-level AND nested struct leaves), so
         // file pruning acts on nested-field predicates too
@@ -1558,12 +1582,10 @@ final class DwrfPartitionReaderFactory(readSchemaJson: String,
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[DwrfPartitionBase]
-    val readSchema = org.apache.spark.sql.types.DataType
-      .fromJson(readSchemaJson).asInstanceOf[StructType]
     val partVals = partValuesOf(p)
     // partition columns (and the metadata columns) never live in the
     // data files: read the rest, then splice into each output row
-    val dataSchema = StructType(readSchema.fields.filterNot(f =>
+    val dataSchema = StructType(parsedSchema.fields.filterNot(f =>
       partVals.contains(f.name) ||
         (posMetaRequested && f.name == DwrfUtil.PosMetaColumn)))
     val reader = new DwrfFileReader(new Path(p.path), hadoopConf.value)
@@ -1635,14 +1657,14 @@ final class DwrfPartitionReaderFactory(readSchemaJson: String,
       if (partVals.isEmpty && !posMetaRequested) inner
       else {
         val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          readSchema.length)
+          parsedSchema.length)
         // ordinal plan: data column source index, -1 = constant,
         // -2 = the per-row `_pos` value
-        val srcIdx = readSchema.fields.map(f =>
+        val srcIdx = parsedSchema.fields.map(f =>
           if (posMetaRequested && f.name == DwrfUtil.PosMetaColumn) -2
           else if (partVals.contains(f.name)) -1
           else dataSchema.fieldIndex(f.name))
-        readSchema.fields.zipWithIndex.foreach { case (f, i) =>
+        parsedSchema.fields.zipWithIndex.foreach { case (f, i) =>
           if (srcIdx(i) == -1) out.update(i, partVals(f.name))
         }
         inner.map { r =>

@@ -17,6 +17,8 @@ final class ScanCounters extends Serializable {
   var bytesRead = 0L
   var batchesEmitted = 0L
   var preads = 0L
+  /** Readers whose footer parse came from the JVM-wide footer cache. */
+  var footerCacheHits = 0L
   /** Max bytes resident across one stream's fetch windows under paced
     * reading (`dwrf.read.pace.bytes`) — the O(window) memory evidence. */
   var pacedPeakResident = 0L
@@ -59,6 +61,10 @@ object DwrfMetrics {
     override def name(): String = "preads"
     override def description(): String = "dwrf positioned reads issued"
   }
+  final class FooterCacheHits extends CustomSumMetric {
+    override def name(): String = "footerCacheHits"
+    override def description(): String = "dwrf footer parses reused from cache"
+  }
   final class DecompressMs extends CustomSumMetric {
     override def name(): String = "decompressMs"
     override def description(): String = "dwrf decompression ms"
@@ -67,7 +73,7 @@ object DwrfMetrics {
   val all: Array[CustomMetric] = Array(
     new StripesRead, new StripesSkipped, new StridesSkipped,
     new StridesBloomSkipped, new BytesRead,
-    new BatchesEmitted, new Preads, new DecompressMs)
+    new BatchesEmitted, new Preads, new FooterCacheHits, new DecompressMs)
 
   def task(metricName: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
     // NB: the parameter must not be called `name` — inside the anonymous
@@ -85,6 +91,7 @@ object DwrfMetrics {
     task("bytesRead", c.bytesRead),
     task("batchesEmitted", c.batchesEmitted),
     task("preads", c.preads),
+    task("footerCacheHits", c.footerCacheHits),
     // reference M5's DECOMPRESSION_TIME: nanos bracketed per next()
     // call, so interleaved readers in one task thread (SPJ) never
     // double-count each other's work
