@@ -47,11 +47,6 @@ private[graft] object BenchSession {
 
 object Bench {
 
-  // last-wins summary for the shutdown-hook reprint (one hook per JVM)
-  private val lateSummary =
-    new java.util.concurrent.atomic.AtomicReference[String]("")
-  private val hookArmed =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
   private[graft] val headline: Seq[String] = Seq(
     "q1_pricing", "q3_shipping_priority", "q5_region_revenue",
     "q6_forecast_revenue", "q_events_hourly", "q_running_spend",
@@ -114,10 +109,11 @@ object Bench {
     * measurement; BenchCoverageSpec pins the list to real queries. */
   private[graft] val gatedRows = Seq("ann_lsh_recall", "ann_ivf_recall",
     "ann_pq_recall", "dedup_simhash", "ann_pq_incremental",
-    // r14: the sketch-audit scans (KLL rank error, KMV drift) ride the
-    // Gates switch — with gates off the *_within_bound fields are the
-    // spec-proven constants (KllSketchSpec/KmvSketchSpec) and the rows
-    // skip one full fact-table verification pass each
+    // r14: the sketch-audit scans (KLL rank error, theta drift) ride
+    // the Gates switch — with gates off the *_within_bound fields are
+    // constants (the gated runs in Verify and SketchQueriesSpec hold
+    // the bounds) and the rows skip one full fact-table verification
+    // pass each
     "q_quantile_sketch", "q_profile_sketch")
 
   /** Rows benched on the production float kernels instead of the
@@ -142,8 +138,9 @@ object Bench {
     * carries their pass-1 vs median split (`train_pass1` holds the raw
     * pass-1 seconds; the median is the warm search path) so no consumer
     * mistakes warm medians for cold cost (VERDICT r14 "What's wrong" #3).
-    * Nothing persists across JVM invocations: every bench run pays the
-    * full training in its own pass 1. */
+    * Nothing persists across JVM invocations, but a second bench run in
+    * the same JVM finds the memos warm: `train_pass1` is emitted only
+    * when both were empty before pass 1. */
   private[graft] val cachedStructureRows = Seq("ann_ivf_topk",
     "ann_ivf_recall", "ann_pq_topk", "ann_pq_recall", "ann_pq_persisted",
     "ann_pq_incremental", "ann_lsh_recall")
@@ -211,6 +208,7 @@ object Bench {
     // systematically warm or contaminate each other across every pass;
     // the seed is fixed so runs stay reproducible.
     val passCtx = Array.ofDim[(Double, Double, Double)](passes) // (gcSec, load1, wallSec)
+    val coldPass1 = graft.queries.SimilarityQueries.structureCachesEmpty
     // rows each query produced (last pass wins — identical inputs, so any
     // pass disagreement is itself a bug worth seeing as -1)
     val rowCounts = scala.collection.mutable.Map.empty[String, Long]
@@ -326,9 +324,10 @@ object Bench {
       s""""arith":"float","arith_float_rows":${floatRows.mkString("[\"", "\",\"", "\"]")},""" +
       // train/search split for the standing-index rows: pass 1 pays the
       // JVM-lifetime training (cold), the median is the warm search path
-      s""""cached_structure_rows":${cachedStructureRows.mkString("[\"", "\",\"", "\"]")},""" +
-      s""""train_pass1":${cachedStructureRows.filter(samples.head.contains)
-        .map(n => "\"" + n + "\":" + samples.head(n)).mkString("{", ",", "}")}"""
+      s""""cached_structure_rows":${cachedStructureRows.mkString("[\"", "\",\"", "\"]")}""" +
+      (if (!coldPass1) "" else
+        s""","train_pass1":${cachedStructureRows.filter(samples.head.contains)
+          .map(n => "\"" + n + "\":" + samples.head(n)).mkString("{", ",", "}")}""")
     val noopField = noopTimes.map(m =>
       s""""queries_noop":${names.filter(m.contains)
         .map(n => "\"" + n + "\":" + f"${m(n)}%.3f").mkString("{", ",", "}")},"""
@@ -337,31 +336,24 @@ object Bench {
     // compact reprint WITHOUT the samples array: the driver's tail
     // capture keeps the LAST 2000 bytes of output, so the final line
     // must carry the total and the per-query medians AND fit that
-    // window together with sbt's trailing "[success] Total time" line
-    // (~70 bytes). The r9 reprint missed by ~19 bytes — every round
+    // window. The r9 reprint missed by ~19 bytes — every round
     // through r9 recorded parsed:null. Enforce the budget: ms
     // precision first (nothing real lives below 1 ms at ±30% host
     // noise), then centisecond, then drop the per-query map rather
     // than overflow — the full-precision line and target/bench.json
     // always carry everything.
     val sfBase = new java.io.File(sfDir).getName
-    // round number inferred up front — the summary names the committed
-    // full-medians file so the driver artifact POINTS AT the complete
-    // data even when the per-query map can't fit the tail window
-    val round = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt).getOrElse {
-      val re = "BENCH_r(\\d+)\\.json".r
-      val prev = Option(new java.io.File(".").listFiles()).getOrElse(Array())
-        .flatMap(f => re.findFirstMatchIn(f.getName).map(_.group(1).toInt))
-      if (prev.isEmpty) 0 else prev.max + 1
-    }
-    // the "full" provenance pointer only when this run actually WRITES
-    // the committed artifact (full suite): a filtered run advertising
-    // the path would point at a stale or missing file
+    // the full-suite artifact: the committed bench/bench_rNN.json only
+    // when SPARK_GRAFT_ROUND names the round, else a neutral uncommitted
+    // file — a run can never overwrite or pre-create an artifact of
+    // record by guessing its round. The summary's "full" field points
+    // at it; a filtered run writes none and advertises none.
+    val fullRef = sys.env.get("SPARK_GRAFT_ROUND")
+      .map(r => f"bench/bench_r${r.toInt}%02d.json")
+      .getOrElse("bench/last_full.json")
     val fullField =
-      if (sys.env.get("SPARK_GRAFT_BENCH_ONLY").isEmpty)
-        s""""full":"${f"bench/bench_r$round%02d.json"}","""
+      if (sys.env.get("SPARK_GRAFT_BENCH_ONLY").isEmpty) s""""full":"$fullRef","""
       else ""
-    val fullRef = f"bench/bench_r$round%02d.json"
     def summaryAt(dp: Int): String = {
       val qsShort = results
         .map { case (k, v) => s""""$k":${s"%.${dp}f".format(v)}""" }
@@ -388,55 +380,32 @@ object Bench {
           .getOrElse(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","sf":"$sfBase","passes":$passes,"stat":"median",$fullField"queries_total":${results.size}}""")
       }
     }
-    // three sinks so the metrics line is machine-parseable however this
-    // main is launched: target/bench.json (file), the raw process stdout
-    // (bypasses sbt's [info] log prefix), and the sbt-captured stdout
+    // target/bench.json carries both lines for a consumer that cannot
+    // read stdout; the summary is the LAST stdout line (build.sbt's
+    // StdoutOutput + showSuccess := false add no prefix or footer), so
+    // a capture of the last 2000 bytes of output parses it
     val benchFile = java.nio.file.Paths.get("target/bench.json")
     if (benchFile.getParent != null) // cwd may lack target/ outside sbt
       java.nio.file.Files.createDirectories(benchFile.getParent)
     java.nio.file.Files.write(benchFile,
       (line + "\n" + summary + "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // the COMMITTED full artifact: the driver's BENCH_r{N} tail capture
-    // keeps only 2000 bytes, so the per-query detail must live at the
-    // stable committed path the summary names in its "full" field
-    if (sys.env.get("SPARK_GRAFT_BENCH_ONLY").isEmpty) { // full suite only
-      val committed = java.nio.file.Paths.get(fullRef)
-      java.nio.file.Files.createDirectories(committed.getParent)
-      java.nio.file.Files.write(committed,
+    if (fullField.nonEmpty) {
+      val full = java.nio.file.Paths.get(fullRef)
+      java.nio.file.Files.createDirectories(full.getParent)
+      java.nio.file.Files.write(full,
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
     // fixed-path mirror of the FINAL summary line (VERDICT r14 #1): a
     // consumer whose stdout capture is decorated or truncated can parse
     // this file instead — always the latest run's summary, full or
-    // filtered, never committed (bench/bench_rNN.json is the artifact
-    // of record)
+    // filtered, never committed
     val lastSummary = java.nio.file.Paths.get("bench/last_summary.json")
     java.nio.file.Files.createDirectories(lastSummary.getParent)
     java.nio.file.Files.write(lastSummary,
       (summary + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val raw = new java.io.PrintStream(new java.io.FileOutputStream(
-      java.io.FileDescriptor.out), true, "UTF-8")
-    raw.println(line)
+    spark.stop() // before the prints: no session log line can follow them
     println(line)
-    raw.println(summary)
-    // the LAST stdout line wins the driver's tail/parse: sbt appends
-    // its own "[success] Total time …" footer AFTER runMain returns, so
-    // the only way the summary can be the final line is a JVM shutdown
-    // hook on the raw FD — it fires at sbt's exit, after the footer.
-    // (Every round through r12 recorded parsed:null because the footer
-    // was last.) Registered ONCE per JVM holding the LATEST summary —
-    // multiple runMains in one sbt session would otherwise race their
-    // hooks in unspecified order. The budget above keeps the whole
-    // summary + footer inside the 2000-byte tail even with this
-    // duplicate copy.
-    lateSummary.set(summary)
-    if (hookArmed.compareAndSet(false, true))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        val late = new java.io.PrintStream(new java.io.FileOutputStream(
-          java.io.FileDescriptor.out), true, "UTF-8")
-        late.println(lateSummary.get())
-      }))
-    spark.stop()
+    println(summary)
   }
 }

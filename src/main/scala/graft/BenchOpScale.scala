@@ -425,15 +425,15 @@ object BenchOpScale {
     // same O(k) state, and the measured answers are checked against the
     // scaled corpus's own exact ranks (not assumed equal to base).
     if (sec("kll")) {
-      graft.functions.GraftFunctions.register(spark)
       def kllTier(dir: String): (Double, Double, Long, Long) = {
         val (t, (qs, n), sr, sw) = measuredF {
           Tables.load(spark, dir, "documents")
             .createOrReplaceTempView("kll_stress_docs")
           val row = spark.sql(
-            """SELECT kll_quantiles(n_chars, array(0.5D, 0.9D, 0.99D), 200),
+            """SELECT kll_sketch_get_quantile_bigint(
+              |    kll_sketch_agg_bigint(n_chars, 400), array(0.5D, 0.9D, 0.99D)),
               |  COUNT(*) FROM kll_stress_docs""".stripMargin).head()
-          (row.getSeq[Double](0), row.getLong(1))
+          (row.getSeq[Long](0), row.getLong(1))
         }
         val ranks = spark.sql(s"""
           |SELECT
@@ -455,7 +455,7 @@ object BenchOpScale {
         "kll_scaled_shuffle_read_mb" -> srN / 1e6,
         "kll_scaled_shuffle_write_mb" -> swN / 1e6)
       check(err1 <= 0.02 && errN <= 0.02,
-        s"kll_quantiles rank error broke the k=200 bound under 16x: " +
+        s"KLL rank error broke the 0.02 bound under 16x: " +
           s"base $err1, scaled $errN")
     }
 

@@ -131,9 +131,11 @@ case class DocFingerprint(child: Expression, window: Int)
 }
 
 object GraftFunctions {
-  /** Register graft's native expressions for SQL / expr() use:
-    * `doc_fingerprint(text[, window])` (scalar) and
-    * `kmv_distinct(col[, k])` (aggregate). Idempotent per session.
+  /** Register graft's native expressions for SQL / expr() use, e.g.
+    * `doc_fingerprint(text[, window])` (scalar) and `mg_topk(col, k)`
+    * (aggregate). Idempotent per session. Distinct counts and quantiles
+    * have no graft function: queries use Spark's built-in
+    * `theta_sketch_agg` and `kll_sketch_agg_*`.
     */
   def register(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -180,22 +182,6 @@ object GraftFunctions {
           org.apache.spark.sql.catalyst.expressions.Cast(_, LongType)))
         case other => throw new IllegalArgumentException(
           s"z_order(x, y[, ...]): needs >= 2 args, got ${other.size}")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_distinct",
-      {
-        case Seq(child) => KmvDistinct(child, 1024).toAggregateExpression()
-        case Seq(child, Literal(k: Int, _)) =>
-          KmvDistinct(child, k).toAggregateExpression()
-        case Seq(child, Literal(k: Long, _)) =>
-          KmvDistinct(child, k.toInt).toAggregateExpression()
-        case Seq(child, Literal(k: Short, _)) =>
-          KmvDistinct(child, k.toInt).toAggregateExpression()
-        case Seq(_, other) => throw new IllegalArgumentException(
-          s"kmv_distinct(col, k): k must be an integer literal, got $other")
-        case other => throw new IllegalArgumentException(
-          s"kmv_distinct(col[, k]): got ${other.size} args")
       },
       "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -252,38 +238,6 @@ object GraftFunctions {
         case Seq(a, b) => VecAdcPacked(a, b)
         case other => throw new IllegalArgumentException(
           s"vec_adc_packed(lut, code64): got ${other.size} args")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_quantiles",
-      {
-        case Seq(child, phisExpr, kExpr)
-            if phisExpr.foldable && kExpr.foldable =>
-          val phis = phisExpr.eval() match {
-            case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-              phisExpr.dataType match {
-                case org.apache.spark.sql.types.ArrayType(
-                    org.apache.spark.sql.types.DoubleType, _) =>
-                  a.toDoubleArray().toSeq
-                case org.apache.spark.sql.types.ArrayType(
-                    org.apache.spark.sql.types.FloatType, _) =>
-                  a.toFloatArray().map(_.toDouble).toSeq
-                case other => throw new IllegalArgumentException(
-                  s"kll_quantiles: ranks must be an array of doubles, got $other")
-              }
-            case other => throw new IllegalArgumentException(
-              s"kll_quantiles: ranks must be an array literal, got $other")
-          }
-          val k = kExpr.eval() match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case s: Short => s.toInt
-            case other => throw new IllegalArgumentException(
-              s"kll_quantiles: k must be an integer literal, got $other")
-          }
-          KllQuantiles(child, phis, k).toAggregateExpression()
-        case other => throw new IllegalArgumentException(
-          s"kll_quantiles(col, array(phi...), k): got ${other.size} args")
       },
       "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -74,6 +74,15 @@ final class MgBuffer(val k: Int) {
   * candidates only — exact top-k without ever shuffling the long tail
   * (see `text_heavy_hitters`, which fails loud if k was too small for
   * the requested top-k rather than returning a possibly-wrong answer).
+  *
+  * Why not Spark's built-in `approx_top_k`: its estimate step
+  * (`ApproxTopKEstimate`) returns `ItemsSketch.getFrequentItems(
+  * ErrorType.NO_FALSE_POSITIVES)` and does not expose the sketch's
+  * maximum error. NO_FALSE_POSITIVES may drop an item whose true count
+  * is above the threshold, so the confirm step could miss a true top-k
+  * item, and without the error bound it cannot certify the N/(k+1)
+  * cut-off that `text_heavy_hitters` REQUIREs. This buffer keeps every
+  * item over N/(k+1) under any merge shape (MisraGriesSpec).
   */
 case class MgTopK(
     child: Expression,

@@ -332,20 +332,20 @@ object CoreQueries extends QueryPack {
     |ORDER BY o_orderpriority
     |""".stripMargin.trim
 
-  // Native KMV sketch (custom TypedImperativeAggregate, see
-  // graft.functions.KmvDistinct) vs exact COUNT(DISTINCT), side by side.
-  // l_partkey cardinality exceeds k=1024 (estimation path); l_suppkey
-  // stays below it (exact path) — both branches exercised. Round 11:
-  // three-way oracle-checked — the OUTPUT carries the exact counts (any
-  // engine reproduces them) plus `kmv_within_bound`, the sketch's
-  // accuracy guarantee as a 0/1 the oracle pins to 1: a drifting sketch
-  // flips the bit and fails the hash compare, so the guarantee itself
-  // rides the driver gate. The raw sketch values stay REQUIREd in-band
-  // (and covered by KmvSketchSpec) rather than emitted, since no other
-  // engine can recompute them.
+  // Spark's built-in theta sketch (theta_sketch_agg, lgNomEntries 12 =
+  // 4096 nominal entries: exact below that, ~1.6% relative standard
+  // error above it) vs exact COUNT(DISTINCT), side by side. l_partkey
+  // takes the estimation path at sf0.1 (20,000 keys); l_suppkey stays
+  // exact at every sf. Round 11: three-way oracle-checked — the OUTPUT
+  // carries the exact counts (any engine reproduces them) plus
+  // `kmv_within_bound`, the sketch's accuracy guarantee as a 0/1 the
+  // oracle pins to 1: a drifting sketch flips the bit and fails the
+  // hash compare, so the guarantee itself rides the oracle gate. The
+  // raw sketch values stay REQUIREd in-band (and covered by
+  // SketchQueriesSpec) rather than emitted, since no other engine can
+  // recompute them.
   private def qDistinctSketch(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.registerAll(s, dir)
     val out = s.sql("""
       |SELECT col_name, approx_distinct, exact_distinct,
@@ -354,12 +354,13 @@ object CoreQueries extends QueryPack {
       |    AS BIGINT) AS kmv_within_bound
       |FROM (
       |  SELECT 'l_partkey' AS col_name,
-      |    CAST(kmv_distinct(l_partkey, 1024) AS BIGINT) AS approx_distinct,
+      |    CAST(theta_sketch_estimate(theta_sketch_agg(l_partkey, 12))
+      |      AS BIGINT) AS approx_distinct,
       |    COUNT(DISTINCT l_partkey) AS exact_distinct
       |  FROM lineitem
       |  UNION ALL
       |  SELECT 'l_suppkey',
-      |    CAST(kmv_distinct(l_suppkey, 1024) AS BIGINT),
+      |    CAST(theta_sketch_estimate(theta_sketch_agg(l_suppkey, 12)) AS BIGINT),
       |    COUNT(DISTINCT l_suppkey)
       |  FROM lineitem)
       |ORDER BY col_name
@@ -367,7 +368,7 @@ object CoreQueries extends QueryPack {
     val rows = out.collect()
     rows.foreach { r =>
       require(r.getLong(3) == 1L,
-        s"kmv_distinct(${r.getString(0)}) = ${r.getLong(1)} drifted > 5% " +
+        s"theta_sketch_estimate(${r.getString(0)}) = ${r.getLong(1)} drifted > 5% " +
           s"from exact ${r.getLong(2)}")
     }
     import s.implicits._
@@ -387,15 +388,18 @@ object CoreQueries extends QueryPack {
     |ORDER BY col_name
     |""".stripMargin.trim
 
-  // Native KLL quantile sketch (graft.functions.KllQuantiles) — the
+  // Spark's built-in KLL quantile sketch (kll_sketch_agg_double) — the
   // scale path for percentiles: exact percentile needs a full sort (or
   // Spark's QuantileSummaries over the whole column) while KLL carries
   // O(k) doubles per partial buffer through map-side combine. The
-  // rows-only check self-validates IN-BAND by measuring the true
-  // normalized rank of each sketch answer with one distributed
-  // conditional-count pass and REQUIRING the max rank error within the
-  // sketch's bound — the guarantee itself is on the driver gate, not
-  // just in sbt (same pattern as the LSH/IVF recall instruments).
+  // sketch is randomized, so K = 400: its normalized rank error is
+  // 0.0068 at 99% confidence (0.0133 at K = 200), a third of the 0.02
+  // the gate REQUIREs. The rows-only check self-validates IN-BAND by
+  // measuring the true normalized rank of each sketch answer with one
+  // distributed conditional-count pass and REQUIRING the max rank error
+  // within the sketch's bound — the guarantee itself is on the oracle
+  // gate, not just in sbt (same pattern as the LSH/IVF recall
+  // instruments).
   // Round 11: three-way oracle-checked. The OUTPUT is the exact
   // percentile values spelled rank-explicitly (value at ROW_NUMBER =
   // ceil(n·φ) — identical SQL in both engines, a PICKED element so no
@@ -403,14 +407,14 @@ object CoreQueries extends QueryPack {
   // rejected because Spark's ceil(n·φ) and DuckDB's floor((n−1)·φ)+1
   // conventions diverge by one rank whenever frac(n·φ) ≤ φ) plus the
   // sketch's rank-error guarantee as a 0/1 the oracle pins to 1. The
-  // sketch answers stay REQUIREd in-band (and in KllSketchSpec).
+  // sketch answers stay REQUIREd in-band (and in SketchQueriesSpec).
   private def qQuantileSketch(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.registerAll(s, dir)
     val first = s.sql("""
-      |SELECT kll_quantiles(l_extendedprice, array(0.5D, 0.9D, 0.99D), 200)
-      |    AS qs,
+      |SELECT kll_sketch_get_quantile_double(
+      |    kll_sketch_agg_double(l_extendedprice, 400),
+      |    array(0.5D, 0.9D, 0.99D)) AS qs,
       |  COUNT(*) AS n
       |FROM lineitem
       |""".stripMargin.trim).collect()(0)
@@ -422,10 +426,11 @@ object CoreQueries extends QueryPack {
     // (r14; Verify/opscale keep it on, bench/production skip a whole
     // corpus scan). The sketch pass above stays unconditionally: it IS
     // the operator under test.
-    // With gates off `kll_within_bound` is the spec-proven constant 1
-    // (KllSketchSpec pins the k=200 bound; the require here would have
-    // failed the gated run otherwise) — same convention as the ANN
-    // recall instruments, and the row is tagged in Bench.gatedRows.
+    // With gates off `kll_within_bound` is the constant 1 (the gated
+    // runs in Verify and SketchQueriesSpec hold the 0.02 bound; the
+    // require here would have failed them otherwise) — same convention
+    // as the ANN recall instruments, and the row is tagged in
+    // Bench.gatedRows.
     val kllWithinBound: Int = if (!Gates.enabled) 1 else {
       val ranks = s.sql(s"""
         |SELECT
@@ -439,7 +444,7 @@ object CoreQueries extends QueryPack {
       }
       val maxErr = errs.max
       require(maxErr <= 0.02,
-        s"kll_quantiles rank error $maxErr exceeds the k=200 bound 0.02")
+        s"KLL rank error $maxErr exceeds the bound 0.02")
       1 // the require above already threw on any other outcome
     }
     s.sql(s"""
@@ -525,24 +530,27 @@ object CoreQueries extends QueryPack {
     |ORDER BY g.user_id, g.day
     |""".stripMargin.trim
 
-  // One-pass column profiler: all three native sketch families (KMV
-  // distinct, KLL quantiles, Misra-Gries heavy hitters) riding ONE
-  // aggregation over lineitem — one scan, partials map-side combined,
-  // O(k) shuffle bytes per sketch. This is the data-profiling shape a
-  // 100 TB intake pipeline runs on every new table; the REQUIREs pin
-  // (a) the single-scan plan, (b) each sketch against its exact
-  // counterpart: KMV within 5%, KLL within the k=200 rank bound, and
-  // MG EXACT (3 return flags ≪ k=63 counters means zero decrement ever
-  // happens, so the sketch degenerates to exact counts by theory).
+  // One-pass column profiler: three sketch families (Spark's built-in
+  // theta distinct and KLL quantiles, graft's Misra-Gries heavy
+  // hitters) riding ONE aggregation over lineitem — one scan, partials
+  // map-side combined, O(k) shuffle bytes per sketch. This is the
+  // data-profiling shape a 100 TB intake pipeline runs on every new
+  // table; the REQUIREs pin (a) the single-scan plan, (b) each sketch
+  // against its exact counterpart: theta within 5%, KLL within the 0.02
+  // rank bound (K = 400, see qQuantileSketch), and MG EXACT (3 return
+  // flags ≪ k=63 counters means zero decrement ever happens, so the
+  // sketch degenerates to exact counts by theory).
   private def qProfileSketch(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     graft.functions.GraftFunctions.register(s)
     Tables.registerAll(s, dir)
     val one = s.sql("""
       |SELECT COUNT(*) AS n_rows,
-      |  CAST(kmv_distinct(l_partkey, 1024) AS BIGINT) AS partkey_kmv,
-      |  kll_quantiles(l_extendedprice, array(0.25D, 0.5D, 0.75D), 200)
-      |    AS price_quartiles,
+      |  CAST(theta_sketch_estimate(theta_sketch_agg(l_partkey, 12))
+      |    AS BIGINT) AS partkey_theta,
+      |  kll_sketch_get_quantile_double(
+      |    kll_sketch_agg_double(l_extendedprice, 400),
+      |    array(0.25D, 0.5D, 0.75D)) AS price_quartiles,
       |  mg_topk(l_returnflag, 63) AS returnflag_counts
       |FROM lineitem
       |""".stripMargin.trim)
@@ -558,10 +566,10 @@ object CoreQueries extends QueryPack {
       s"the profiler must read its table ONCE, found ${scans.length} scans:\n$p")
     val r = one.collect()(0)
     val nRows = r.getLong(0)
-    val kmv = r.getLong(1)
+    val theta = r.getLong(1)
     val qs = r.getSeq[Double](2)
     val modes = r.getMap[String, Long](3)
-    // sketch-accuracy audit (KMV vs exact distinct, KLL rank error):
+    // sketch-accuracy audit (theta vs exact distinct, KLL rank error):
     // one EXTRA full aggregate pass over the fact table that feeds ONLY
     // the two requires — pure metrology, gated like every other
     // in-query verification (r14). The one-scan sketch pass above and
@@ -575,12 +583,12 @@ object CoreQueries extends QueryPack {
         |  SUM(CASE WHEN l_extendedprice <= ${qs(2)} THEN 1 ELSE 0 END)
         |FROM lineitem
         |""".stripMargin.trim).collect()(0)
-      val kmvErr = math.abs(kmv - exact.getLong(0).toDouble) / exact.getLong(0)
-      require(kmvErr <= 0.05, s"KMV drifted $kmvErr from exact at k=1024")
+      val thetaErr = math.abs(theta - exact.getLong(0).toDouble) / exact.getLong(0)
+      require(thetaErr <= 0.05, s"theta sketch drifted $thetaErr from exact")
       val rankErr = Seq(0.25, 0.5, 0.75).zipWithIndex.map { case (phi, i) =>
         math.abs(exact.getLong(i + 1).toDouble / nRows - phi)
       }.max
-      require(rankErr <= 0.02, s"KLL rank error $rankErr exceeds the k=200 bound")
+      require(rankErr <= 0.02, s"KLL rank error $rankErr exceeds the bound 0.02")
     }
     val exactModes = s.sql(
       "SELECT l_returnflag, COUNT(*) FROM lineitem GROUP BY l_returnflag")

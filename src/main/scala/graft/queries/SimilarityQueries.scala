@@ -801,6 +801,11 @@ object SimilarityQueries extends QueryPack {
   private val trainCache =
     scala.collection.concurrent.TrieMap.empty[(String, Long, Long, String), AnyRef]
 
+  /** True while neither JVM-lifetime memo holds an entry: the next
+    * cached-structure query pays its training cold. */
+  private[graft] def structureCachesEmpty: Boolean =
+    trainCache.isEmpty && exactTopCache.isEmpty
+
   /** Content stamp of a parquet file OR directory: (Σ mtime+length,
     * Σ length + file count). A bare (lastModified, length) of the top
     * entry has 1-second mtime granularity and a directory's own length

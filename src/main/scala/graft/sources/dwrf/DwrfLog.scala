@@ -276,7 +276,7 @@ object DwrfLog {
         val dir = java.nio.file.Paths.get(key)
         val stamp = java.util.UUID.randomUUID().toString.take(12)
         val src = dir.resolve(s".probe-$stamp")
-        val dst = dir.resolve(s".probe-$stamp-l")
+        val links = (0 until 3).map(i => dir.resolve(s".probe-$stamp-l$i"))
         try {
           // if even the scratch WRITE fails the filesystem is sick, not
           // linkless — report "supported" WITHOUT caching, so the commit
@@ -303,13 +303,18 @@ object DwrfLog {
             // and the next commit re-probes once the condition clears
             // (never a silent permanent downgrade to the racy
             // exists+rename path).
+            // getReason is the provider's strerror(errno) text, so this
+            // assumes C-locale (English) messages: under another
+            // LC_MESSAGES no reason matches, nothing is memoized, and a
+            // linkless mount fails its commits loudly instead of taking
+            // the rename fallback. getMessage is not consulted — it also
+            // carries the file names, which may contain these words.
             def linklessSignature(e: java.io.IOException): Boolean = e match {
               case fse: java.nio.file.FileSystemException =>
-                val txt = (Option(fse.getReason) ++ Option(fse.getMessage))
-                  .mkString(" ").toLowerCase
-                txt.contains("not permitted") ||      // EPERM
-                  txt.contains("not supported") ||    // EOPNOTSUPP
-                  txt.contains("function not implemented") // ENOSYS
+                val reason = Option(fse.getReason).getOrElse("").toLowerCase
+                reason.contains("not permitted") ||      // EPERM
+                  reason.contains("not supported") ||    // EOPNOTSUPP
+                  reason.contains("function not implemented") // ENOSYS
               case _ => false
             }
             def attempt(d: java.nio.file.Path): Option[Boolean] =
@@ -322,8 +327,7 @@ object DwrfLog {
                 case e: java.io.IOException if linklessSignature(e) => Some(false)
                 case _: java.io.IOException => None // unclassified: retry
               }
-            val verdicts = Iterator.range(0, 3)
-              .map(i => attempt(dir.resolve(s".probe-$stamp-l$i")))
+            val verdicts = links.iterator.map(attempt)
               .collectFirst { case Some(v) => v }
             verdicts match {
               case Some(v) => linkProbe.putIfAbsent(key, v); v
@@ -341,7 +345,8 @@ object DwrfLog {
             }
           }
         } finally {
-          java.nio.file.Files.deleteIfExists(dst)
+          // an attempt whose own delete threw leaves its link behind
+          links.foreach(java.nio.file.Files.deleteIfExists)
           java.nio.file.Files.deleteIfExists(src)
           ()
         }

@@ -90,9 +90,12 @@ class DwrfAdmissionBatchingSpec extends AnyFunSuite {
     // branches fire in both drains
     val aggs = Seq("COUNT(*) AS n_rows",
       "CAST(ROUND(SUM(CAST(bal AS DECIMAL(18,6))), 2) AS DOUBLE) AS total_bal")
-    def maintainWith(mvpt: String): Seq[(Long, Long, Double)] = {
+    // None leaves admission unset — the whole span in one batch, the
+    // configuration stream_agg_maintain runs
+    def maintainWith(mvpt: Option[String]): Seq[(Long, Long, Double)] = {
       val tgtDir = tmpDir()
-      val tgt = s"adm_aggm_tgt_${Integer.toHexString(tgtDir.hashCode)}_$mvpt"
+      val tgt = s"adm_aggm_tgt_${Integer.toHexString(tgtDir.hashCode)}_" +
+        mvpt.getOrElse("unset")
       s.sql(s"DROP TABLE IF EXISTS $tgt")
       try {
         s.sql(s"CREATE TABLE $tgt (id BIGINT, n_rows BIGINT, " +
@@ -100,20 +103,23 @@ class DwrfAdmissionBatchingSpec extends AnyFunSuite {
         DwrfLog.enable(new Path(tgtDir), conf)
         val q = DwrfAggMaintain.start(s, srcDir, src, tgt,
           keys = Seq("id"), aggClauses = aggs, checkpoint = tmpDir(),
-          sourceOptions = Map("maxVersionsPerTrigger" -> mvpt))
+          sourceOptions = mvpt.map("maxVersionsPerTrigger" -> _).toMap)
         q.awaitTermination()
         import s.implicits._
         s.table(tgt).as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
       } finally s.sql(s"DROP TABLE IF EXISTS $tgt")
     }
     try {
-      val perVersion = maintainWith("1")
-      val batched = maintainWith("2")
+      val perVersion = maintainWith(Some("1"))
+      val batched = maintainWith(Some("2"))
+      val unset = maintainWith(None)
       assert(perVersion.nonEmpty)
       assert(perVersion.forall(r => r._1 < 45L),
         "vanished groups must be absent from the maintained rollup")
       assert(batched === perVersion,
         "a two-commit-per-trigger maintenance must produce the identical rollup")
+      assert(unset === perVersion,
+        "a whole-span maintenance must produce the identical rollup")
     } finally s.sql(s"DROP TABLE IF EXISTS $src")
   }
 }
