@@ -2,6 +2,29 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+/** The bench-contract SparkSession that Bench, Verify and PlanDump
+  * share: `local[$SPARK_GRAFT_CPUS]`, graft extensions, shuffle
+  * partitions = cpus, AQE on, UTC, UI off. ONE construction site so a
+  * probe or the correctness dump can never silently run a different
+  * session shape than the one Bench times.
+  */
+private[graft] object BenchSession {
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  def build(): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+}
+
 /** Perf surface: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line the driver records as BENCH_r{N}.json.
   *
@@ -22,29 +45,6 @@ import org.apache.spark.sql.SparkSession
   * per-query medians; `samples` carries every raw per-pass time so a
   * regression can be attributed to noise vs code without a re-run.
   */
-/** The bench-contract SparkSession every perf entry point shares
-  * (Bench, PlanDump, CountNoopProbe): `local[$SPARK_GRAFT_CPUS]`, graft
-  * extensions, shuffle partitions = cpus, AQE on, UTC, UI off. ONE
-  * construction site so a probe can never silently measure a different
-  * session shape than the one Bench times.
-  */
-private[graft] object BenchSession {
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-  def build(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-}
-
 object Bench {
 
   private[graft] val headline: Seq[String] = Seq(
@@ -103,33 +103,11 @@ object Bench {
     "stream_agg_maintain", "stream_cdc_apply", "stream_dedup_within_wm",
     "stream_session_window")
 
-  /** Rows whose correctness-looking fields are spec-proven CONSTANTS
-    * when gates are off (Gates scaladoc) — tagged into every bench
-    * artifact so a consumer cannot mistake elided metrology for
-    * measurement; BenchCoverageSpec pins the list to real queries. */
-  private[graft] val gatedRows = Seq("ann_lsh_recall", "ann_ivf_recall",
-    "ann_pq_recall", "dedup_simhash", "ann_pq_incremental",
-    // r14: the sketch-audit scans (KLL rank error, theta drift) ride
-    // the Gates switch — with gates off the *_within_bound fields are
-    // constants (the gated runs in Verify and SketchQueriesSpec hold
-    // the bounds) and the rows skip one full fact-table verification
-    // pass each
-    "q_quantile_sketch", "q_profile_sketch")
-
   /** Rows benched on the production float kernels instead of the
     * exact-decimal tier (Exact scaladoc) — a cross-policy A/B ratio on
     * these measures the arithmetic policy, not a code speedup. */
   private[graft] val floatRows = Seq("dedup_semantic", "ann_pq_topk",
     "ann_pq_recall", "ann_lsh_cosine", "ann_lsh_recall")
-
-  /** Rows whose in-band layout/selectivity AUDIT (surfacedRows driver
-    * decode passes feeding only requires) rides the Gates switch since
-    * r14 — their OUTPUT fields are real measurements in every mode, but
-    * a cross-round A/B ratio on them measures the removed audit work,
-    * not an operator speedup; bench_ab.py excludes them across the
-    * policy boundary like the other tag lists. */
-  private[graft] val auditGatedRows = Seq("dwrf_zorder_scan",
-    "dwrf_bloom_stride", "dwrf_optimize_scan")
 
   /** Rows whose pass-1 sample pays a JVM-lifetime memoized cost — the
     * trained IVF/PQ structures (`trainCache`) and the exact-top-20
@@ -144,6 +122,16 @@ object Bench {
   private[graft] val cachedStructureRows = Seq("ann_ivf_topk",
     "ann_ivf_recall", "ann_pq_topk", "ann_pq_recall", "ann_pq_persisted",
     "ann_pq_incremental", "ann_lsh_recall")
+
+  /** A query's row-count record after one more pass that returned `now`
+    * rows (-2 when it errored). An error (-2) or pass-drift (-1) marker
+    * sticks, so a later successful pass cannot hide it from the guard. */
+  private[graft] def mergeRowCount(prev: Option[Long], now: Long): Long =
+    prev match {
+      case Some(p) if p < 0 => p
+      case Some(p) if now >= 0 && p != now => -1L
+      case _ => now
+    }
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -170,13 +158,9 @@ object Bench {
     val cpus = BenchSession.cpus
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     val spark = BenchSession.build()
-    // Bench measures the operator, not the metrology: in-query
-    // verification gates (idempotency re-applies, exactly-once
-    // re-drains) stay on in Verify and the opscale harness but are
-    // ~40% of the top r11 bench row — off here so BENCH numbers are
-    // product cost (see graft.queries.Gates).
-    graft.queries.Gates.disableForBench()
-    // Bench also runs the PRODUCTION arithmetic: plain-double kernels
+    // Bench times the queries alone; their audits (graft.queries.Q) run
+    // in Verify and the opscale harness.
+    // Bench runs the PRODUCTION arithmetic: plain-double kernels
     // in the similarity tier instead of the exact-decimal ones Verify
     // keeps for oracle lockstep (see graft.queries.Exact — the answer
     // sets are pinned identical on the fixtures by ExactFloatParitySpec;
@@ -209,8 +193,8 @@ object Bench {
     // the seed is fixed so runs stay reproducible.
     val passCtx = Array.ofDim[(Double, Double, Double)](passes) // (gcSec, load1, wallSec)
     val coldPass1 = graft.queries.SimilarityQueries.structureCachesEmpty
-    // rows each query produced (last pass wins — identical inputs, so any
-    // pass disagreement is itself a bug worth seeing as -1)
+    // rows each query produced (identical inputs, so any pass
+    // disagreement is itself a bug worth seeing as -1; mergeRowCount)
     val rowCounts = scala.collection.mutable.Map.empty[String, Long]
     val samples = (1 to passes).map { pass =>
       val order = new scala.util.Random(0x9e3779b9L + pass).shuffle(names)
@@ -220,17 +204,13 @@ object Bench {
         // stages back to the benched query; thread-local, cleared below
         spark.sparkContext.setJobDescription(s"bench[$pass]: $name")
         val t0 = System.nanoTime()
-        try {
-          val n = queries(name)(spark, sfDir).count()
-          rowCounts(name) = rowCounts.get(name) match {
-            case Some(prev) if prev != n && prev >= 0 => -1L // pass drift
-            case _ => n
+        val n =
+          try queries(name)(spark, sfDir).count()
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            -2L
           }
-        }
-        catch { case e: Throwable =>
-          rowCounts(name) = -2L // errored
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
+        rowCounts(name) = mergeRowCount(rowCounts.get(name), n)
         val dt = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.setJobDescription(null)
         name -> dt
@@ -254,7 +234,7 @@ object Bench {
     // Optional noop-sink pass (guide §1.4; VERDICT r14 #7): one extra
     // pass timing df.write.format("noop") per query — count() lets the
     // optimizer prune a final aggregate's unreferenced expressions
-    // (measured 5.2× on q1_pricing by CountNoopProbe), the noop sink
+    // (measured 5.2× on q1_pricing), the noop sink
     // computes every column of every row. Recorded as "queries_noop" in
     // the full artifact; the 14-round count() series stays the
     // comparison key ("value"/"queries" are untouched). Off by default
@@ -309,18 +289,12 @@ object Bench {
       .map(c => if (c.isLetterOrDigit || "._-: ".contains(c)) c else '_')
       .take(120)
     val writtenUtc = java.time.Instant.now().toString
-    // artifact-consumer warnings (ADVICE r13): with gates off these
-    // rows emit spec-proven CONSTANTS in their correctness-looking
-    // fields (recall_within_floor, missed_le7_pairs) — the benched
-    // number is the operator, the fields are not measurements here —
-    // and the float-arithmetic rows run the production kernels, so a
-    // cross-round A/B against a pre-r14 tag measures the arithmetic
-    // policy change, not a code speedup (bench_ab.py excludes both
-    // sets from its geomean by reading these fields).
+    // artifact-consumer warning: the float-arithmetic rows run the
+    // production kernels, so an A/B against an artifact from before the
+    // float policy measures the arithmetic policy change, not a code speedup
+    // (bench_ab.py excludes them from its geomean by reading this field).
     val tags =
       s""""provenance":"$provenance","written_utc":"$writtenUtc",""" +
-      s""""gated_constant_rows":${gatedRows.mkString("[\"", "\",\"", "\"]")},""" +
-      s""""audit_gated_rows":${auditGatedRows.mkString("[\"", "\",\"", "\"]")},""" +
       s""""arith":"float","arith_float_rows":${floatRows.mkString("[\"", "\",\"", "\"]")},""" +
       // train/search split for the standing-index rows: pass 1 pays the
       // JVM-lifetime training (cold), the median is the warm search path

@@ -8,11 +8,10 @@ import org.apache.spark.sql.execution.ExplainMode
   * Usage: SPARK_GRAFT_PLAN_OUT=plans/r14 SPARK_GRAFT_PLAN_SUFFIX=after \
   *          sbt "runMain graft.PlanDump dedup_simhash ann_pq_topk"
   *
-  * Runs under BENCH conditions (gates off, production float arithmetic)
-  * so the dumped plan is the one the bench times; set
-  * SPARK_GRAFT_PLAN_EXACT=1 to dump the Verify-mode plan instead
-  * (exact-decimal arithmetic AND gates on). Session shape is shared
-  * with Bench via [[BenchSession]].
+  * Runs under BENCH conditions (production float arithmetic) so the
+  * dumped plan is the one the bench times; set SPARK_GRAFT_PLAN_EXACT=1
+  * to dump the Verify-mode plan instead (exact-decimal arithmetic).
+  * Session shape is shared with Bench via [[BenchSession]].
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -24,14 +23,9 @@ object PlanDump {
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "after")
     val spark = BenchSession.build()
     val exact = sys.env.get("SPARK_GRAFT_PLAN_EXACT").contains("1")
-    // exact mode emulates Verify (gates AND exact arithmetic stay on —
-    // disabling gates here would dump a gated query's bench
-    // short-circuit while the header claims the Verify plan); default
-    // mode emulates Bench (both off).
-    if (!exact) {
-      graft.queries.Gates.disableForBench()
-      graft.queries.Exact.disableForBench()
-    }
+    // exact mode emulates Verify's default arithmetic; default mode
+    // emulates Bench
+    if (!exact) graft.queries.Exact.disableForBench()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     // Inner-plan probes for driver-materialized queries whose declared
     // plan is just a LocalTableScan: the names below dump the actual
@@ -59,7 +53,7 @@ object PlanDump {
             val txt = df.queryExecution.explainString(
               ExplainMode.fromString("formatted"))
             val header =
-              s"query: $name\nsf: $sfDir\nmode: ${if (exact) "exact+gates-on (Verify)" else "float+gates-off (Bench)"}\n\n"
+              s"query: $name\nsf: $sfDir\nmode: ${if (exact) "exact (Verify)" else "float (Bench)"}\n\n"
             java.nio.file.Files.write(
               java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
               (header + txt).getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -36,6 +36,11 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allQueries.map(q => q.name -> q.fn).toMap
 
+  /** Each query's audit ([[graft.queries.Q]]), run after the query on
+    * the same (session, sfDir); it throws when a checked claim fails. */
+  def audits: Map[String, (SparkSession, String) => Unit] =
+    allQueries.map(q => q.name -> q.audit).toMap
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

@@ -1,34 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // Default parallelism matches Bench (local[32]): the driver's verify
-    // window is finite, and a 4-thread default quadruples wall time for
-    // no isolation benefit on this 32-cpu host — round 9 lost 68 query
-    // rows to exactly that kind of overrun.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_VERIFY_MODE=bench runs the dump under the BENCH policy
-    // (gates off, production float arithmetic) so the configuration the
-    // bench actually times can be oracle-checked end-to-end (VERDICT r14
-    // #2) — the default stays exact+gates-on, which is what the driver
-    // runs. The oracle SQL is identical in both modes: the float rows'
-    // parity claim (ExactFloatParitySpec) is that the answers match
-    // hash-exactly anyway.
+    // Same session as Bench (BenchSession: local[$SPARK_GRAFT_CPUS],
+    // default 32): a 4-thread default quadruples the dump's wall time for
+    // no isolation benefit on a 32-cpu host.
+    val spark = BenchSession.build()
+    // SPARK_GRAFT_VERIFY_MODE=bench runs the dump under the BENCH
+    // arithmetic (production float kernels) so the configuration the
+    // bench actually times can be oracle-checked end-to-end; the default
+    // mode stays exact. The oracle SQL is identical in both modes: the
+    // float rows' parity claim (ExactFloatParitySpec) is that the answers
+    // match hash-exactly anyway. Audits run in both modes.
     if (sys.env.get("SPARK_GRAFT_VERIFY_MODE").contains("bench")) {
-      System.err.println("[verify] BENCH-MODE dump: gates off, float arithmetic")
-      graft.queries.Gates.disableForBench()
+      System.err.println("[verify] BENCH-MODE dump: float arithmetic")
       graft.queries.Exact.disableForBench()
     }
     new java.io.File(outDir).mkdirs()
@@ -74,14 +62,23 @@ object Verify {
     // the surviving subset is an alphabetic prefix (diagnosable), not a
     // hash-order lottery. Per-query wall time goes to stderr so a slow
     // query is attributable from the driver log.
+    // Each query's audit runs after its dump; a failed query or audit
+    // leaves no dump, so check_oracle.py reports the query as failed.
+    val audits = SparkEntry.audits
     val t0 = System.nanoTime()
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val dump = Paths.get(outDir, name)
       val tq = System.nanoTime()
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        System.err.println(f"[verify] $name ok ${(System.nanoTime() - tq) / 1e9}%.1fs (total ${(System.nanoTime() - t0) / 1e9}%.0fs)")
+          .parquet(dump.toString)
+        val ta = System.nanoTime()
+        audits(name)(spark, sfDir)
+        System.err.println(f"[verify] $name ok ${(ta - tq) / 1e9}%.1fs, audit ${(System.nanoTime() - ta) / 1e9}%.1fs (total ${(System.nanoTime() - t0) / 1e9}%.0fs)")
       } catch { case e: Throwable =>
+        if (Files.exists(dump)) Files.walk(dump).sorted(
+          java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(p => Files.delete(p))
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

@@ -394,59 +394,50 @@ object CoreQueries extends QueryPack {
   // O(k) doubles per partial buffer through map-side combine. The
   // sketch is randomized, so K = 400: its normalized rank error is
   // 0.0068 at 99% confidence (0.0133 at K = 200), a third of the 0.02
-  // the gate REQUIREs. The rows-only check self-validates IN-BAND by
-  // measuring the true normalized rank of each sketch answer with one
-  // distributed conditional-count pass and REQUIRING the max rank error
-  // within the sketch's bound — the guarantee itself is on the oracle
-  // gate, not just in sbt (same pattern as the LSH/IVF recall
-  // instruments).
+  // the audit REQUIREs. The audit measures the true normalized rank of
+  // each sketch answer with one distributed conditional-count pass
+  // (requireRankBound).
   // Round 11: three-way oracle-checked. The OUTPUT is the exact
   // percentile values spelled rank-explicitly (value at ROW_NUMBER =
   // ceil(n·φ) — identical SQL in both engines, a PICKED element so no
   // cross-engine float arithmetic; percentile_disc/quantile_disc were
   // rejected because Spark's ceil(n·φ) and DuckDB's floor((n−1)·φ)+1
-  // conventions diverge by one rank whenever frac(n·φ) ≤ φ) plus the
-  // sketch's rank-error guarantee as a 0/1 the oracle pins to 1. The
-  // sketch answers stay REQUIREd in-band (and in SketchQueriesSpec).
-  private def qQuantileSketch(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    Tables.registerAll(s, dir)
-    val first = s.sql("""
+  // conventions diverge by one rank whenever frac(n·φ) ≤ φ). The sketch
+  // answers are checked by the audit (and in SketchQueriesSpec).
+  private val QuantilePhis = Seq(0.5, 0.9, 0.99)
+
+  /** The sketch pass q_quantile_sketch runs: KLL quantiles of
+    * l_extendedprice at `phis`, and the row count. */
+  private def priceQuantiles(s: org.apache.spark.sql.SparkSession,
+      phis: Seq[Double]): (Seq[Double], Long) = {
+    val first = s.sql(s"""
       |SELECT kll_sketch_get_quantile_double(
       |    kll_sketch_agg_double(l_extendedprice, 400),
-      |    array(0.5D, 0.9D, 0.99D)) AS qs,
+      |    array(${phis.map(p => s"${p}D").mkString(", ")})) AS qs,
       |  COUNT(*) AS n
       |FROM lineitem
       |""".stripMargin.trim).collect()(0)
-    val qs = first.getSeq[Double](0)
-    val n = first.getLong(1)
-    // rank-error audit: one EXTRA full conditional-count pass over the
-    // fact table that feeds ONLY the require — pure metrology, so it
-    // rides the Gates switch like every other in-query verification
-    // (r14; Verify/opscale keep it on, bench/production skip a whole
-    // corpus scan). The sketch pass above stays unconditionally: it IS
-    // the operator under test.
-    // With gates off `kll_within_bound` is the constant 1 (the gated
-    // runs in Verify and SketchQueriesSpec hold the 0.02 bound; the
-    // require here would have failed them otherwise) — same convention
-    // as the ANN recall instruments, and the row is tagged in
-    // Bench.gatedRows.
-    val kllWithinBound: Int = if (!Gates.enabled) 1 else {
-      val ranks = s.sql(s"""
-        |SELECT
-        |  SUM(CASE WHEN l_extendedprice <= ${qs(0)} THEN 1 ELSE 0 END) AS r50,
-        |  SUM(CASE WHEN l_extendedprice <= ${qs(1)} THEN 1 ELSE 0 END) AS r90,
-        |  SUM(CASE WHEN l_extendedprice <= ${qs(2)} THEN 1 ELSE 0 END) AS r99
-        |FROM lineitem
-        |""".stripMargin.trim).collect()(0)
-      val errs = Seq(0.5, 0.9, 0.99).zipWithIndex.map { case (phi, i) =>
-        math.abs(ranks.getLong(i).toDouble / n - phi)
-      }
-      val maxErr = errs.max
-      require(maxErr <= 0.02,
-        s"KLL rank error $maxErr exceeds the bound 0.02")
-      1 // the require above already threw on any other outcome
-    }
+    (first.getSeq[Double](0), first.getLong(1))
+  }
+
+  /** Requires the true normalized rank of each `qs(i)` among the `n`
+    * rows of lineitem's `column` to sit within 0.02 of `phis(i)`: one
+    * conditional-count pass. */
+  private[graft] def requireRankBound(s: org.apache.spark.sql.SparkSession,
+      column: String, phis: Seq[Double], qs: Seq[Double], n: Long): Unit = {
+    val ranks = s.sql(qs.map(q =>
+        s"SUM(CASE WHEN $column <= $q THEN 1 ELSE 0 END)")
+      .mkString("SELECT ", ", ", " FROM lineitem")).collect()(0)
+    val maxErr = phis.indices
+      .map(i => math.abs(ranks.getLong(i).toDouble / n - phis(i))).max
+    require(maxErr <= 0.02,
+      s"KLL rank error $maxErr exceeds the bound 0.02")
+  }
+
+  private def qQuantileSketch(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    Tables.registerAll(s, dir)
+    priceQuantiles(s, QuantilePhis) // the operator under test
     s.sql(s"""
       |WITH r AS (
       |  SELECT l_extendedprice AS x,
@@ -457,10 +448,16 @@ object CoreQueries extends QueryPack {
       |  MAX(CASE WHEN rn = CAST(ceil(n * 0.5) AS BIGINT) THEN x END) AS p50_exact,
       |  MAX(CASE WHEN rn = CAST(ceil(n * 0.9) AS BIGINT) THEN x END) AS p90_exact,
       |  MAX(CASE WHEN rn = CAST(ceil(n * 0.99) AS BIGINT) THEN x END) AS p99_exact,
-      |  CAST($kllWithinBound AS BIGINT) AS kll_within_bound,
       |  MAX(n) AS n_rows
       |FROM r
       |""".stripMargin.trim)
+  }
+
+  private def qQuantileSketchAudit(s: org.apache.spark.sql.SparkSession,
+      dir: String): Unit = {
+    Tables.registerAll(s, dir)
+    val (qs, n) = priceQuantiles(s, QuantilePhis)
+    requireRankBound(s, "l_extendedprice", QuantilePhis, qs, n)
   }
 
   private val qQuantileSketchOracle = """
@@ -473,7 +470,6 @@ object CoreQueries extends QueryPack {
     |  MAX(CASE WHEN rn = CAST(ceil(n * 0.5) AS BIGINT) THEN x END) AS p50_exact,
     |  MAX(CASE WHEN rn = CAST(ceil(n * 0.9) AS BIGINT) THEN x END) AS p90_exact,
     |  MAX(CASE WHEN rn = CAST(ceil(n * 0.99) AS BIGINT) THEN x END) AS p99_exact,
-    |  CAST(1 AS BIGINT) AS kll_within_bound,
     |  MAX(n) AS n_rows
     |FROM r
     |""".stripMargin.trim
@@ -535,25 +531,34 @@ object CoreQueries extends QueryPack {
   // hitters) riding ONE aggregation over lineitem — one scan, partials
   // map-side combined, O(k) shuffle bytes per sketch. This is the
   // data-profiling shape a 100 TB intake pipeline runs on every new
-  // table; the REQUIREs pin (a) the single-scan plan, (b) each sketch
-  // against its exact counterpart: theta within 5%, KLL within the 0.02
-  // rank bound (K = 400, see qQuantileSketch), and MG EXACT (3 return
-  // flags ≪ k=63 counters means zero decrement ever happens, so the
-  // sketch degenerates to exact counts by theory).
-  private def qProfileSketch(s: org.apache.spark.sql.SparkSession,
+  // table; the query REQUIREs (a) the single-scan plan and (b) MG EXACT
+  // (3 return flags ≪ k=63 counters means zero decrement ever happens,
+  // so the sketch degenerates to exact counts by theory); the audit
+  // holds theta within 5% of the exact distinct count and KLL within
+  // the 0.02 rank bound (K = 400, see qQuantileSketch).
+  private val ProfilePhis = Seq(0.25, 0.5, 0.75)
+
+  /** The one-scan sketch aggregation: (n_rows, partkey_theta,
+    * price_quartiles, returnflag_counts). */
+  private def profilePass(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     graft.functions.GraftFunctions.register(s)
     Tables.registerAll(s, dir)
-    val one = s.sql("""
+    s.sql(s"""
       |SELECT COUNT(*) AS n_rows,
       |  CAST(theta_sketch_estimate(theta_sketch_agg(l_partkey, 12))
       |    AS BIGINT) AS partkey_theta,
       |  kll_sketch_get_quantile_double(
       |    kll_sketch_agg_double(l_extendedprice, 400),
-      |    array(0.25D, 0.5D, 0.75D)) AS price_quartiles,
+      |    array(${ProfilePhis.map(p => s"${p}D").mkString(", ")})) AS price_quartiles,
       |  mg_topk(l_returnflag, 63) AS returnflag_counts
       |FROM lineitem
       |""".stripMargin.trim)
+  }
+
+  private def qProfileSketch(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    val one = profilePass(s, dir)
     val p = one.queryExecution.executedPlan
     val scans = (p +: p.collect {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -566,30 +571,7 @@ object CoreQueries extends QueryPack {
       s"the profiler must read its table ONCE, found ${scans.length} scans:\n$p")
     val r = one.collect()(0)
     val nRows = r.getLong(0)
-    val theta = r.getLong(1)
-    val qs = r.getSeq[Double](2)
     val modes = r.getMap[String, Long](3)
-    // sketch-accuracy audit (theta vs exact distinct, KLL rank error):
-    // one EXTRA full aggregate pass over the fact table that feeds ONLY
-    // the two requires — pure metrology, gated like every other
-    // in-query verification (r14). The one-scan sketch pass above and
-    // the exact-modes groupBy below stay unconditionally: the sketches
-    // are the operator under test and the modes feed the OUTPUT.
-    if (Gates.enabled) {
-      val exact = s.sql(s"""
-        |SELECT COUNT(DISTINCT l_partkey),
-        |  SUM(CASE WHEN l_extendedprice <= ${qs(0)} THEN 1 ELSE 0 END),
-        |  SUM(CASE WHEN l_extendedprice <= ${qs(1)} THEN 1 ELSE 0 END),
-        |  SUM(CASE WHEN l_extendedprice <= ${qs(2)} THEN 1 ELSE 0 END)
-        |FROM lineitem
-        |""".stripMargin.trim).collect()(0)
-      val thetaErr = math.abs(theta - exact.getLong(0).toDouble) / exact.getLong(0)
-      require(thetaErr <= 0.05, s"theta sketch drifted $thetaErr from exact")
-      val rankErr = Seq(0.25, 0.5, 0.75).zipWithIndex.map { case (phi, i) =>
-        math.abs(exact.getLong(i + 1).toDouble / nRows - phi)
-      }.max
-      require(rankErr <= 0.02, s"KLL rank error $rankErr exceeds the bound 0.02")
-    }
     val exactModes = s.sql(
       "SELECT l_returnflag, COUNT(*) FROM lineitem GROUP BY l_returnflag")
       .collect().map(r2 => r2.getString(0) -> r2.getLong(1)).toMap
@@ -599,8 +581,8 @@ object CoreQueries extends QueryPack {
     val (topMode, topN) = modes.maxBy { case (m, n) => (n, m) }
     // Round 11: three-way oracle-checked output — the exact counterparts
     // (distinct count, rank-explicit exact quartiles, mode table) any
-    // engine reproduces, plus `sketches_within_bound` = the three REQUIREs
-    // above as a 0/1 the oracle pins to 1. The sketch values stay in-band.
+    // engine reproduces, plus `sketches_within_bound` = the MG REQUIRE
+    // above and the audit's two bounds as a 0/1 the oracle pins to 1.
     s.sql(s"""
       |WITH r AS (
       |  SELECT l_extendedprice AS x,
@@ -618,6 +600,18 @@ object CoreQueries extends QueryPack {
       |  CAST(1 AS BIGINT) AS sketches_within_bound
       |FROM r
       |""".stripMargin.trim)
+  }
+
+  private def qProfileSketchAudit(s: org.apache.spark.sql.SparkSession,
+      dir: String): Unit = {
+    val r = profilePass(s, dir).collect()(0)
+    val nRows = r.getLong(0)
+    val theta = r.getLong(1)
+    val exact = s.sql("SELECT COUNT(DISTINCT l_partkey) FROM lineitem")
+      .collect()(0).getLong(0)
+    val thetaErr = math.abs(theta - exact.toDouble) / exact
+    require(thetaErr <= 0.05, s"theta sketch drifted $thetaErr from exact")
+    requireRankBound(s, "l_extendedprice", ProfilePhis, r.getSeq[Double](2), nRows)
   }
 
   private val qProfileSketchOracle = """
@@ -769,8 +763,10 @@ object CoreQueries extends QueryPack {
     Q("q_top_parts_window", qTopParts, Some(qTopPartsOracle)),
     Q("q_distinct_counts", qDistinct, Some(qDistinctOracle)),
     Q("q_distinct_sketch", qDistinctSketch, Some(qDistinctSketchOracle)),
-    Q("q_quantile_sketch", qQuantileSketch, Some(qQuantileSketchOracle)),
-    Q("q_profile_sketch", qProfileSketch, Some(qProfileSketchOracle)),
+    Q("q_quantile_sketch", qQuantileSketch, Some(qQuantileSketchOracle),
+      qQuantileSketchAudit),
+    Q("q_profile_sketch", qProfileSketch, Some(qProfileSketchOracle),
+      qProfileSketchAudit),
     Q("q_resample_ffill",
       (s, dir) => { Tables.registerAll(s, dir); s.sql(qResampleSql) },
       Some(qResampleOracle)),

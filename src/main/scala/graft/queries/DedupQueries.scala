@@ -527,6 +527,26 @@ object DedupQueries extends QueryPack {
       .agg(expr("simhash64(wh)").as("sim"))
   }
 
+  /** The 8-byte-band self-join over (doc_id, sim) signatures: every
+    * distinct pair sharing a band, with its exact hamming, kept at ≤ 8. */
+  private def surfacedPairs(sigs: DataFrame): DataFrame = {
+    val s = sigs.sparkSession
+    import s.implicits._
+    val banded = sigs.select($"doc_id", $"sim",
+      posexplode(expr(
+        "transform(sequence(0, 7), b -> (shiftright(sim, b * 8) & 255))"))
+        .as(Seq("band_idx", "band_val")))
+    val a = banded.as("a")
+    val b = banded.as("b")
+    a.join(b,
+      $"a.band_idx" === $"b.band_idx" && $"a.band_val" === $"b.band_val" &&
+        $"a.doc_id" < $"b.doc_id")
+      .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"),
+        bit_count($"a.sim".bitwiseXOR($"b.sim")).cast("long").as("hamming"))
+      .distinct()
+      .filter($"hamming" <= 8)
+  }
+
   private def simhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // signatures persist (16 B/doc — tiny at any corpus size) so the
@@ -541,48 +561,30 @@ object DedupQueries extends QueryPack {
     // per-split streaming, reference RecordReaderImpl.java)
     val sigs = simhashSignatures(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = sigs.select($"doc_id", $"sim",
-      posexplode(expr(
-        "transform(sequence(0, 7), b -> (shiftright(sim, b * 8) & 255))"))
-        .as(Seq("band_idx", "band_val")))
-    val a = banded.as("a")
-    val b = banded.as("b")
-    val surfaced = a.join(b,
-      $"a.band_idx" === $"b.band_idx" && $"a.band_val" === $"b.band_val" &&
-        $"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"),
-        bit_count($"a.sim".bitwiseXOR($"b.sim")).cast("long").as("hamming"))
-      .distinct()
-      .filter($"hamming" <= 8)
+    surfacedPairs(sigs).orderBy($"id_a", $"id_b")
+  }
 
-    // In-band pigeonhole audit (the guarantee SimhashPigeonholeSpec
-    // proves once, made a per-round observable): every pair at hamming
-    // ≤ 7 MUST be in the band join's output, so `missed_le7_pairs`
-    // is 0 by mathematics, not by luck — a nonzero value in
-    // CORRECTNESS means the banding itself broke. Brute force over
-    // collected (id, sig) longs is driver-sized metrology, the same
-    // bounded-loop trade ann_lsh_recall documents: n·16 bytes held,
-    // n²/2 XOR+popcounts (5k docs → 12.5M, milliseconds); the gate
-    // fails loud at the size where sampling should replace it.
-    // Gated like every other in-query verification (Q.scala Gates):
-    // Verify/opscale keep it enforced; Bench emits the spec-proven 0
-    // so the benched number is the banding's cost, not the audit's —
-    // ONLY the gated audit collects (signatures + pairs); with gates
-    // off nothing touches the driver.
-    val missed: Long = if (!Gates.enabled) 0L else try {
-      // the audit is the SECOND consumer of `surfaced` (the caller's
-      // action is the first): persist it here so Verify pays the band
-      // join + distinct once, not twice (ContextCleaner reclaims, as
-      // with sigs)
-      surfaced.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  // Pigeonhole audit (the guarantee SimhashPigeonholeSpec proves once,
+  // re-checked on every Verify run): every pair at hamming ≤ 7 MUST be
+  // in the band join's output — by mathematics, not by luck — so a miss
+  // means the banding itself broke. Brute force over collected (id, sig)
+  // longs is driver-sized metrology, the same bounded-loop trade
+  // ann_lsh_recall documents: n·16 bytes held, n²/2 XOR+popcounts (5k
+  // docs → 12.5M, milliseconds); the audit fails loud at the size where
+  // sampling should replace it.
+  private def simhashAudit(s: SparkSession, dir: String): Unit = {
+    import s.implicits._
+    val sigs = simhashSignatures(s, dir)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
       val idSigs = sigs.collect().map(r => (r.getLong(0), r.getLong(1)))
       require(idSigs.length <= 100000,
         s"simhash audit tier is bounded-quadratic; ${idSigs.length} docs " +
           "exceeds the audit budget (sample the audit at this scale)")
-      val surfacedSet = surfaced.select($"id_a", $"id_b").collect()
+      val surfacedSet = surfacedPairs(sigs).select($"id_a", $"id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       // parallel audit loop: at 60k docs the n²/2 XOR+popcounts are ~2e9
-      // ops — single-threaded that WAS most of the query's wall time;
+      // ops — single-threaded that would dominate the audit's wall time;
       // striped rows over the common pool cut it by the core count
       val missedAcc = new java.util.concurrent.atomic.AtomicLong
       java.util.stream.IntStream.range(0, idSigs.length).parallel().forEach { i =>
@@ -598,16 +600,10 @@ object DedupQueries extends QueryPack {
         }
         if (local != 0) { missedAcc.addAndGet(local); () }
       }
-      missedAcc.get()
-    } catch {
-      // deterministic cleanup on the audit's failure paths (e.g. the
-      // budget require): nothing will ever evaluate the caches
-      case t: Throwable =>
-        sigs.unpersist(); surfaced.unpersist(); throw t
-    }
-    surfaced
-      .withColumn("missed_le7_pairs", lit(missed))
-      .orderBy($"id_a", $"id_b")
+      require(missedAcc.get() == 0L,
+        s"pigeonhole violated: ${missedAcc.get()} pairs at hamming <= 7 " +
+          "are missing from the 8-band join")
+    } finally sigs.unpersist()
   }
 
   // ------------------------------------------------ embedding near-dup
@@ -1278,9 +1274,7 @@ object DedupQueries extends QueryPack {
   // sums, the signature rebuilt MSB-first by doubling (HUGEINT — bit 63
   // exceeds BIGINT), byte bands compared as exact values (the Spark
   // side bands on the same (sim >> 8b) & 255, so no hash proxy is
-  // involved anywhere). missed_le7_pairs = 0 is the pigeonhole audit's
-  // healthy value — wiring it into the oracle makes the driver enforce
-  // the recall bound, not just observe it.
+  // involved anywhere). The recall bound itself is simhashAudit's.
   private val simhashOracle = s"""
     |WITH toks AS (
     |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
@@ -1305,7 +1299,7 @@ object DedupQueries extends QueryPack {
     |  FROM bands a JOIN bands b
     |    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
     |    AND a.doc_id < b.doc_id)
-    |SELECT id_a, id_b, hamming, CAST(0 AS BIGINT) AS missed_le7_pairs
+    |SELECT id_a, id_b, hamming
     |FROM pairs WHERE hamming <= 8 ORDER BY id_a, id_b
     |""".stripMargin.trim
 
@@ -1370,7 +1364,7 @@ object DedupQueries extends QueryPack {
     Q("dedup_ngram_jaccard", ngramJaccard, Some(ngramJaccardOracle)),
     Q("dedup_clusters", dedupClusters, Some(dedupClustersOracle)),
     Q("dedup_minhash_lsh", minhashLsh, Some(minhashLshOracle)),
-    Q("dedup_simhash", simhash, Some(simhashOracle)),
+    Q("dedup_simhash", simhash, Some(simhashOracle), simhashAudit),
     Q("dedup_incremental", dedupIncremental, Some(dedupIncrementalOracle)),
     Q("dedup_embedding", embeddingDedup, Some(embeddingDedupOracle)),
     Q("dedup_semantic", semanticDedup, Some(semanticDedupOracle)),

@@ -432,25 +432,20 @@ object FormatQueries extends QueryPack {
   // written clustered by z_order(l_partkey, l_suppkey) — range-split
   // across files on z, sorted within each task by `sort.columns` through
   // the DSv2 write contract — then a range scan on EACH axis must
-  // stride-skip. The surfaced-row counts are require()d in-band exactly
-  // like dwrf_footer_agg requires its LocalScan: if the sorted write or
-  // the stride stats regress, the query FAILS instead of silently
-  // reading everything. The same two range aggregates hash-match DuckDB
-  // computing them from the original parquet, so the z-clustered bytes
-  // are also proven lossless. Band bounds are the low 1/16 of each key's
-  // observed domain, derived from the data so query and oracle stay
-  // SF-independent.
+  // stride-skip. The audit require()s the surfaced-row counts: if the
+  // sorted write or the stride stats regress, Verify FAILS the query
+  // instead of silently reading everything. The same two range
+  // aggregates hash-match DuckDB computing them from the original
+  // parquet, so the z-clustered bytes are also proven lossless. Band
+  // bounds are the low 1/16 of each key's observed domain, derived from
+  // the data so query and oracle stay SF-independent.
   private def rtZorder(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.sources.LessThanOrEqual
     graft.functions.GraftFunctions.register(s)
     val out = ioDir("lineitem_zorder", dir)
     val src = Tables.load(s, dir, "lineitem")
       .select($"l_partkey", $"l_suppkey", $"l_quantity", $"l_extendedprice")
-    val (pkMax, skMax, total) = {
-      val r = src.agg(max($"l_partkey"), max($"l_suppkey"), count(lit(1))).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
+    val (pkMax, skMax, _) = zorderDomain(src)
     val (pkHi, skHi) = (pkMax / 16, skMax / 16)
     // interleave SCALED keys: each dimension is normalized to 0..255
     // before the Morton code (the rank/scale step every production
@@ -465,33 +460,6 @@ object FormatQueries extends QueryPack {
         .option("row.index.stride", "1024")
         .option("sort.columns", "z")
         .save(out))
-    // layout audit: two single-threaded driver decode passes
-    // (surfacedRows) that feed ONLY the requires — pure metrology, so
-    // it rides the Gates switch (r14) like every other in-query
-    // verification; Verify and the opscale harness keep it on, and the
-    // skip geometry is also measured at scale in BenchFormats.
-    if (Gates.enabled) {
-      val (pkRows, pkSkip, _) = graft.sources.dwrf.DwrfUtil.surfacedRows(
-        out, "l_partkey", Seq(LessThanOrEqual("l_partkey", pkHi)))
-      val (skRows, skSkip, _) = graft.sources.dwrf.DwrfUtil.surfacedRows(
-        out, "l_suppkey", Seq(LessThanOrEqual("l_suppkey", skHi)))
-      // the band selects ~1/16 of rows; ≤1/4 surfaced allows generous
-      // stride-boundary overhang while still failing loudly if the sorted
-      // write or the stride stats regress to reading everything. The
-      // 4-stride floor keeps the bound meaningful at tiny SFs where the
-      // whole table is only a handful of strides.
-      val cap = math.max(total / 4, 4 * 1024L)
-      // the strides-skipped>0 assertion needs enough strides for the z
-      // geometry to exist at all (a ~6-stride sf0.001 table has no
-      // sub-quad to skip); the row cap always applies
-      val enoughStrides = total >= 16 * 1024L
-      require(pkRows <= cap && (!enoughStrides || pkSkip > 0),
-        s"z-ordered scan must stride-skip on l_partkey: " +
-          s"surfaced $pkRows of $total rows (cap $cap), $pkSkip strides skipped")
-      require(skRows <= cap && (!enoughStrides || skSkip > 0),
-        s"z-ordered scan must stride-skip on l_suppkey: " +
-          s"surfaced $skRows of $total rows (cap $cap), $skSkip strides skipped")
-    }
     val back = s.read.format("dwrf").load(out)
     def band(name: String, cond: org.apache.spark.sql.Column) =
       back.filter(cond).agg(
@@ -502,6 +470,44 @@ object FormatQueries extends QueryPack {
     band("partkey_band", $"l_partkey" <= pkHi)
       .union(band("suppkey_band", $"l_suppkey" <= skHi))
       .orderBy($"axis")
+  }
+
+  /** (max l_partkey, max l_suppkey, row count): the z-order scaling
+    * domain; each axis's band is the low 1/16 of its domain. */
+  private def zorderDomain(src: DataFrame): (Long, Long, Long) = {
+    val r = src.agg(max(col("l_partkey")), max(col("l_suppkey")),
+      count(lit(1))).head()
+    (r.getLong(0), r.getLong(1), r.getLong(2))
+  }
+
+  // Layout audit: two single-threaded driver decode passes
+  // (surfacedRows) over the staged z-ordered files; the skip geometry is
+  // also measured at scale in BenchFormats.
+  private def rtZorderAudit(s: SparkSession, dir: String): Unit = {
+    import org.apache.spark.sql.sources.LessThanOrEqual
+    val out = ioDir("lineitem_zorder", dir)
+    val (pkMax, skMax, total) = zorderDomain(Tables.load(s, dir, "lineitem"))
+    val (pkHi, skHi) = (pkMax / 16, skMax / 16)
+    val (pkRows, pkSkip, _) = graft.sources.dwrf.DwrfUtil.surfacedRows(
+      out, "l_partkey", Seq(LessThanOrEqual("l_partkey", pkHi)))
+    val (skRows, skSkip, _) = graft.sources.dwrf.DwrfUtil.surfacedRows(
+      out, "l_suppkey", Seq(LessThanOrEqual("l_suppkey", skHi)))
+    // the band selects ~1/16 of rows; ≤1/4 surfaced allows generous
+    // stride-boundary overhang while still failing loudly if the sorted
+    // write or the stride stats regress to reading everything. The
+    // 4-stride floor keeps the bound meaningful at tiny SFs where the
+    // whole table is only a handful of strides.
+    val cap = math.max(total / 4, 4 * 1024L)
+    // the strides-skipped>0 assertion needs enough strides for the z
+    // geometry to exist at all (a ~6-stride sf0.001 table has no
+    // sub-quad to skip); the row cap always applies
+    val enoughStrides = total >= 16 * 1024L
+    require(pkRows <= cap && (!enoughStrides || pkSkip > 0),
+      s"z-ordered scan must stride-skip on l_partkey: " +
+        s"surfaced $pkRows of $total rows (cap $cap), $pkSkip strides skipped")
+    require(skRows <= cap && (!enoughStrides || skSkip > 0),
+      s"z-ordered scan must stride-skip on l_suppkey: " +
+        s"surfaced $skRows of $total rows (cap $cap), $skSkip strides skipped")
   }
 
   private val rtZorderOracle = s"""
@@ -744,17 +750,25 @@ object FormatQueries extends QueryPack {
   // below dwrf_bloom_scan's per-file pruning): lineitem staged as ONE
   // dwrf file sorted by l_partkey, so l_orderkey is scrambled by the
   // layout and every row-index stride's [min,max] spans ~the whole
-  // orderkey domain — stats alone keep every stride. A 3-key point
-  // lookup then REQUIREs that the BLOOM_FILTER index streams refuted
-  // at least half the strides and that the surfaced volume collapsed
-  // to ~the owning strides. At 100 TB this is what turns a key lookup
+  // orderkey domain — stats alone keep every stride. For a 3-key point
+  // lookup the audit then REQUIREs that the BLOOM_FILTER index streams
+  // refuted at least half the strides and that the surfaced volume
+  // collapsed to ~the owning strides. At 100 TB this is what turns a key lookup
   // into ~one stride of I/O per surviving file instead of the whole
   // file. The oracle hash proves the pruned scan surfaces exactly the
   // right rows.
+  private val BloomStrideRows = 2048
+
+  /** The 3-key point lookup of dwrf_bloom_stride: lineitem's min, max
+    * and middle l_orderkey, plus its row count. */
+  private def bloomStrideKeys(s: SparkSession, dir: String): (Seq[Long], Long) = {
+    val r = Tables.load(s, dir, "lineitem").agg(min(col("l_orderkey")),
+      max(col("l_orderkey")), count(lit(1))).head()
+    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    (Seq(lo, hi, (lo + hi) / 2), r.getLong(2))
+  }
+
   private def bloomStride(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.sources.In
-    import graft.sources.dwrf.DwrfUtil
-    val StrideRows = 2048
     val out = ioDir("bloom_stride", dir)
     val li = Tables.load(s, dir, "lineitem")
     staged(dir, out, "lineitem", () =>
@@ -769,33 +783,31 @@ object FormatQueries extends QueryPack {
         .write.format("dwrf").mode("overwrite")
         .option("bloom.columns", "l_orderkey")
         .option("bloom.fpp", "0.005")
-        .option("row.index.stride", StrideRows.toString)
+        .option("row.index.stride", BloomStrideRows.toString)
         .save(out))
-    val (lo, hi, n) = {
-      val r = li.agg(min(col("l_orderkey")), max(col("l_orderkey")),
-        count(lit(1))).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-    val keys = Seq(lo, hi, (lo + hi) / 2)
-    // bloom-refutation audit: a driver decode pass feeding ONLY the
-    // requires — gated metrology (r14); Verify/opscale keep it on and
-    // the 2.56M-row skip geometry lives in BenchFormats/opscale_fmt64.
-    if (Gates.enabled) {
-      val numStrides = (n + StrideRows - 1) / StrideRows
-      val (surfaced, skipped, _) = DwrfUtil.surfacedRows(
-        out, "l_orderkey", Seq(In("l_orderkey", keys.toArray[Any])))
-      require(skipped >= numStrides / 2,
-        s"stride blooms must refute >= half of $numStrides strides, " +
-          s"skipped $skipped (surfaced $surfaced rows)")
-      require(surfaced <= 8L * StrideRows,
-        s"a 3-key lookup must surface ~3 strides, surfaced $surfaced rows")
-    }
+    val (keys, _) = bloomStrideKeys(s, dir)
     s.read.format("dwrf").load(out)
       .filter(col("l_orderkey").isin(keys: _*))
       .select(col("l_orderkey"),
         col("l_linenumber").cast("long").as("l_linenumber"),
         col("l_returnflag"), col("l_linestatus"))
       .orderBy(col("l_orderkey"), col("l_linenumber"))
+  }
+
+  // Bloom-refutation audit: a driver decode pass over the staged file;
+  // the 2.56M-row skip geometry lives in BenchFormats/opscale_fmt64.
+  private def bloomStrideAudit(s: SparkSession, dir: String): Unit = {
+    import org.apache.spark.sql.sources.In
+    val (keys, n) = bloomStrideKeys(s, dir)
+    val numStrides = (n + BloomStrideRows - 1) / BloomStrideRows
+    val (surfaced, skipped, _) = graft.sources.dwrf.DwrfUtil.surfacedRows(
+      ioDir("bloom_stride", dir), "l_orderkey",
+      Seq(In("l_orderkey", keys.toArray[Any])))
+    require(skipped >= numStrides / 2,
+      s"stride blooms must refute >= half of $numStrides strides, " +
+        s"skipped $skipped (surfaced $surfaced rows)")
+    require(surfaced <= 8L * BloomStrideRows,
+      s"a 3-key lookup must surface ~3 strides, surfaced $surfaced rows")
   }
 
   private val bloomStrideOracle = """
@@ -1249,54 +1261,67 @@ object FormatQueries extends QueryPack {
   // OPTIMIZE through the snapshot log: an out-of-order table (shuffled
   // write) is rewritten globally sorted by l_orderkey in one atomic
   // commit (DwrfOptimize → commitReplace), history vacuumed, and the
-  // query REQUIREs (a) the op=optimize version advance, (b) a measured
-  // surfaced-row collapse on a key-range scan vs the pre-optimize
-  // layout — the layout must BECOME selective, not just stay correct —
-  // then hash-checks a rollup so the rewrite provably lost no row.
+  // query REQUIREs the op=optimize version advance; the audit REQUIREs
+  // a measured surfaced-row collapse on a key-range scan vs an
+  // unclustered copy — the layout must BECOME selective, not just stay
+  // correct — and the oracle hash-checks a rollup so the rewrite
+  // provably lost no row.
+  /** lineitem's optimized columns and their max l_orderkey; the range
+    * scan reads keys below `keyMax / 16 + 1`. */
+  private def optimizeSource(s: SparkSession, dir: String): (DataFrame, Long) = {
+    val src = Tables.load(s, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
+    (src, src.agg(max(col("l_orderkey"))).head().getLong(0))
+  }
+
+  /** The pre-optimize layout: hash-shuffled, so every file spans the
+    * key domain and nothing can skip. */
+  private def writeUnclustered(src: DataFrame, out: String): Unit =
+    src.repartition(6)
+      .write.format("dwrf").mode("overwrite")
+      .option("row.index.stride", "1024").save(out)
+
   private def optimizeScan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.dwrf.{DwrfLog, DwrfOptimize, DwrfUtil}
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.sources.LessThan
     val out = ioDir("lineitem-opt", dir)
     val conf = DwrfUtil.sessionHadoopConf()
     val root = new Path(out)
     val fs = root.getFileSystem(conf)
     if (fs.exists(root)) fs.delete(root, true) // fresh history per run
-    val src = Tables.load(s, dir, "lineitem")
-      .select($"l_orderkey", $"l_quantity", $"l_extendedprice")
-    val keyMax = src.agg(max($"l_orderkey")).head().getLong(0)
-    src.repartition(6) // hash-shuffled: every file spans the key domain
-      .write.format("dwrf").mode("overwrite")
-      .option("row.index.stride", "1024").save(out)
+    val (src, keyMax) = optimizeSource(s, dir)
+    writeUnclustered(src, out)
     DwrfLog.enable(root, conf)
-    val band = LessThan("l_orderkey", keyMax / 16 + 1)
-    // selectivity audit: the PRE-optimize surfacedRows pass decodes the
-    // whole un-pruned table single-threaded on the driver (by
-    // construction nothing can skip before the rewrite) and both passes
-    // feed ONLY the require — gated metrology (r14); Verify/opscale
-    // keep it on. The cheap own-commit check below stays unconditional.
-    val preRows = if (Gates.enabled)
-      DwrfUtil.surfacedRows(out, "l_orderkey", Seq(band))._1
-    else -1L
     val res = DwrfOptimize.rewrite(s, out, Seq("l_orderkey"),
       targetBytes = 16L * 1024 * 1024)
     require(res.version == 1L &&
       DwrfLog.latest(root, conf).exists(_.op == "optimize"),
       s"optimize must commit one op=optimize version, got $res")
     DwrfLog.vacuum(root, conf, retainLast = 1)
-    if (Gates.enabled) {
-      val (postRows, postStrides, postStripes) =
-        DwrfUtil.surfacedRows(out, "l_orderkey", Seq(band))
-      require(postRows * 4 <= preRows && postStrides + postStripes > 0,
-        s"optimize must make the range scan selective: surfaced " +
-          s"$preRows -> $postRows rows, ${postStrides + postStripes} skips")
-    }
     s.read.format("dwrf").load(out)
       .filter($"l_orderkey" < keyMax / 16 + 1)
       .agg(count(lit(1)).as("n_rows"),
         expr(dsum("l_quantity")).as("sum_qty"),
         expr(dsum("l_extendedprice")).as("sum_price"))
+  }
+
+  // Selectivity audit: single-threaded driver decode passes
+  // (surfacedRows) over an unclustered copy (which by construction
+  // cannot skip) and over the query's optimized table.
+  private def optimizeScanAudit(s: SparkSession, dir: String): Unit = {
+    import graft.sources.dwrf.DwrfUtil
+    import org.apache.spark.sql.sources.LessThan
+    val (src, keyMax) = optimizeSource(s, dir)
+    val band = LessThan("l_orderkey", keyMax / 16 + 1)
+    val pre = ioDir("lineitem-opt-pre", dir)
+    writeUnclustered(src, pre)
+    val preRows = DwrfUtil.surfacedRows(pre, "l_orderkey", Seq(band))._1
+    val (postRows, postStrides, postStripes) =
+      DwrfUtil.surfacedRows(ioDir("lineitem-opt", dir), "l_orderkey", Seq(band))
+    require(postRows * 4 <= preRows && postStrides + postStripes > 0,
+      s"optimize must make the range scan selective: surfaced " +
+        s"$preRows -> $postRows rows, ${postStrides + postStripes} skips")
   }
 
   private val optimizeScanOracle = s"""
@@ -1643,13 +1668,14 @@ object FormatQueries extends QueryPack {
     Q("dwrf_roundtrip_events", rtEvents, Some(rtEventsOracle)),
     Q("dwrf_projection_filter", rtProjection, Some(rtProjectionOracle)),
     Q("dwrf_filter_columnar", rtFilterColumnar, Some(rtFilterColumnarOracle)),
-    Q("dwrf_zorder_scan", rtZorder, Some(rtZorderOracle)),
+    Q("dwrf_zorder_scan", rtZorder, Some(rtZorderOracle), rtZorderAudit),
     Q("dwrf_nested_types", rtNested, Some(rtNestedOracle)),
     Q("dwrf_union_roundtrip", rtUnion, Some(rtUnionOracle)),
     Q("dwrf_stripe_concat", rtConcat, Some(rtConcatOracle)),
     Q("dwrf_compact_scan", rtCompact, Some(rtCompactOracle)),
     Q("dwrf_bloom_scan", bloomScan, Some(bloomScanOracle)),
-    Q("dwrf_bloom_stride", bloomStride, Some(bloomStrideOracle)),
+    Q("dwrf_bloom_stride", bloomStride, Some(bloomStrideOracle),
+      bloomStrideAudit),
     Q("dwrf_decimal_roundtrip", rtDecimal, Some(rtDecimalOracle)),
     Q("dwrf_ddl_scan", ddlScan, Some(ddlScanOracle)),
     Q("dwrf_partitioned_roundtrip", rtPartitioned, Some(rtPartitionedOracle)),
@@ -1662,7 +1688,8 @@ object FormatQueries extends QueryPack {
     Q("dwrf_lakesql_scan", lakeSqlScan, Some(lakeSqlScanOracle)),
     Q("dwrf_update_mor", updateMor, Some(updateMorOracle)),
     Q("dwrf_changes_scan", changesScan, Some(changesScanOracle)),
-    Q("dwrf_optimize_scan", optimizeScan, Some(optimizeScanOracle)),
+    Q("dwrf_optimize_scan", optimizeScan, Some(optimizeScanOracle),
+      optimizeScanAudit),
     Q("dwrf_catalog_scan", catalogScan, Some(catalogScanOracle)),
     Q("dwrf_bucket_join", bucketJoin, Some(bucketJoinOracle)),
     Q("dwrf_restore_scan", restoreScan, Some(restoreScanOracle)),

@@ -9,6 +9,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *               tables (bare table names). None => driver records a
   *               weaker rows-only check (used for ops DuckDB can't
   *               express, e.g. MinHash-LSH).
+  * @param audit  check run AFTER `fn` on the same (session, sfDir) that
+  *               throws when the query's claim fails (recall floors,
+  *               sketch bounds, layout skips, exactly-once re-drains).
+  *               Verify and the opscale harness run it; the benches time
+  *               `fn` alone, so the timed code is the verified code.
   *
   * Determinism contract (so driver hash-compare passes):
   *  - every query ends in a total ORDER BY (full tiebreak);
@@ -20,24 +25,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Q(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: Option[String],
+    audit: (SparkSession, String) => Unit = Q.noAudit)
 
-/** Switch for in-query verification gates (idempotency re-applies,
-  * exactly-once re-drains, staging sanity REQUIREs). Verify keeps them
-  * ON — they are part of the correctness evidence. Bench turns them OFF
-  * so a benched number is the operator's cost, not the metrology: r11's
-  * most expensive bench row (`stream_agg_maintain`, 7.77 s) spent 3.1 s
-  * re-applying the full change feed just to prove idempotency, and
-  * `stream_cdc_apply` re-drained a whole stream to prove exactly-once.
-  * The opscale harness still times the gates separately (gates stay on
-  * there), so the evidence is never lost — it's just not double-counted
-  * into BENCH.
-  */
-object Gates {
-  def enabled: Boolean = !sys.props.get("graft.gates").contains("off")
-
-  /** Bench-side opt-out (irreversible by design: set once per JVM). */
-  def disableForBench(): Unit = sys.props("graft.gates") = "off"
+object Q {
+  val noAudit: (SparkSession, String) => Unit = (_, _) => ()
 }
 
 /** Arithmetic policy switch for the similarity tier (r14, VERDICT r13
@@ -60,13 +52,13 @@ object Gates {
   *    displayed low decimals could differ, and bench consumes timings,
   *    not values.
   *
-  * Same lifecycle as [[Gates]]; toggled per-call in the parity spec via
-  * the system property.
+  * Set once per JVM; toggled per-call in the parity spec via the system
+  * property.
   */
 object Exact {
   def on: Boolean = !sys.props.get("graft.exact").contains("off")
 
-  /** Bench-side opt-out (set once per JVM, like [[Gates]]). */
+  /** Bench-side opt-out (set once per JVM). */
   def disableForBench(): Unit = sys.props("graft.exact") = "off"
 }
 

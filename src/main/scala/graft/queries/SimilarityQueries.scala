@@ -583,8 +583,8 @@ object SimilarityQueries extends QueryPack {
   }
 
   /** One-pass (total rows, rows with vec_id ≠ 0) over the corpus — the
-    * only distributed inputs the instrument geometry rows need when the
-    * verification gates are off.
+    * only distributed inputs the recall probes' geometry rows need; the
+    * recall itself is measured by each probe's audit.
     */
   private def corpusCounts(s: SparkSession, dir: String): (Long, Long) = {
     val r = Tables.load(s, dir, "embeddings")
@@ -592,22 +592,20 @@ object SimilarityQueries extends QueryPack {
     (r.getLong(0), r.getLong(1))
   }
 
+  // The probed banding is benched as ann_lsh_cosine: this row carries
+  // the self-tuned geometry the oracle re-derives, from one count pass,
+  // and lshRecallAudit measures the recall.
   private def lshRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    if (!Gates.enabled) {
-      // Bench path: this query IS metrology — the banding it probes is
-      // benched as ann_lsh_cosine. Emit the oracle's geometry row from
-      // one count pass; the floor bit stands on LshRecallSpec's measured
-      // proof (Verify and opscale keep gates ON, so the probe itself
-      // never leaves the correctness evidence — it just stops riding
-      // the operator benchmarks, same separation as Gates documents).
-      val (n, nn) = corpusCounts(s, dir)
-      val (planes, bits) = autoBandGeometry(n)
-      return Seq((math.min(20L, nn * (nn - 1) / 2), PlantCount.toLong,
-        bits.toLong, (planes / bits).toLong, 1L))
-        .toDF("n_exact", "planted_pairs", "band_bits", "n_bands",
-          "planted_recall_within_floor")
-    }
+    val (n, nn) = corpusCounts(s, dir)
+    val (planes, bits) = autoBandGeometry(n)
+    Seq((math.min(20L, nn * (nn - 1) / 2), PlantCount.toLong,
+      bits.toLong, (planes / bits).toLong))
+      .toDF("n_exact", "planted_pairs", "band_bits", "n_bands")
+  }
+
+  private def lshRecallAudit(s: SparkSession, dir: String): Unit = {
+    import s.implicits._
     // The probe needs exactly two distributed artifacts: the corpus band
     // table (band-collision membership) and the DISTINCT colliding-pair
     // count (the cost axis of the recall/cost trade). They are built
@@ -669,11 +667,8 @@ object SimilarityQueries extends QueryPack {
       "planted_recall" -> plantedRecall))
     require(plantedRecall >= 0.6,
       s"LSH planted-twin recall $plantedRecall fell below the 0.6 " +
-        s"in-band floor at ${planes / bits}x$bits-bit geometry " +
+        s"floor at ${planes / bits}x$bits-bit geometry " +
         s"(theory predicts ~0.89 at cosine $PlantCosine)")
-    Seq((nExact, PlantCount.toLong, bits.toLong, (planes / bits).toLong, 1L))
-      .toDF("n_exact", "planted_pairs", "band_bits", "n_bands",
-        "planted_recall_within_floor")
   }
 
   /** The oracle recomputes [[autoBandGeometry]]'s self-tuning from the
@@ -702,8 +697,7 @@ object SimilarityQueries extends QueryPack {
     |SELECT LEAST(20, nn * (nn - 1) // 2) AS n_exact,
     |  CAST($PlantCount AS BIGINT) AS planted_pairs,
     |  bits AS band_bits,
-    |  bands AS n_bands,
-    |  CAST(1 AS BIGINT) AS planted_recall_within_floor
+    |  bands AS n_bands
     |FROM b
     |""".stripMargin.trim
 
@@ -1045,14 +1039,16 @@ object SimilarityQueries extends QueryPack {
   // instead of prose.
   private def ivfRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    if (!Gates.enabled) {
-      // Bench path (see lshRecall): the probed search is benched as
-      // ann_ivf_topk; the floor bit stands on the gated run's require.
-      val (n, nn) = corpusCounts(s, dir)
-      val (nCells, nprobe) = ivfGeometry(n)
-      return Seq((math.min(10L, nn), nprobe.toLong, nCells.toLong, 1L))
-        .toDF("n_exact", "nprobe", "n_cells", "recall_within_floor")
-    }
+    // the probed search is benched as ann_ivf_topk; this row carries the
+    // self-tuned geometry and ivfRecallAudit measures the recall
+    val (n, nn) = corpusCounts(s, dir)
+    val (nCells, nprobe) = ivfGeometry(n)
+    Seq((math.min(10L, nn), nprobe.toLong, nCells.toLong))
+      .toDF("n_exact", "nprobe", "n_cells")
+  }
+
+  private def ivfRecallAudit(s: SparkSession, dir: String): Unit = {
+    import s.implicits._
     val emb = loadVecs(s, dir)
     try {
       val (rows, _, nCells, nprobe) = ivfRows(emb, dir)
@@ -1074,14 +1070,12 @@ object SimilarityQueries extends QueryPack {
           .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
       // engine-specific instrument values ride the side-channel (sbt
       // specs + opscale pin them); the hashed emission carries only
-      // what DuckDB can recompute plus the floor guarantee as a bit
+      // what DuckDB can recompute
       lastInstrument.put("ann_ivf_recall",
         Map("n_found" -> found.toDouble, "recall" -> recall))
       require(recall >= 0.5,
         s"IVF nprobe=$nprobe/$nCells recall $recall fell below the 0.5 " +
-          "in-band floor (random assignment would sit near nprobe/cells)")
-      Seq((exactIds.size.toLong, nprobe.toLong, nCells.toLong, 1L))
-        .toDF("n_exact", "nprobe", "n_cells", "recall_within_floor")
+          "floor (random assignment would sit near nprobe/cells)")
     } finally emb.unpersist()
   }
 
@@ -1101,8 +1095,7 @@ object SimilarityQueries extends QueryPack {
     |  FROM c)
     |SELECT LEAST(10, nn) AS n_exact,
     |  GREATEST(4, (cells + 3) // 4) AS nprobe,
-    |  cells AS n_cells,
-    |  CAST(1 AS BIGINT) AS recall_within_floor
+    |  cells AS n_cells
     |FROM g
     |""".stripMargin.trim
 
@@ -1463,22 +1456,22 @@ object SimilarityQueries extends QueryPack {
   // the gate together.
   private def pqRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    if (!Gates.enabled) {
-      // Bench path (see lshRecall): the probed search is benched as
-      // ann_pq_topk; the floor bit stands on the gated run's require.
-      val (n, nn) = corpusCounts(s, dir)
-      val (m, k) = pqGeometry(n)
-      val dims = Tables.load(s, dir, "embeddings").filter($"vec_id" === 0)
-        .select(size($"embedding")).head().getInt(0).toLong
-      return Seq((math.min(10L, nn), m.toLong, k.toLong, 50L,
-        dims * 4 / m, 1L))
-        .toDF("n_exact", "m_subspaces", "k_centroids", "n_candidates",
-          "compression_x", "recall_within_floor")
-    }
+    // the probed search is benched as ann_pq_topk; this row carries the
+    // self-tuned geometry and pqRecallAudit measures the recall
+    val (n, nn) = corpusCounts(s, dir)
+    val (m, k) = pqGeometry(n)
+    val dims = Tables.load(s, dir, "embeddings").filter($"vec_id" === 0)
+      .select(size($"embedding")).head().getInt(0).toLong
+    Seq((math.min(10L, nn), m.toLong, k.toLong, 50L, dims * 4 / m))
+      .toDF("n_exact", "m_subspaces", "k_centroids", "n_candidates",
+        "compression_x")
+  }
+
+  private def pqRecallAudit(s: SparkSession, dir: String): Unit = {
+    import s.implicits._
     val emb = loadVecs(s, dir)
     try {
-      val (rows, _, m, k, nCand) = pqRows(emb, dir)
-      val pqIds = rows.map(_.getLong(0)).toSet
+      val pqIds = pqRows(emb, dir)._1.map(_.getLong(0)).toSet
       val query = emb.filter($"vec_id" === 0).select($"v".as("q"))
       val exactIds = emb.filter($"vec_id" =!= 0)
         .crossJoin(broadcast(query))
@@ -1493,17 +1486,10 @@ object SimilarityQueries extends QueryPack {
         if (exactIds.isEmpty) 0.0
         else BigDecimal(found.toDouble / exactIds.size)
           .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      // float bytes per vector vs one byte per subspace code
-      val dims = emb.filter($"vec_id" === 0)
-        .select(size($"v")).head().getInt(0).toLong
       lastInstrument.put("ann_pq_recall",
         Map("n_found" -> found.toDouble, "recall" -> recall))
       require(recall >= 0.6,
-        s"PQ ADC+re-rank recall $recall fell below the 0.6 in-band floor")
-      Seq((exactIds.size.toLong, m.toLong, k.toLong, nCand.toLong,
-        dims * 4 / m, 1L))
-        .toDF("n_exact", "m_subspaces", "k_centroids", "n_candidates",
-          "compression_x", "recall_within_floor")
+        s"PQ ADC+re-rank recall $recall fell below the 0.6 floor")
     } finally emb.unpersist()
   }
 
@@ -1519,8 +1505,7 @@ object SimilarityQueries extends QueryPack {
     |  LEAST(256, GREATEST(8,
     |    CAST(ceil(sqrt(8.0 * CAST(c.n AS DOUBLE))) AS BIGINT))) AS k_centroids,
     |  CAST(50 AS BIGINT) AS n_candidates,
-    |  d.dims * 4 // 8 AS compression_x,
-    |  CAST(1 AS BIGINT) AS recall_within_floor
+    |  d.dims * 4 // 8 AS compression_x
     |FROM c, d
     |""".stripMargin.trim
 
@@ -1715,7 +1700,8 @@ object SimilarityQueries extends QueryPack {
     * the change-feed delta (never the corpus), the index row count
     * equals the corpus, a second maintain is a provable no-op (log
     * version unchanged — exactly-once from the watermark), and the
-    * post-sync search clears the recall floor vs the exact top-10.
+    * post-sync search clears the recall floor vs the exact top-10; its
+    * audit REQUIREs the maintained codes equal a one-pass re-encode.
     * Composition under test: restore × change feed × append commits ×
     * frozen-codebook encode × packed-code ADC search.
     */
@@ -1749,6 +1735,27 @@ object SimilarityQueries extends QueryPack {
     */
   private[graft] val pqIncRecallFloor: Double = PqIncProbeTarget
 
+  /** Where ann_pq_incremental stages over a corpus, and its sizes. */
+  private final case class PqIncLayout(n: Long, nDelta: Long, m: Int, k: Int,
+      srcDir: String, idxDir: String, cbDir: String)
+
+  /** The appended delta: every vector with vec_id ≡ 7 (mod 10) but the
+    * query vector. */
+  private def pqIncIsDelta: org.apache.spark.sql.Column =
+    (col("vec_id") % 10 === 7) && (col("vec_id") =!= 0)
+
+  private def pqIncLayout(emb: DataFrame, dir: String): PqIncLayout = {
+    val n = emb.count()
+    val nDelta = emb.filter(pqIncIsDelta).count()
+    val (m, k) = pqGeometry(n - nDelta) // geometry of the TRAINING corpus
+    val tag = s"${dir.replaceAll("[^A-Za-z0-9]+", "_")}_${m}_$k"
+    val root = Staging.root
+    PqIncLayout(n, nDelta, m, k,
+      root.resolve(s"pqinc-src-$tag").toString,
+      root.resolve(s"pqinc-index-$tag").toString,
+      root.resolve(s"pqinc-codebook-$tag").toString)
+  }
+
   private def pqIncremental(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.hadoop.fs.Path
@@ -1764,21 +1771,10 @@ object SimilarityQueries extends QueryPack {
     val conf = DwrfUtil.sessionHadoopConf()
     val emb = loadVecs(s, dir)
     try {
-      val n = emb.count()
-      val isDelta = ($"vec_id" % 10 === 7) && ($"vec_id" =!= 0)
-      val nDelta = emb.filter(isDelta).count()
-      val nBase = n - nDelta
-      val (m, k) = pqGeometry(nBase) // geometry of the TRAINING corpus
-      val tag = {
-        val clean = dir.replaceAll("[^A-Za-z0-9]+", "_")
-        s"${clean}_${m}_$k"
-      }
-      val root = Staging.root
-      val srcDir = root.resolve(s"pqinc-src-$tag").toString
-      val idxDir = root.resolve(s"pqinc-index-$tag").toString
-      val cbDir = root.resolve(s"pqinc-codebook-$tag").toString
+      val PqIncLayout(n, nDelta, m, k, srcDir, idxDir, cbDir) =
+        pqIncLayout(emb, dir)
       val idxPath = new Path(idxDir)
-      Staging.once(root.resolve(s"pqinc-src-$tag/_staged"),
+      Staging.once(java.nio.file.Paths.get(srcDir, "_staged"),
         Staging.sourceKey(new java.io.File(s"$dir/embeddings.parquet"),
           s"$m:$k"),
         stillValid =
@@ -1789,13 +1785,13 @@ object SimilarityQueries extends QueryPack {
           if (fs.exists(new Path(d))) fs.delete(new Path(d), true)
         }
         // source table: v0 = the standing 90%, v1 = the appended delta
-        emb.filter(!isDelta).select($"vec_id", $"v")
+        emb.filter(!pqIncIsDelta).select($"vec_id", $"v")
           .write.format("dwrf").mode("overwrite").save(srcDir)
         DwrfLog.enable(new Path(srcDir), conf)
-        emb.filter(isDelta).select($"vec_id", $"v").repartition(1)
+        emb.filter(pqIncIsDelta).select($"vec_id", $"v").repartition(1)
           .write.format("dwrf").mode("append").save(srcDir)
         // codebooks train ONCE, on the v0 corpus only (frozen forever)
-        val sample = emb.filter(!isDelta).orderBy($"vec_id").limit(2048)
+        val sample = emb.filter(!pqIncIsDelta).orderBy($"vec_id").limit(2048)
           .collect().map(_.getSeq[Double](1).toArray)
         val codebook = pqTrain(sample, m, k)
         codebook.zipWithIndex.flatMap { case (cents, mi) =>
@@ -1807,7 +1803,7 @@ object SimilarityQueries extends QueryPack {
         // full-build yardstick the incremental maintain must undercut.
         val cbB = s.sparkContext.broadcast(codebook)
         phased("stage_full_encode") {
-          packedCodes(emb.filter(!isDelta), cbB)
+          packedCodes(emb.filter(!pqIncIsDelta), cbB)
             .withColumn("src_version", lit(0L))
             .write.format("dwrf").mode("overwrite").save(idxDir)
         }
@@ -1926,30 +1922,6 @@ object SimilarityQueries extends QueryPack {
         recall = recallOf(pqIds)
       }
       val found = (pqIds & exactIds).size.toLong
-      // PARITY gate (the incremental feature's own claim): the index the
-      // maintain produced must search IDENTICALLY to a one-pass full
-      // re-encode with the same frozen codebooks — if the appended codes
-      // differed from build-time codes in any way (wrong codebook, wrong
-      // packing, wrong rows), the top-k would diverge here. Verification
-      // metrology: on in Verify/opscale, off in Bench (Gates).
-      if (Gates.enabled) phased("gate_parity") {
-        val rebuilt = packedCodes(emb, cbB)
-          .filter($"vec_id" =!= 0)
-          .withColumn("lut", typedlit(lut))
-          .withColumn("adc", expr("vec_adc_packed(lut, code64)"))
-          .orderBy($"adc".desc, $"vec_id")
-          .limit(nCand)
-          .select($"vec_id")
-        val rebuiltIds = emb.join(broadcast(rebuilt), "vec_id")
-          .withColumn("q", typedlit(queryVec.toSeq))
-          .select($"vec_id", expr("vec_dot(v, q)").as("dot"))
-          .orderBy($"dot".desc, $"vec_id")
-          .limit(10).select($"vec_id").as[Long].collect().toSet
-        require(rebuiltIds == pqIds,
-          s"incremental index answers diverge from a one-pass rebuild " +
-            s"with the same codebooks: ${pqIds -- rebuiltIds} vs " +
-            s"${rebuiltIds -- pqIds} — the maintain wrote different codes")
-      }
       val inst = Map(
         "n_found" -> found.toDouble, "recall" -> recall,
         "recall_base" -> recallBase,
@@ -1973,6 +1945,28 @@ object SimilarityQueries extends QueryPack {
     } finally emb.unpersist()
   }
 
+  // Parity audit (the incremental feature's own claim): the index the
+  // maintain produced must hold exactly the codes a one-pass full encode
+  // with the same frozen codebooks produces — a wrong codebook, wrong
+  // packing or wrong rows in the appended codes would make the
+  // incremental index search differently from a rebuild.
+  private def pqIncrementalAudit(s: SparkSession, dir: String): Unit = {
+    val emb = loadVecs(s, dir)
+    try {
+      val l = pqIncLayout(emb, dir)
+      val cbB = s.sparkContext.broadcast(readCodebook(s, l.cbDir, l.m, l.k))
+      val maintained = s.read.format("dwrf").load(l.idxDir)
+        .select("vec_id", "code64")
+      val rebuilt = packedCodes(emb, cbB)
+      val differing = maintained.exceptAll(rebuilt).count() +
+        rebuilt.exceptAll(maintained).count()
+      require(differing == 0L,
+        s"incremental index codes diverge from a one-pass rebuild with " +
+          s"the same codebooks in $differing rows — the maintain wrote " +
+          "different codes")
+    } finally emb.unpersist()
+  }
+
   private val pqIncrementalOracle = """
     |WITH c AS (
     |  SELECT COUNT(*) AS n,
@@ -1993,12 +1987,13 @@ object SimilarityQueries extends QueryPack {
     Q("ann_filtered_topk", filteredTopk, Some(filteredTopkOracle)),
     Q("ann_cosine_pairs", cosinePairs, Some(cosinePairsOracle)),
     Q("ann_lsh_cosine", lshCosine, Some(lshCosineOracle)),
-    Q("ann_lsh_recall", lshRecall, Some(lshRecallOracle)),
+    Q("ann_lsh_recall", lshRecall, Some(lshRecallOracle), lshRecallAudit),
     Q("ann_ivf_topk", ivfTopk, Some(ivfTopkOracle)),
-    Q("ann_ivf_recall", ivfRecall, Some(ivfRecallOracle)),
+    Q("ann_ivf_recall", ivfRecall, Some(ivfRecallOracle), ivfRecallAudit),
     Q("ann_pq_topk", pqTopk, Some(pqTopkOracle)),
-    Q("ann_pq_recall", pqRecall, Some(pqRecallOracle)),
+    Q("ann_pq_recall", pqRecall, Some(pqRecallOracle), pqRecallAudit),
     Q("ann_pq_persisted", pqPersisted, Some(pqPersistedOracle)),
-    Q("ann_pq_incremental", pqIncremental, Some(pqIncrementalOracle)),
+    Q("ann_pq_incremental", pqIncremental, Some(pqIncrementalOracle),
+      pqIncrementalAudit),
   )
 }

@@ -190,14 +190,20 @@ object StreamingQueries extends QueryPack {
         .foreach(java.nio.file.Files.delete)
     }
 
+  /** The checkpoint+sink dirs of stream `name` over `dir`. */
+  private def sinkDirs(name: String, dir: String): (String, String) = {
+    val tag = dirTag(dir)
+    (stagingRoot.resolve(s"$name-ck-$tag").toString,
+      stagingRoot.resolve(s"$name-out-$tag").toString)
+  }
+
   /** Fresh checkpoint+sink dirs per run: the file sink is append-only, so
     * a stale sink without its checkpoint would double-count. */
   private def freshSinkDirs(name: String, dir: String): (String, String) = {
-    val tag = dirTag(dir)
-    val ckDir = stagingRoot.resolve(s"$name-ck-$tag")
-    val outDir = stagingRoot.resolve(s"$name-out-$tag")
-    rmTree(ckDir); rmTree(outDir)
-    (ckDir.toString, outDir.toString)
+    val dirs = sinkDirs(name, dir)
+    rmTree(java.nio.file.Paths.get(dirs._1))
+    rmTree(java.nio.file.Paths.get(dirs._2))
+    dirs
   }
 
   private def eventsWindow(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, 8) {
@@ -1162,20 +1168,32 @@ object StreamingQueries extends QueryPack {
   // merge-on-read DELETE; DwrfApplyChanges streams the change feed and
   // MERGEs each micro-batch's net effect into an initially-EMPTY target
   // table — the replica materializes from the feed alone. Exactly-once
-  // is REQUIREd, not assumed: a second drain over the same checkpoint
-  // must leave the target's version untouched. The target rollup then
-  // hash-matches DuckDB computing the source's final state directly
-  // from parquet (update arithmetic + delete filter) — the replica IS
-  // the table.
+  // is REQUIREd by the audit, not assumed: a second drain over the same
+  // checkpoint must leave the target's version untouched. The target
+  // rollup then hash-matches DuckDB computing the source's final state
+  // directly from parquet (update arithmetic + delete filter) — the
+  // replica IS the table.
+  /** stream_cdc_apply's staged source dir, replica dir, and the
+    * replica's table name. */
+  private def cdcApplyDirs(dir: String): (String, String, String) = {
+    val tag = dirTag(dir)
+    (stagingRoot.resolve(s"cdc-apply-src-$tag").toString,
+      stagingRoot.resolve(s"cdc-apply-tgt-$tag").toString,
+      s"graft_cdc_tgt_$tag")
+  }
+
+  /** One AvailableNow drain of `srcDir`'s change feed into `tgtTbl`. */
+  private def cdcDrain(s: SparkSession, srcDir: String, tgtTbl: String,
+      ckDir: String): Unit =
+    graft.sources.dwrf.DwrfApplyChanges.start(s, srcDir, tgtTbl,
+      keys = Seq("o_orderkey"), checkpoint = ckDir).awaitTermination()
+
   private def streamCdcApply(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.hadoop.fs.Path
-    import graft.sources.dwrf.{DwrfApplyChanges, DwrfDv, DwrfLog, DwrfUtil}
-    val tag = dirTag(dir)
-    val srcDir = stagingRoot.resolve(s"cdc-apply-src-$tag").toString
-    val tgtDir = stagingRoot.resolve(s"cdc-apply-tgt-$tag").toString
-    val srcTbl = s"graft_cdc_src_$tag"
-    val tgtTbl = s"graft_cdc_tgt_$tag"
+    import graft.sources.dwrf.{DwrfDv, DwrfLog, DwrfUtil}
+    val (srcDir, tgtDir, tgtTbl) = cdcApplyDirs(dir)
+    val srcTbl = s"graft_cdc_src_${dirTag(dir)}"
     val conf = DwrfUtil.sessionHadoopConf()
     val fs = new Path(srcDir).getFileSystem(conf)
     s.sql(s"DROP TABLE IF EXISTS $srcTbl")
@@ -1184,7 +1202,7 @@ object StreamingQueries extends QueryPack {
     // the staged v0..v3 source is deterministic and never mutated after
     // staging (the drain only READS the feed) — cache it across runs,
     // keyed on the source parquet's identity like stageChunks
-    val srcMarker = stagingRoot.resolve(s"cdc-apply-src-$tag/_staged")
+    val srcMarker = java.nio.file.Paths.get(srcDir, "_staged")
     val srcKey = Staging.sourceKey(new java.io.File(s"$dir/orders.parquet"))
     val ph = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     try {
@@ -1243,19 +1261,9 @@ object StreamingQueries extends QueryPack {
       // bit-identical across append/CoW-update/MoR-delete commits. The
       // incremental-MERGE shape stays benched via dwrf_merge_scan /
       // dwrf_update_mor and spec-covered here; oracle re-checked.
-      def drain(): Unit = {
-        val q = DwrfApplyChanges.start(s, srcDir, tgtTbl,
-          keys = Seq("o_orderkey"), checkpoint = ckDir)
-        q.awaitTermination()
-      }
-      phased(ph, "drain") { drain() }
+      phased(ph, "drain") { cdcDrain(s, srcDir, tgtTbl, ckDir) }
       val vApplied = DwrfLog.latestVersion(new Path(tgtDir), conf).get
       require(vApplied >= 1L, "the apply must commit merges to the target")
-      if (Gates.enabled) {
-        phased(ph, "redrain_noop") { drain() } // exactly-once: nothing new
-        require(DwrfLog.latestVersion(new Path(tgtDir), conf).get == vApplied,
-          "a re-drain over the same checkpoint must not re-apply anything")
-      }
 
       val rolled = s.sql(s"""
         |SELECT o_orderstatus, COUNT(*) AS n_orders,
@@ -1281,36 +1289,63 @@ object StreamingQueries extends QueryPack {
     |ORDER BY o_orderstatus
     |""".stripMargin.trim
 
+  // Exactly-once audit: a re-drain over the query's checkpoint must find
+  // nothing new and leave the replica's log version untouched.
+  private def streamCdcApplyAudit(s: SparkSession, dir: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    import graft.sources.dwrf.{DwrfLog, DwrfUtil}
+    val (srcDir, tgtDir, tgtTbl) = cdcApplyDirs(dir)
+    val (ckDir, _) = sinkDirs("stream-cdc-apply", dir)
+    val conf = DwrfUtil.sessionHadoopConf()
+    val vApplied = DwrfLog.latestVersion(new Path(tgtDir), conf)
+    s.sql(s"DROP TABLE IF EXISTS $tgtTbl")
+    s.sql(s"CREATE TABLE $tgtTbl USING dwrf LOCATION '$tgtDir' " +
+      "TBLPROPERTIES ('merge.mode'='merge-on-read')")
+    try {
+      cdcDrain(s, srcDir, tgtTbl, ckDir)
+      require(DwrfLog.latestVersion(new Path(tgtDir), conf) == vApplied,
+        "a re-drain over the same checkpoint must not re-apply anything")
+    } finally s.sql(s"DROP TABLE IF EXISTS $tgtTbl")
+  }
+
   // Incrementally maintained aggregate (DwrfAggMaintain): a per-custkey
   // rollup of a churning orders table kept current by FOLLOWING the
   // change feed — per micro-batch the feed nominates the affected keys,
   // those groups recompute from the current snapshot (file-pruned by
   // the key join), and one MERGE updates/inserts/deletes them. The
-  // gate stages append + copy-on-write UPDATE + row-level DELETE
-  // commits, REQUIREs the vanished-group DELETE branch provably fired
-  // (keys that existed pre-delete are gone from the maintained table),
-  // REQUIREs re-applying the full feed leaves the content bit-identical
-  // (idempotent-from-truth — an additive delta scheme would
-  // double-count here), and hash-checks the maintained table against
-  // DuckDB computing the final rollup directly.
+  // query stages append + copy-on-write UPDATE + row-level DELETE
+  // commits and hash-checks the maintained table against DuckDB
+  // computing the final rollup directly. The audit REQUIREs the
+  // vanished-group DELETE branch provably fired (keys that existed at
+  // v2 are gone from the maintained table) and that re-applying the
+  // full feed leaves the content bit-identical (idempotent-from-truth —
+  // an additive delta scheme would double-count here).
+  /** stream_agg_maintain's (source dir, target dir, source table,
+    * target table). */
+  private def aggMaintainDirs(dir: String): (String, String, String, String) = {
+    val tag = dirTag(dir)
+    (stagingRoot.resolve(s"agg-maintain-src-$tag").toString,
+      stagingRoot.resolve(s"agg-maintain-tgt-$tag").toString,
+      s"graft_aggm_src_$tag", s"graft_aggm_tgt_$tag")
+  }
+
+  private def aggMaintainAggs: Seq[String] =
+    Seq("COUNT(*) AS n_orders", s"${dsum("o_totalprice")} AS total_price")
+
   private def streamAggMaintain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.hadoop.fs.Path
-    import graft.sources.dwrf.{DwrfAggMaintain, DwrfChanges, DwrfLog, DwrfUtil}
-    val tag = dirTag(dir)
-    val srcDir = stagingRoot.resolve(s"agg-maintain-src-$tag").toString
-    val tgtDir = stagingRoot.resolve(s"agg-maintain-tgt-$tag").toString
-    val srcTbl = s"graft_aggm_src_$tag"
-    val tgtTbl = s"graft_aggm_tgt_$tag"
+    import graft.sources.dwrf.{DwrfAggMaintain, DwrfLog, DwrfUtil}
+    val (srcDir, tgtDir, srcTbl, tgtTbl) = aggMaintainDirs(dir)
     val conf = DwrfUtil.sessionHadoopConf()
     val fs = new Path(srcDir).getFileSystem(conf)
     s.sql(s"DROP TABLE IF EXISTS $srcTbl")
     s.sql(s"DROP TABLE IF EXISTS $tgtTbl")
     if (fs.exists(new Path(tgtDir))) fs.delete(new Path(tgtDir), true)
-    val aggs = Seq("COUNT(*) AS n_orders", s"${dsum("o_totalprice")} AS total_price")
+    val aggs = aggMaintainAggs
     // staged v0..v3 source cached across runs (deterministic, read-only
     // after staging) — same marker pattern as stageChunks/streamCdcApply
-    val srcMarker = stagingRoot.resolve(s"agg-maintain-src-$tag/_staged")
+    val srcMarker = java.nio.file.Paths.get(srcDir, "_staged")
     val srcKey = Staging.sourceKey(new java.io.File(s"$dir/orders.parquet"))
     val ph = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     try {
@@ -1338,11 +1373,6 @@ object StreamingQueries extends QueryPack {
       } }
       if (!restaged)
         s.sql(s"CREATE TABLE $srcTbl USING dwrf LOCATION '$srcDir'")
-      if (Gates.enabled) phased(ph, "gate_v2_holds") {
-        require(s.read.format("dwrf").option("versionAsOf", 2)
-          .load(srcDir).filter($"o_custkey" % 10 === 3).limit(1).count() == 1L,
-          "staging must hold soon-to-vanish groups at v2")
-      }
 
       s.sql(s"CREATE TABLE $tgtTbl (o_custkey BIGINT, n_orders BIGINT, " +
         s"total_price DOUBLE) USING dwrf LOCATION '$tgtDir'")
@@ -1364,28 +1394,6 @@ object StreamingQueries extends QueryPack {
       val q = DwrfAggMaintain.start(s, srcDir, srcTbl, tgtTbl,
         keys = Seq("o_custkey"), aggClauses = aggs, checkpoint = ckDir)
       phased(ph, "drain") { q.awaitTermination() }
-      if (Gates.enabled) {
-        phased(ph, "gate_vanished") {
-          require(s.table(tgtTbl).filter($"o_custkey" % 10 === 3).isEmpty,
-            "vanished groups must be DELETEd from the maintained aggregate")
-        }
-        // idempotent-from-truth: re-applying the ENTIRE feed must leave
-        // the content bit-identical (not merely row-count-stable)
-        val before = phased(ph, "gate_idem_read") {
-          s.sql(s"SELECT * FROM $tgtTbl ORDER BY o_custkey").collect().toSeq
-        }
-        phased(ph, "gate_idem_reapply") {
-          DwrfAggMaintain.applyBatch(
-            DwrfChanges.between(s, srcDir, 0L, 3L), srcTbl, tgtTbl,
-            Seq("o_custkey"), aggs)
-        }
-        val after = phased(ph, "gate_idem_read") {
-          s.sql(s"SELECT * FROM $tgtTbl ORDER BY o_custkey").collect().toSeq
-        }
-        require(before == after,
-          "re-applying the full feed must leave the maintained table " +
-            "bit-identical (idempotent-from-truth)")
-      }
       val rolled = s.sql(s"""
         |SELECT o_custkey, n_orders, total_price
         |FROM $tgtTbl ORDER BY o_custkey
@@ -1394,6 +1402,36 @@ object StreamingQueries extends QueryPack {
       lastAggMaintainPhases = ph.toMap
       s.createDataFrame(java.util.Arrays.asList(rows: _*), rolled.schema)
         .orderBy($"o_custkey")
+    } finally {
+      s.sql(s"DROP TABLE IF EXISTS $srcTbl")
+      s.sql(s"DROP TABLE IF EXISTS $tgtTbl")
+    }
+  }
+
+  private def streamAggMaintainAudit(s: SparkSession, dir: String): Unit = {
+    import s.implicits._
+    import graft.sources.dwrf.{DwrfAggMaintain, DwrfChanges}
+    val (srcDir, tgtDir, srcTbl, tgtTbl) = aggMaintainDirs(dir)
+    require(s.read.format("dwrf").option("versionAsOf", 2)
+      .load(srcDir).filter($"o_custkey" % 10 === 3).limit(1).count() == 1L,
+      "staging must hold soon-to-vanish groups at v2")
+    s.sql(s"DROP TABLE IF EXISTS $srcTbl")
+    s.sql(s"DROP TABLE IF EXISTS $tgtTbl")
+    s.sql(s"CREATE TABLE $srcTbl USING dwrf LOCATION '$srcDir'")
+    s.sql(s"CREATE TABLE $tgtTbl USING dwrf LOCATION '$tgtDir'")
+    try {
+      require(s.table(tgtTbl).filter($"o_custkey" % 10 === 3).isEmpty,
+        "vanished groups must be DELETEd from the maintained aggregate")
+      // idempotent-from-truth: re-applying the ENTIRE feed must leave
+      // the content bit-identical (not merely row-count-stable)
+      def content = s.sql(s"SELECT * FROM $tgtTbl ORDER BY o_custkey")
+        .collect().toSeq
+      val before = content
+      DwrfAggMaintain.applyBatch(DwrfChanges.between(s, srcDir, 0L, 3L),
+        srcTbl, tgtTbl, Seq("o_custkey"), aggMaintainAggs)
+      require(before == content,
+        "re-applying the full feed must leave the maintained table " +
+          "bit-identical (idempotent-from-truth)")
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $srcTbl")
       s.sql(s"DROP TABLE IF EXISTS $tgtTbl")
@@ -1422,7 +1460,9 @@ object StreamingQueries extends QueryPack {
     Q("stream_join_attrib", streamJoinAttrib, Some(streamJoinAttribOracle)),
     Q("stream_log_follow", streamLogFollow, Some(streamLogFollowOracle)),
     Q("stream_cdf_follow", streamCdfFollow, Some(streamCdfFollowOracle)),
-    Q("stream_cdc_apply", streamCdcApply, Some(streamCdcApplyOracle)),
-    Q("stream_agg_maintain", streamAggMaintain, Some(streamAggMaintainOracle)),
+    Q("stream_cdc_apply", streamCdcApply, Some(streamCdcApplyOracle),
+      streamCdcApplyAudit),
+    Q("stream_agg_maintain", streamAggMaintain, Some(streamAggMaintainOracle),
+      streamAggMaintainAudit),
   )
 }

@@ -30,13 +30,10 @@ class BenchCoverageSpec extends AnyFunSuite {
       "the exclusion list names a query that no longer exists")
   }
 
-  test("the artifact tag lists (gated constants, float arithmetic) name " +
-      "only real benched queries") {
+  test("the artifact tag lists name only real benched queries") {
     // a stale name here would silently stop excluding a policy row from
     // A/B geomeans (tools/bench_ab.py keys on these artifact fields)
-    for ((label, list) <- Seq("gated_constant_rows" -> Bench.gatedRows,
-        "arith_float_rows" -> Bench.floatRows,
-        "audit_gated_rows" -> Bench.auditGatedRows,
+    for ((label, list) <- Seq("arith_float_rows" -> Bench.floatRows,
         "cached_structure_rows" -> Bench.cachedStructureRows)) {
       val unknown = list.toSet -- SparkEntry.queries.keySet
       assert(unknown.isEmpty, s"$label names unknown queries: $unknown")
@@ -44,5 +41,17 @@ class BenchCoverageSpec extends AnyFunSuite {
       assert(unbenched.isEmpty, s"$label names unbenched queries: $unbenched")
       assert(list.distinct == list, s"$label has duplicates")
     }
+  }
+
+  test("row-count markers stick: an error or drift is never overwritten") {
+    def passes(ns: Long*): Long =
+      ns.foldLeft(Option.empty[Long])((prev, n) =>
+        Some(Bench.mergeRowCount(prev, n))).get
+    assert(passes(-2L, 7L, 7L) == -2L, "error then ok must stay an error")
+    assert(passes(7L, -2L, 7L) == -2L, "ok, error, ok must stay an error")
+    assert(passes(7L, 8L, 8L) == -1L, "drift then stable must stay drift")
+    assert(passes(7L, 8L, -2L) == -1L, "the first marker sticks")
+    assert(passes(7L, 7L, 7L) == 7L, "ok-ok keeps the row count")
+    assert(passes(0L, 0L) == 0L, "zero rows stay zero for the no-row guard")
   }
 }

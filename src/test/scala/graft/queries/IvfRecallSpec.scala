@@ -16,15 +16,18 @@ class IvfRecallSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
+  // the sf0.001 fixture tables (TESTDATA.md), checked in byte for byte
+  // next to the benchmark; tests run from the repository root
+  private val sf = "perfbench/tables/sf0.001"
+
   test("ivf nprobe=4/16 recovers >= 0.7 of the exact top-10") {
-    val row = SparkEntry.queries("ann_ivf_recall")(
-      spark, "/root/testdata/sf0.001").collect().head
-    // the measured recall rides the instrument side-channel since the
-    // emission went oracle-checked (geometry columns + floor bit)
+    val row = SparkEntry.queries("ann_ivf_recall")(spark, sf).collect().head
+    // the audit measures the recall (and requires its 0.5 floor); the
+    // measured value rides the instrument side-channel
+    SparkEntry.audits("ann_ivf_recall")(spark, sf)
     val recall = SimilarityQueries.lastInstrument
       .get("ann_ivf_recall")("recall")
     assert(row.getAs[Long]("n_exact") == 10L)
-    assert(row.getAs[Long]("recall_within_floor") == 1L)
     assert(recall >= 0.7, s"ivf recall degraded: $recall")
   }
 }

@@ -30,6 +30,8 @@ class PqIncrementalSpec extends AnyFunSuite {
     assert(r.getAs[Long]("encoded_delta_only") == 1L)
     assert(r.getAs[Long]("reapply_noop") == 1L)
     assert(r.getAs[Long]("recall_within_floor") == 1L)
+    // the maintained codes equal a one-pass re-encode (the audit)
+    SparkEntry.audits("ann_pq_incremental")(spark, sf)
     // dir-qualified key: race-free against PqDriftEscalationSpec's
     // parallel run on its own corpus
     val inst1 = SimilarityQueries.lastInstrument.get(s"ann_pq_incremental@$sf")

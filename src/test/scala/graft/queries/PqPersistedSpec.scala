@@ -24,7 +24,7 @@ class PqPersistedSpec extends AnyFunSuite {
     assert(recall >= 0.6, s"persisted-PQ recall floor broken: $recall")
     // identical deterministic training => identical recall to the
     // in-flight tier on the same corpus
-    SparkEntry.queries("ann_pq_recall")(spark, sf).collect()
+    SparkEntry.audits("ann_pq_recall")(spark, sf)
     val inflight = SimilarityQueries.lastInstrument
       .get("ann_pq_recall")("recall")
     assert(recall == inflight,

@@ -21,13 +21,13 @@ class PqRecallSpec extends AnyFunSuite {
   test("PQ ADC + re-rank keeps recall >= 0.6 at 32x compression") {
     val df = SparkEntry.queries("ann_pq_recall")(spark, sf)
     val row = df.collect().head
-    // measured recall rides the instrument side-channel since the
-    // emission went oracle-checked (geometry columns + floor bit)
+    // the audit measures the recall (and requires its 0.6 floor); the
+    // measured value rides the instrument side-channel
+    SparkEntry.audits("ann_pq_recall")(spark, sf)
     val recall = SimilarityQueries.lastInstrument
       .get("ann_pq_recall")("recall")
     val comp = row.getAs[Long]("compression_x")
     assert(comp === 32L, s"8 subspaces over 64 floats must compress 32x, got $comp")
-    assert(row.getAs[Long]("recall_within_floor") == 1L)
     assert(recall >= 0.6, s"PQ recall floor broken: $recall")
   }
 

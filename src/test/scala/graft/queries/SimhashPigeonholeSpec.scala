@@ -42,6 +42,8 @@ class SimhashPigeonholeSpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"pigeonhole violated: ${missing.size} of ${low.size} pairs at " +
         s"hamming <= 7 missing from dedup_simhash, e.g. ${missing.take(5)}")
+    // the query's audit runs the same check on every Verify run
+    SparkEntry.audits("dedup_simhash")(spark, sf)
   }
 
   test("pairs at exactly hamming 8 miss only with 8 distinct differing bytes") {

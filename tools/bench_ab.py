@@ -4,8 +4,9 @@
 Usage: bench_ab.py <baseline.json> <head.json> [threshold]
 
 Prints per-query median ratios head/baseline sorted descending, the
-geomean over common queries, and flags queries outside the threshold
-(default 1.5x either way). Exit 0 always — this is a report, the
+geomean over common queries (rows whose arithmetic policy differs
+between the two artifacts, `arith_float_rows`, are reported separately),
+and flags queries outside the threshold (default 1.5x either way). Exit 0 always — this is a report, the
 judgement lives in the round notes.
 """
 import json
@@ -38,29 +39,29 @@ def main():
         sys.exit(f"no comparable queries: common={len(common)} "
                  f"only_base={only_base[:5]} only_head={only_head[:5]}")
     # Rows whose benched work differs by POLICY between the two artifacts
-    # are excluded from the headline geomean (reported separately): gated
-    # metrology rows emit spec-proven constants with gates off, and
+    # are excluded from the headline geomean (reported separately):
     # arith_float_rows run the production float kernels instead of the
     # exact-decimal tier — a ratio ACROSS the policy boundary measures
-    # the policy, not a code speedup (ADVICE r13). Exclusion is the
-    # SYMMETRIC DIFFERENCE of the two artifacts' tag lists: a pre-tag
-    # artifact (empty lists) vs a tagged one excludes the tagged rows,
+    # the policy, not a code speedup. Rows whose checks moved
+    # into per-query audits are NOT excluded: graft.Bench never timed
+    # those checks, so their rows time the same work on both sides and
+    # their ratios are real. Exclusion is the SYMMETRIC DIFFERENCE of
+    # the two artifacts' lists: a pre-tag artifact (empty list) vs a
+    # tagged one excludes the tagged rows,
     # while two same-policy artifacts exclude nothing — those ratios are
     # genuine code measurements and must keep moving the headline.
     #
     # Known conservative bias (r14 review): a pre-tag-SCHEMA artifact is
     # indistinguishable from a pre-POLICY one, so comparing against an
     # older artifact whose Bench did not emit the field excludes rows
-    # even when both runs actually shared the policy (e.g. gates were
-    # already off on both sides) — genuine code wins on those rows then
+    # even when both runs actually shared the policy (e.g. float
+    # arithmetic on both sides) — genuine code wins on those rows then
     # stop moving the headline. The bias UNDERSTATES improvements (the
     # excluded-rows geomean is still printed separately); preferring a
     # false exclusion over accidentally selling a policy change as a
     # code speedup is deliberate.
-    excluded = set()
-    for key in ("gated_constant_rows", "arith_float_rows",
-                "audit_gated_rows"):
-        excluded |= set(bmeta.get(key) or []) ^ set(hmeta.get(key) or [])
+    excluded = (set(bmeta.get("arith_float_rows") or [])
+                ^ set(hmeta.get("arith_float_rows") or []))
     excl_ratios = {q: r for q, r in ratios.items() if q in excluded}
     ratios = {q: r for q, r in ratios.items() if q not in excluded}
     if not ratios:
