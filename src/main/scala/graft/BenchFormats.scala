@@ -93,7 +93,7 @@ object BenchFormats {
 
     val li = Tables.load(spark, sfDir, "lineitem").cache()
     li.count() // materialize, so writes time the format not the source scan
-    val base = "/root/repo/target/fmt-bench"
+    val base = graft.queries.Staging.root.resolve("fmt-bench").toString
 
     def writeTo(fmt: String, path: String, opts: Map[String, String]): Double = {
       val (t, _) = time {
@@ -171,7 +171,7 @@ object BenchFormats {
 
     val copies = 16
     val stripeBytes = 64L * 1024 * 1024
-    val base = "/root/repo/target/fmt-bench"
+    val base = graft.queries.Staging.root.resolve("fmt-bench").toString
     val path = s"$base/scale-dwrf"
 
     val li = Tables.load(spark, sfDir, "lineitem")

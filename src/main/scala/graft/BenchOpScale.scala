@@ -134,18 +134,11 @@ object BenchOpScale {
     val onlySections = sys.env.get("SPARK_GRAFT_OPSCALE_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     def sec(name: String): Boolean = onlySections.forall(_.contains(name))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession.build()
 
     // materialize the scaled corpus as a plain parquet dir shaped like a
     // fixture dir, so the queries run UNMODIFIED via Tables.load
-    val scaledDir = "/root/repo/target/opscale"
+    val scaledDir = graft.queries.Staging.root.resolve("opscale").toString
     val needCorpus = sec("skew") || sec("ops") || sec("kll")
     val (tBuild, _) = time {
       if (needCorpus)

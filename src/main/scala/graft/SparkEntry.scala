@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Query registry — the contract is in SURVEY.md §7.
   *
   * Queries are assembled from packs; each pack covers one slice of the
   * SURVEY §2 inventory (core analytics, DWRF format round-trips, dedup,

@@ -12,7 +12,8 @@ import graft.Tables
 object FormatQueries extends QueryPack {
 
   private def ioDir(table: String, dir: String): String =
-    s"/root/repo/target/dwrf-io/$table-${Integer.toHexString(dir.hashCode)}"
+    Staging.root.resolve("dwrf-io")
+      .resolve(s"$table-${Integer.toHexString(dir.hashCode)}").toString
 
   /** Memoized fixture staging via [[Staging.once]]: a staged layout that
     * is a pure function of (source table, writer code) writes once per

@@ -69,13 +69,16 @@ object Staging {
 
   /** Shared staging root for derived on-disk fixtures. Relative to the
     * working directory by default so the queries run from any checkout;
-    * overridable for split-machine setups.
+    * overridable for split-machine setups. Always absolute: a relative
+    * path would resolve against the warehouse directory when it becomes
+    * a catalog table's LOCATION.
     */
   def root: java.nio.file.Path = {
     val p = sys.props.get("graft.staging.root")
       .orElse(sys.env.get("SPARK_GRAFT_STAGING_DIR"))
       .map(java.nio.file.Paths.get(_))
       .getOrElse(java.nio.file.Paths.get("target", "staging"))
+      .toAbsolutePath
     java.nio.file.Files.createDirectories(p)
     p
   }

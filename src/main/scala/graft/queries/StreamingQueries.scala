@@ -24,21 +24,13 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingQueries extends QueryPack {
 
-  /** Staging root for source symlinks, checkpoints, and sinks. Derived
-    * from the JVM tmpdir (not the repo checkout) so the queries run from
-    * any working directory; overridable for tests via the
-    * `graft.streaming.staging` system property.
+  /** Staging root for source symlinks, checkpoints, and sinks: a
+    * directory under [[Staging.root]], so one `graft.staging.root`
+    * setting moves every staged layout of a run, and two checkouts never
+    * share checkpoints.
     */
   private def stagingRoot: java.nio.file.Path = {
-    val base = sys.props.get("graft.streaming.staging")
-      .map(java.nio.file.Paths.get(_))
-      .getOrElse {
-        // user-scoped default: a world-shared /tmp/graft-streaming would
-        // hit permission failures when a second user owns it first
-        val who = sys.props.getOrElse("user.name", "anon")
-        java.nio.file.Paths.get(
-          sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-streaming-$who")
-      }
+    val base = Staging.root.resolve("streaming")
     java.nio.file.Files.createDirectories(base)
     base
   }

@@ -77,6 +77,10 @@ abstract class VectorDecoder(val columnId: Int) {
   final def putOne(v: OnHeapColumnVector, i: Int): Unit =
     if (present == null || present.next()) put(v, i) else v.putNull(i)
 
+  /** The lazy dictionary `prepare` attached to this batch's output
+    * vector (null when values were materialized). */
+  def attachedDictionary: ByteArrayDictionary = null
+
   /** Batch hook for decoders that can attach a lazy dictionary to the
     * OUTPUT vector (`fill` roots only — nested children decode through
     * `putOne` and keep the materializing path). */
@@ -169,6 +173,79 @@ private[dwrf] object VectorUtil {
         while (j < s.fields.length) {
           reserveRows(v.getChild(j).asInstanceOf[OnHeapColumnVector], cap)
           j += 1
+        }
+      case _ => ()
+    }
+  }
+
+  // value layouts of a vector row, for compact
+  private final val MBool = 0
+  private final val MByte = 1
+  private final val MShort = 2
+  private final val MInt = 3
+  private final val MLong = 4
+  private final val MFloat = 5
+  private final val MDouble = 6
+  /** Offset and length into child data: strings, binary, arrays, maps. */
+  private final val MArray = 7
+  /** No value of its own: struct rows live in the children. */
+  private final val MNone = 8
+
+  private def layout(dt: DataType): Int = dt match {
+    case BooleanType => MBool
+    case ByteType => MByte
+    case ShortType => MShort
+    case IntegerType | DateType => MInt
+    case d: DecimalType
+        if d.precision <= org.apache.spark.sql.types.Decimal.MAX_INT_DIGITS => MInt
+    case FloatType => MFloat
+    case DoubleType => MDouble
+    case StringType | BinaryType | _: ArrayType | _: MapType => MArray
+    case _: StructType => MNone
+    case _ => MLong // long, timestamps, decimals up to 18 digits
+  }
+
+  /** Moves rows `sel(0 until k)` (strictly ascending) to slots [0, k) of
+    * `v`, in place: a filtered batch stays in the decoder's own vectors.
+    * Only row-level state moves — nulls, values, dictionary ids, and the
+    * offset/length of variable-width rows (their bytes and elements stay
+    * where they are) — and struct children move with their parent. A
+    * moved-over null leaves `numNulls` an overcount, which keeps
+    * `hasNull` conservative; readers test `isNullAt`.
+    */
+  def compact(v: OnHeapColumnVector, sel: Array[Int], k: Int): Unit = {
+    val dt = v.dataType
+    val nulls = v.hasNull
+    val ids = if (v.hasDictionary) v.getDictionaryIds else null
+    val m = if (ids != null) MNone else layout(dt)
+    var j = 0
+    while (j < k && sel(j) == j) j += 1 // rows already in place
+    while (j < k) {
+      val s = sel(j)
+      if (nulls && v.isNullAt(s)) v.putNull(j)
+      else {
+        if (nulls) v.putNotNull(j)
+        if (ids != null) ids.putInt(j, ids.getInt(s))
+        (m: @scala.annotation.switch) match {
+          case MBool => v.putBoolean(j, v.getBoolean(s))
+          case MByte => v.putByte(j, v.getByte(s))
+          case MShort => v.putShort(j, v.getShort(s))
+          case MInt => v.putInt(j, v.getInt(s))
+          case MLong => v.putLong(j, v.getLong(s))
+          case MFloat => v.putFloat(j, v.getFloat(s))
+          case MDouble => v.putDouble(j, v.getDouble(s))
+          case MArray => v.putArray(j, v.getArrayOffset(s), v.getArrayLength(s))
+          case _ => ()
+        }
+      }
+      j += 1
+    }
+    dt match {
+      case st: StructType =>
+        var c = 0
+        while (c < st.length) {
+          compact(v.getChild(c).asInstanceOf[OnHeapColumnVector], sel, k)
+          c += 1
         }
       case _ => ()
     }
@@ -665,6 +742,7 @@ final class DoubleVectorDecoder(c: Int) extends VectorDecoder(c) {
 final class ByteArrayDictionary(column: Int, main: Array[Array[Byte]],
     stride: Array[Array[Byte]])
     extends org.apache.spark.sql.execution.vectorized.Dictionary {
+  def size: Int = main.length + stride.length
   override def decodeToBinary(id: Int): Array[Byte] =
     if (id >= 0 && id < main.length) main(id)
     else if (id >= main.length && id - main.length < stride.length)
@@ -737,6 +815,9 @@ final class StringVectorDecoder(c: Int) extends VectorDecoder(c) {
         .map(new RunLengthIntegerReader(_, signed = false, src.useVInts)).orNull
     }
   }
+
+  override def attachedDictionary: ByteArrayDictionary =
+    if (idsOut != null) sparkDict else null
 
   /** Attach (or detach — encodings can flip between stripes) the lazy
     * dictionary on the output vector once per batch. */
@@ -947,12 +1028,20 @@ final class TimestampVectorDecoder(c: Int) extends VectorDecoder(c) {
 
 /** PartitionReader producing ColumnarBatches over the partition's stripes.
   *
-  * Pushed filters drive the SAME stripe- and stride-level stats skipping
+  * Pushed `filters` drive the SAME stripe- and stride-level stats skipping
   * as the row path (reference intent: RecordReaderImpl.java:281-430 lazy
   * materialization): surviving strides are grouped into contiguous runs,
   * decoders seek once per run, and batches are emitted run-local so a
-  * skipped stride is never decoded. Spark re-evaluates the filters above
-  * the scan, so skipping is pure I/O+decode savings — exactness is free.
+  * skipped stride is never decoded.
+  *
+  * `exact` filters (those [[ExactFilter.owned]] accepts, which Spark no
+  * longer re-evaluates) are then decided per batch by the vectorized
+  * evaluator: a batch whose every row matches passes through as is, one
+  * with no match is never emitted, and the rest are compacted in place
+  * ([[VectorUtil.compact]]) to hold only the matching rows — Spark always
+  * sees the decoders' own `OnHeapColumnVector`s.
+  * `readSchema` may end with predicate-only columns: decoded for the
+  * filter, they stay out of the first `outputWidth` output columns.
   */
 final class DwrfColumnarPartitionReader(
     reader: DwrfFileReader,
@@ -960,12 +1049,16 @@ final class DwrfColumnarPartitionReader(
     readSchema: StructType,
     filters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
     batchSize: Int = 4096,
-    partValues: Map[String, Any] = Map.empty)
+    partValues: Map[String, Any] = Map.empty,
+    exact: Seq[org.apache.spark.sql.sources.Filter] = Nil,
+    outputWidth: Int = -1)
     extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
 
   private val vectors: Array[OnHeapColumnVector] =
     OnHeapColumnVector.allocateColumns(batchSize, readSchema)
-  private val batch = new ColumnarBatch(vectors.toArray[org.apache.spark.sql.vectorized.ColumnVector])
+  private val width = if (outputWidth < 0) vectors.length else outputWidth
+  private val batch = new ColumnarBatch(
+    vectors.take(width).toArray[org.apache.spark.sql.vectorized.ColumnVector])
 
   private val idByName = {
     val ids = ColumnTree.topLevelIds(reader.schema)
@@ -979,6 +1072,23 @@ final class DwrfColumnarPartitionReader(
       case None => new NullVectorDecoder // schema evolution: all-null
     }
   }
+
+  /** The exact filters bound to this file; null when every row passes. */
+  private val predicate: ExactFilter.Pred =
+    ExactFilter.compile(exact, readSchema(_).dataType, { name =>
+      val i = readSchema.fieldIndex(name)
+      if (partValues.contains(name)) ExactFilter.Constant(partValues(name))
+      else if (decoders(i).isInstanceOf[NullVectorDecoder]) ExactFilter.Constant(null)
+      else ExactFilter.Slot(i, readSchema(i).dataType)
+    })
+  /** The filters are false or NULL for the whole file: nothing to decode. */
+  private val refuted = predicate.isInstanceOf[ExactFilter.Const]
+  private val predicateIn = new ExactFilter.BatchIn(
+    vectors.toArray[org.apache.spark.sql.vectorized.ColumnVector],
+    new Array[ByteArrayDictionary](vectors.length))
+  private val results = new Array[Byte](batchSize)
+  private val selected = new Array[Int](batchSize)
+
   private val wanted: Array[Boolean] = {
     val inc = new Array[Boolean](ColumnTree.columnCount(reader.schema))
     readSchema.fields.foreach { f =>
@@ -1069,27 +1179,53 @@ final class DwrfColumnarPartitionReader(
     // thread (SPJ) attribute their own nanos, never each other's
     val d0 = prof.decompressNanos
     try {
-      while (remainingInSegment == 0) {
-        if (segments.hasNext) {
-          val seg = segments.next()
-          seg.entries.foreach(e => decoders.foreach(_.seekStride(e)))
-          remainingInSegment = seg.rows
-        } else if (!advanceStripe()) return false
+      if (refuted) return false
+      while (true) {
+        while (remainingInSegment == 0) {
+          if (segments.hasNext) {
+            val seg = segments.next()
+            seg.entries.foreach(e => decoders.foreach(_.seekStride(e)))
+            remainingInSegment = seg.rows
+          } else if (!advanceStripe()) return false
+        }
+        val n = math.min(batchSize.toLong, remainingInSegment).toInt
+        var i = 0
+        while (i < vectors.length) {
+          vectors(i).reset()
+          decoders(i).fill(vectors(i), n)
+          i += 1
+        }
+        remainingInSegment -= n
+        reader.counters.rowsDecoded += n
+        val kept = if (predicate == null) n else filterBatch(n)
+        if (kept > 0) {
+          batch.setNumRows(kept)
+          reader.counters.batchesEmitted += 1
+          return true
+        }
       }
-      val n = math.min(batchSize.toLong, remainingInSegment).toInt
-      var i = 0
-      while (i < vectors.length) {
-        vectors(i).reset()
-        decoders(i).fill(vectors(i), n)
-        i += 1
-      }
-      batch.setNumRows(n)
-      remainingInSegment -= n
-      reader.counters.batchesEmitted += 1
-      true
+      false
     } finally {
       reader.counters.decompressNanosAcc += prof.decompressNanos - d0
     }
+  }
+
+  /** Evaluates the exact filters over the decoded batch of `n` rows and
+    * compacts the output columns to the rows that match; returns how
+    * many. */
+  private def filterBatch(n: Int): Int = {
+    var i = 0
+    while (i < decoders.length) {
+      predicateIn.dicts(i) = decoders(i).attachedDictionary
+      i += 1
+    }
+    predicate.evalBatch(predicateIn, n, results)
+    val k = ExactFilter.select(results, n, selected)
+    if (k > 0 && k < n) {
+      i = 0
+      while (i < width) { VectorUtil.compact(vectors(i), selected, k); i += 1 }
+    }
+    k
   }
 
   override def get(): ColumnarBatch = batch
@@ -1098,7 +1234,7 @@ final class DwrfColumnarPartitionReader(
     DwrfMetrics.taskValues(reader.counters)
 
   override def close(): Unit = {
-    batch.close()
+    vectors.foreach(_.close())
     reader.close()
   }
 }

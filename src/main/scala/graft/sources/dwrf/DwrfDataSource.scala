@@ -662,7 +662,7 @@ final class DwrfTable(tableSchema: StructType, properties: Map[String, String],
   // properties, snapshot-log tables only)
   override def canDeleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    filters.forall(f => DwrfDelete.supportedExact(f, tableSchema))
+    filters.forall(f => ExactFilter.owned(f, tableSchema))
 
   override def deleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
@@ -694,6 +694,9 @@ final class DwrfScanBuilder(tableSchema: StructType, path: String,
 
   private var readSchema: StructType = tableSchema
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
+  /** The pushed filters the reader evaluates exactly ([[ExactFilter]]);
+    * Spark plans no `Filter` for them. */
+  private var owned: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   private var pushedAgg: Option[org.apache.spark.sql.connector.expressions.aggregate.Aggregation] = None
 
   // ------------------------------------------- aggregate pushdown (P6)
@@ -702,8 +705,9 @@ final class DwrfScanBuilder(tableSchema: StructType, path: String,
   // page is ever read. At 100 TB this turns "how many rows / what's the
   // key range" from a cluster job into a metadata listing. Spark only
   // attempts the pushdown when no Filter sits between the Aggregate and
-  // the relation (we re-evaluate all filters post-scan, so filtered
-  // aggregates keep the normal path), and we accept only ungrouped
+  // the relation, which is also the case when the reader owns every
+  // filter — so filtered aggregates are refused here and keep the
+  // normal path — and we accept only ungrouped
   // queries whose every column is stats-covered in EVERY file —
   // schema-evolved or partition-column references fall back to the
   // normal distributed plan.
@@ -875,7 +879,7 @@ final class DwrfScanBuilder(tableSchema: StructType, path: String,
       // "how many rows" keeps its zero-I/O answer even mid-MoR-churn.
       (aggTails.forall(_.dvMasked == 0L) ||
         agg.aggregateExpressions().forall(_.isInstanceOf[CountStar])) &&
-      pushed.isEmpty &&
+      pushed.isEmpty && owned.isEmpty &&
       agg.groupByExpressions().forall(e =>
         topColumn(e).exists(groupableEverywhere)) &&
       agg.aggregateExpressions().nonEmpty &&
@@ -998,17 +1002,26 @@ final class DwrfScanBuilder(tableSchema: StructType, path: String,
     })
   }
 
-  /** We use filters for stats-based stripe/stride SKIPPING only, so all of
-    * them are returned for Spark to re-evaluate (pushed ones show in
-    * explain as PushedFilters).
+  /** Filters the stats can refute drive stripe/stride SKIPPING
+    * (`PushedFilters` in explain). Filters the reader evaluates exactly
+    * ([[ExactFilter.owned]]) are claimed: the reader returns only their
+    * matching rows, so Spark plans no `Filter` for them (`ReaderFilters`
+    * in explain). Every other filter is returned for Spark to evaluate.
+    * A copy-on-write replace scan claims nothing: it must stream every
+    * row of a file it rewrites (`replacedFilesOut` is set before Spark
+    * pushes filters).
     */
   override def pushFilters(
       filters: Array[org.apache.spark.sql.sources.Filter]): Array[org.apache.spark.sql.sources.Filter] = {
     pushed = filters.filter(StatsFilter.supported(_, tableSchema))
-    filters
+    owned =
+      if (replacedFilesOut != null) Array.empty
+      else filters.filter(ExactFilter.owned(_, tableSchema))
+    filters.filterNot(owned.contains)
   }
 
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
+  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
+    (pushed ++ owned).distinct
 
   // set by DwrfRowLevelOperation before Spark builds the scan: flips the
   // scan into copy-on-write mode (file-granularity filtering + planned-
@@ -1022,7 +1035,8 @@ final class DwrfScanBuilder(tableSchema: StructType, path: String,
         replacedFilesOut)
     else pushedAgg match {
       case Some(agg) => aggScan(agg)
-      case None => new DwrfScan(tableSchema, readSchema, path, pushed, options)
+      case None => new DwrfScan(tableSchema, readSchema, path, pushed, options,
+        owned = owned)
     }
 }
 
@@ -1075,11 +1089,20 @@ final class DwrfScan(tableSchema: StructType, readSchema: StructType, path: Stri
     // silently drop the copied (non-matching) rows of rewritten files —
     // and every planning pass records the exact file set here; the
     // replace commit deletes precisely these files
-    replacedFilesOut: java.util.concurrent.atomic.AtomicReference[ReplacedSet] = null)
+    replacedFilesOut: java.util.concurrent.atomic.AtomicReference[ReplacedSet] = null,
+    // filters the readers evaluate exactly: Spark does not re-evaluate them
+    owned: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering with SupportsReportPartitioning {
 
   override def readSchema(): StructType = readSchema
+
+  /** What the readers decode: `readSchema`, then the columns only the
+    * owned filters reference (Spark pruned those from `readSchema` once
+    * it dropped its own Filter). */
+  private val decodeSchema: StructType = StructType(readSchema.fields ++
+    ExactFilter.columns(owned).filterNot(readSchema.fieldNames.contains)
+      .map(tableSchema(_)))
   override def toBatch: Batch = {
     if (DwrfChanges.requested(options)) throw new IllegalArgumentException(
       s"dwrf: ${DwrfChanges.ReadChangeFeedKey} is a STREAMING read option " +
@@ -1260,7 +1283,7 @@ final class DwrfScan(tableSchema: StructType, readSchema: StructType, path: Stri
         // narrower on-disk type? (drives the columnar-vs-row choice;
         // renamed columns resolve at the file's own generation's name)
         val fileFieldByName = r.schema.fields.map(f => f.name -> f).toMap
-        val widened = readSchema.fields.exists { f =>
+        val widened = decodeSchema.fields.exists { f =>
           ColumnAliases.resolve(f, fileFieldByName).exists(_.dataType != f.dataType)
         }
         // partition values surface as min=max stats: the regular pruner
@@ -1447,7 +1470,7 @@ final class DwrfScan(tableSchema: StructType, readSchema: StructType, path: Stri
     // supportColumnarReads must be uniform across partitions (Spark
     // rejects mixed scans), so ONE widened file sends the whole scan down
     // the row path — the rare evolution case pays, the common case doesn't
-    new DwrfPartitionReaderFactory(readSchema.json,
+    new DwrfPartitionReaderFactory(decodeSchema.json,
       // copy-on-write: no reader-level (stripe/stride) row skipping —
       // surviving files must stream back EVERY row for the rewrite.
       // Same for `_pos` provenance reads: a skipped stride would
@@ -1465,14 +1488,17 @@ final class DwrfScan(tableSchema: StructType, readSchema: StructType, path: Stri
       fileMetaRequested =
         readSchema.fieldNames.contains(DwrfUtil.FileMetaColumn) &&
           !tableSchema.fieldNames.contains(DwrfUtil.FileMetaColumn),
-      posMetaRequested = posMetaRequested)
+      posMetaRequested = posMetaRequested,
+      exact = owned,
+      outputWidth = readSchema.length)
 
   private def posMetaRequested: Boolean =
     readSchema.fieldNames.contains(DwrfUtil.PosMetaColumn) &&
       !tableSchema.fieldNames.contains(DwrfUtil.PosMetaColumn)
 
   override def description(): String =
-    s"dwrf scan of $path, PushedFilters: [${pushed.mkString(", ")}]"
+    s"dwrf scan of $path, PushedFilters: [${pushed.mkString(", ")}]" +
+      (if (owned.isEmpty) "" else s", ReaderFilters: [${owned.mkString(", ")}]")
 
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     DwrfMetrics.all
@@ -1536,12 +1562,19 @@ final case class DwrfCdfDeltaPartition(path: String, offset: Long,
   override def dvPath: Option[String] = None
 }
 
+/** Readers over `readSchemaJson`'s columns. `pushed` filters drive
+  * stats skipping; `exact` filters are evaluated exactly and only their
+  * matching rows are returned. When `outputWidth` is set, the schema's
+  * columns past it are decoded for `exact` only and never output.
+  */
 final class DwrfPartitionReaderFactory(readSchemaJson: String,
     pushed: Array[org.apache.spark.sql.sources.Filter],
     hadoopConf: SerializableHadoopConf,
     rowFallback: Boolean = false,
     fileMetaRequested: Boolean = false,
-    posMetaRequested: Boolean = false)
+    posMetaRequested: Boolean = false,
+    exact: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
+    outputWidth: Int = -1)
     extends PartitionReaderFactory {
 
   @transient private lazy val parsedSchema =
@@ -1550,8 +1583,8 @@ final class DwrfPartitionReaderFactory(readSchemaJson: String,
   /** Every projection takes the vectorized path — all types, nested
     * included — WITH or without pushed filters: the columnar reader
     * applies the same stripe/stride stats skipping as the row path,
-    * seeking decoders to surviving stride runs. Exception: a scan over
-    * files needing type-widening upcasts reads rows (`rowFallback`).
+    * seeking decoders to surviving stride runs, and the same exact
+    * filters. Exception: the scans `rowFallback` names read rows.
     */
   override def supportColumnarReads(partition: InputPartition): Boolean =
     !rowFallback && ColumnarSupport.supported(parsedSchema)
@@ -1577,7 +1610,8 @@ final class DwrfPartitionReaderFactory(readSchemaJson: String,
     val reader = new DwrfFileReader(new Path(p.path), hadoopConf.value)
     new DwrfColumnarPartitionReader(reader,
       reader.stripesInRange(p.offset, p.length), parsedSchema, pushed.toSeq,
-      partValues = partValuesOf(p))
+      partValues = partValuesOf(p), exact = exact.toSeq,
+      outputWidth = outputWidth)
   }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -1596,11 +1630,11 @@ final class DwrfPartitionReaderFactory(readSchemaJson: String,
     val posHolder = new Array[Long](1)
     // delete-vector masking: positions are file-global over PHYSICAL
     // rows, so the reader must surface every row of the stripe group in
-    // order (no stride/stripe skipping — drop the pushed filters; Spark
-    // re-evaluates everything above the scan, pruning was only an I/O
-    // saving) and the mask walks alongside a running position starting
-    // at the rows preceding this group. `_pos` provenance reads use the
-    // same counted walk (the scan already dropped the filters).
+    // order (no stride/stripe skipping — drop the pushed filters, which
+    // were only an I/O saving; the exact filters still apply to each
+    // surfaced row below) and the mask walks alongside a running position
+    // starting at the rows preceding this group. `_pos` provenance reads
+    // use the same counted walk (the scan already dropped the filters).
     def rowBase: Long = reader.footer.stripes
       .filter(_.offset < p.offset).map(_.numRows).sum
     val inner: Iterator[InternalRow] = p match {
@@ -1653,21 +1687,39 @@ final class DwrfPartitionReaderFactory(readSchemaJson: String,
           }
       }
     }
+    // the exact filters, on the data row: partition columns are per-file
+    // constants, and a column the file lacks reads NULL from the row
+    val predicate = ExactFilter.compile(exact.toSeq, parsedSchema(_).dataType, { name =>
+      if (partVals.contains(name)) ExactFilter.Constant(partVals(name))
+      else ExactFilter.Slot(dataSchema.fieldIndex(name), dataSchema(name).dataType)
+    })
+    val filtered: Iterator[InternalRow] = predicate match {
+      case null => inner.map { r => reader.counters.rowsDecoded += 1; r }
+      case _: ExactFilter.Const => Iterator.empty // false or NULL for the whole file
+      case pred => inner.filter { r =>
+        reader.counters.rowsDecoded += 1
+        pred.evalRow(r) == ExactFilter.T
+      }
+    }
+    // columns past outputWidth were decoded for the filters only
+    val outFields = parsedSchema.fields.take(
+      if (outputWidth < 0) parsedSchema.length else outputWidth)
     val it: Iterator[InternalRow] =
-      if (partVals.isEmpty && !posMetaRequested) inner
+      if (partVals.isEmpty && !posMetaRequested &&
+          outFields.length == parsedSchema.length) filtered
       else {
         val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          parsedSchema.length)
+          outFields.length)
         // ordinal plan: data column source index, -1 = constant,
         // -2 = the per-row `_pos` value
-        val srcIdx = parsedSchema.fields.map(f =>
+        val srcIdx = outFields.map(f =>
           if (posMetaRequested && f.name == DwrfUtil.PosMetaColumn) -2
           else if (partVals.contains(f.name)) -1
           else dataSchema.fieldIndex(f.name))
-        parsedSchema.fields.zipWithIndex.foreach { case (f, i) =>
+        outFields.zipWithIndex.foreach { case (f, i) =>
           if (srcIdx(i) == -1) out.update(i, partVals(f.name))
         }
-        inner.map { r =>
+        filtered.map { r =>
           var i = 0
           while (i < srcIdx.length) {
             if (srcIdx(i) >= 0)

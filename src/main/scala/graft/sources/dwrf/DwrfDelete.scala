@@ -5,7 +5,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** `DELETE FROM <dwrf table> WHERE ...` — stats-pruned copy-on-write.
   *
@@ -39,10 +38,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * TRUE). A column the table gained after a file was written (schema
   * evolution) reads as all-NULL in that file: IS NULL matches, value
   * predicates don't — identical to what a scan of the evolved table
-  * answers. [[supportedExact]] gates `canDeleteWhere`: anything this
+  * answers. [[ExactFilter.owned]] gates `canDeleteWhere`: anything the
   * evaluator cannot decide EXACTLY (unsupported node, non-atomic
-  * column, NaN, inconvertible value) refuses up front and Spark reports
-  * the delete unsupported instead of silently mis-applying it.
+  * column, inconvertible value) refuses up front and Spark reports the
+  * delete unsupported instead of silently mis-applying it.
   */
 object DwrfDelete {
   private[dwrf] val ManifestKey = "delete.inputs"
@@ -50,250 +49,37 @@ object DwrfDelete {
   final case class Result(filesKept: Int, filesDeleted: Int,
       filesRewritten: Int, rowsDeleted: Long)
 
-  // ---------------------------------------------------------- gating
-
-  /** Can [[deleteWhere]] apply this filter EXACTLY? (drives
-    * `canDeleteWhere`; `schema` is the full table schema, partition
-    * columns included.)
-    */
-  def supportedExact(f: Filter, schema: StructType): Boolean = f match {
-    case And(l, r) => supportedExact(l, schema) && supportedExact(r, schema)
-    case Or(l, r) => supportedExact(l, schema) && supportedExact(r, schema)
-    case Not(g) => supportedExact(g, schema)
-    case _: AlwaysTrue => true
-    case _: AlwaysFalse => true
-    case IsNull(a) => topLevelAtomic(a, schema)
-    case IsNotNull(a) => topLevelAtomic(a, schema)
-    case EqualTo(a, v) => convertible(a, v, schema)
-    case EqualNullSafe(a, v) =>
-      topLevelAtomic(a, schema) && (v == null || convertible(a, v, schema))
-    case GreaterThan(a, v) => convertible(a, v, schema)
-    case GreaterThanOrEqual(a, v) => convertible(a, v, schema)
-    case LessThan(a, v) => convertible(a, v, schema)
-    case LessThanOrEqual(a, v) => convertible(a, v, schema)
-    case In(a, vs) =>
-      topLevelAtomic(a, schema) && vs.forall(v =>
-        v == null || convertible(a, v, schema))
-    case _ => false
-  }
-
-  /** Top-level column of an atomic type the row evaluator understands.
-    * Dotted struct paths are refused: row-level rewrite reads whole rows
-    * and nested semantics (null structs) add cases the fast paths can't
-    * check — conservative refusal keeps `canDeleteWhere` honest.
-    */
-  private def topLevelAtomic(attr: String, schema: StructType): Boolean =
-    schema.fields.find(_.name == attr).exists { f =>
-      f.dataType match {
-        case ByteType | ShortType | IntegerType | LongType | FloatType |
-             DoubleType | StringType | BooleanType | TimestampType |
-             DateType => true
-        case d: DecimalType if d.precision <= 18 => true
-        case _ => false
-      }
-    }
-
-  private def convertible(attr: String, v: Any, schema: StructType): Boolean =
-    v != null && topLevelAtomic(attr, schema) &&
-      schema.fields.find(_.name == attr).exists { f =>
-        f.dataType match {
-          case ByteType | ShortType | IntegerType | LongType =>
-            v.isInstanceOf[Number]
-          case FloatType | DoubleType => v match {
-            case n: Number => !n.doubleValue().isNaN // NaN ordering differs
-            case _ => false
-          }
-          case StringType => v.isInstanceOf[String] || v.isInstanceOf[UTF8String]
-          case BooleanType => v.isInstanceOf[Boolean]
-          case _: DecimalType => toBigDecimal(v).isDefined
-          case TimestampType => StatsFilter.toMicros(v).isDefined
-          case DateType => StatsFilter.toDays(v).isDefined
-          case _ => false
-        }
-      }
-
-  private def toBigDecimal(v: Any): Option[java.math.BigDecimal] = v match {
-    case b: java.math.BigDecimal => Some(b)
-    case b: scala.math.BigDecimal => Some(b.underlying())
-    case d: org.apache.spark.sql.types.Decimal => Some(d.toJavaBigDecimal)
-    case _ => None
-  }
-
-  // --------------------------------------------- row-level evaluation
-
-  /** Per-file evaluation context: where each referenced column lives.
-    * A partition column is a per-file CONSTANT from the directory path
-    * (catalyst-internal value + declared table type); a data column is
-    * an ordinal into the file's own schema; a column the file predates
-    * is all-NULL.
-    */
-  private final case class FileCtx(
-      fields: Map[String, (Int, DataType)],
-      partConst: Map[String, Any],
-      partTypes: Map[String, DataType]) {
-    def typeOf(attr: String): Option[DataType] =
-      fields.get(attr).map(_._2).orElse(partTypes.get(attr))
-  }
-
-  /** Three-valued evaluation (None = SQL NULL). */
-  private def eval(f: Filter, row: InternalRow, ctx: FileCtx): Option[Boolean] = f match {
-    case And(l, r) => (eval(l, row, ctx), eval(r, row, ctx)) match {
-      case (Some(false), _) | (_, Some(false)) => Some(false)
-      case (Some(true), Some(true)) => Some(true)
-      case _ => None
-    }
-    case Or(l, r) => (eval(l, row, ctx), eval(r, row, ctx)) match {
-      case (Some(true), _) | (_, Some(true)) => Some(true)
-      case (Some(false), Some(false)) => Some(false)
-      case _ => None
-    }
-    case Not(g) => eval(g, row, ctx).map(!_)
-    case _: AlwaysTrue => Some(true)
-    case _: AlwaysFalse => Some(false)
-    case IsNull(a) => Some(cell(a, row, ctx).isEmpty)
-    case IsNotNull(a) => Some(cell(a, row, ctx).nonEmpty)
-    case EqualTo(a, v) => compare(a, v, row, ctx).map(_ == 0)
-    case EqualNullSafe(a, v) =>
-      val c = cell(a, row, ctx)
-      if (v == null) Some(c.isEmpty)
-      else if (c.isEmpty) Some(false)
-      else compare(a, v, row, ctx).map(_ == 0)
-    case GreaterThan(a, v) => compare(a, v, row, ctx).map(_ > 0)
-    case GreaterThanOrEqual(a, v) => compare(a, v, row, ctx).map(_ >= 0)
-    case LessThan(a, v) => compare(a, v, row, ctx).map(_ < 0)
-    case LessThanOrEqual(a, v) => compare(a, v, row, ctx).map(_ <= 0)
-    case In(a, vs) =>
-      if (cell(a, row, ctx).isEmpty) None
-      else if (vs.isEmpty) Some(false)
-      else {
-        // null IN-values contribute NULL (never TRUE): x IN (1, null)
-        // is true iff x=1, else NULL
-        val cmps = vs.toSeq.map { v =>
-          if (v == null) None else compare(a, v, row, ctx).map(_ == 0)
-        }
-        if (cmps.contains(Some(true))) Some(true)
-        else if (cmps.forall(_ == Some(false))) Some(false)
-        else None
-      }
-    case other =>
-      // unreachable behind supportedExact; fail loud, never mis-delete
-      throw new IllegalStateException(s"DwrfDelete: unsupported filter $other")
-  }
+  // ------------------------------------------------- row-level evaluation
 
   /** Per-file TRUE-matcher over the conjunction of `filters` — the
     * shared row evaluator behind both DELETE tiers (copy-on-write
-    * rewrite here, merge-on-read position collection in [[DwrfDv]]).
-    * Returns true exactly when the condition evaluates TRUE (NULL keeps
-    * the row, per DELETE semantics).
+    * rewrite here, merge-on-read position collection in [[DwrfDv]]),
+    * over rows of the file's own schema. Returns true exactly when the
+    * condition evaluates TRUE (NULL keeps the row, per DELETE
+    * semantics). Partition columns are per-file constants from the
+    * directory path; renamed columns resolve at the file's own name; a
+    * column the file predates is all-NULL.
     */
   private[dwrf] def matcherFor(fileSchema: StructType, qualifiedRoot: Path,
       file: Path, tableSchema: StructType,
       filters: Array[Filter]): InternalRow => Boolean = {
-    val spec = PartitionLayout.specOf(qualifiedRoot, file)
     def declaredType(k: String): DataType =
       tableSchema.fields.find(_.name == k).map(_.dataType)
         .getOrElse(StringType)
-    val ctx = FileCtx(
-      fileSchema.fields.zipWithIndex
-        .map { case (f, i) => f.name -> (i, f.dataType) }.toMap,
-      spec.map { case (k, raw) =>
-        k -> PartitionLayout.catalystValue(raw, declaredType(k)) }.toMap,
-      spec.map { case (k, _) => k -> declaredType(k) }.toMap)
-    val cond = filters.reduceOption(And(_, _)).getOrElse(new AlwaysTrue())
-    row => eval(cond, row, ctx).contains(true)
+    val partConst = PartitionLayout.specOf(qualifiedRoot, file).map {
+      case (k, raw) => k -> PartitionLayout.catalystValue(raw, declaredType(k))
+    }.toMap
+    val fileFields = fileSchema.fields.zipWithIndex
+      .map { case (f, i) => f.name -> ExactFilter.Slot(i, f.dataType) }.toMap
+    val pred = ExactFilter.compile(filters.toSeq, declaredType, { a =>
+      if (partConst.contains(a)) ExactFilter.Constant(partConst(a))
+      else tableSchema.fields.find(_.name == a)
+        .flatMap(ColumnAliases.resolve(_, fileFields))
+        .getOrElse(ExactFilter.Constant(null))
+    })
+    if (pred == null) _ => true
+    else row => pred.evalRow(row) == ExactFilter.T
   }
-
-  /** The row's value for `attr` — None when SQL NULL (null cell, or a
-    * column this file predates).
-    */
-  private def cell(attr: String, row: InternalRow, ctx: FileCtx): Option[Any] =
-    ctx.partConst.get(attr) match {
-      case Some(null) => None
-      case Some(v) => Some(v)
-      case None => ctx.fields.get(attr) match {
-        case None => None // schema-evolved column: all-NULL in this file
-        case Some((i, _)) if row.isNullAt(i) => None
-        case Some((i, dt)) => Some(row.get(i, dt))
-      }
-    }
-
-  /** sign(cellValue - filterValue), None when NULL. Cell values are
-    * CATALYST-internal (UTF8String, micros, days, Decimal), filter
-    * values external (String, java.sql.Timestamp/Date, BigDecimal) —
-    * each arm converts exactly; inconvertible values cannot reach here
-    * (supportedExact gates them out).
-    */
-  private def compare(attr: String, v: Any, row: InternalRow,
-      ctx: FileCtx): Option[Int] =
-    cell(attr, row, ctx).map { c =>
-      val dt = ctx.typeOf(attr)
-        .getOrElse(throw new IllegalStateException(s"no type for $attr"))
-      (dt, c) match {
-        case (ByteType | ShortType | IntegerType | LongType, _) =>
-          val cl = c match {
-            case b: Byte => b.toLong
-            case s: Short => s.toLong
-            case i: Int => i.toLong
-            case l: Long => l
-            case n: Number => n.longValue()
-          }
-          java.lang.Long.compare(cl, v.asInstanceOf[Number].longValue())
-        case (FloatType | DoubleType, _) =>
-          val cd = c match {
-            case fl: Float => fl.toDouble
-            case d: Double => d
-            case n: Number => n.doubleValue()
-          }
-          val vd = v.asInstanceOf[Number].doubleValue()
-          // primitive ordering; NaN never reaches here (gated), and the
-          // row side can't be NaN-compared wrongly: NaN cells make every
-          // comparison false => sign computed via explicit branches
-          if (cd < vd) -1 else if (cd > vd) 1
-          else if (cd == vd) 0
-          else 2 // NaN cell: unequal to everything, neither < nor >
-        case (StringType, u) =>
-          val cu = u match {
-            case s: UTF8String => s
-            case s: String => UTF8String.fromString(s)
-          }
-          val vu = v match {
-            case s: UTF8String => s
-            case other => UTF8String.fromString(other.toString)
-          }
-          Integer.signum(cu.compareTo(vu))
-        case (BooleanType, b: Boolean) =>
-          java.lang.Boolean.compare(b, v.asInstanceOf[Boolean])
-        case (d: DecimalType, dec) =>
-          val cb = dec match {
-            case x: org.apache.spark.sql.types.Decimal => x.toJavaBigDecimal
-            case x: java.math.BigDecimal => x
-            case x: scala.math.BigDecimal => x.underlying()
-          }
-          Integer.signum(cb.compareTo(toBigDecimal(v).get))
-        case (TimestampType, t) =>
-          val cm = t match {
-            case l: Long => l
-            case ts: java.sql.Timestamp =>
-              org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(ts)
-          }
-          java.lang.Long.compare(cm, StatsFilter.toMicros(v).get)
-        case (DateType, dv) =>
-          val cd = dv match {
-            case i: Int => i.toLong
-            case dd: java.sql.Date =>
-              org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaDate(dd).toLong
-          }
-          java.lang.Long.compare(cd, StatsFilter.toDays(v).get)
-        case (other, _) =>
-          throw new IllegalStateException(s"DwrfDelete: uncomparable type $other")
-      }
-    }.flatMap {
-      case 2 => None // NaN cell: comparison is SQL-false, not unknown —
-      // but sign form can't express "false for every operator", so NaN
-      // cells surface as NULL; both keep the row, identical outcome for
-      // DELETE (condition not TRUE)
-      case s => Some(s)
-    }
 
   // ------------------------------------------------------------ drive
 

@@ -104,7 +104,7 @@ object DwrfDv {
   /** Applies the DELETE as delete-vector rebindings + whole-file drops,
     * committed atomically. Same `canDeleteWhere` gating as
     * copy-on-write — callers route only filters
-    * [[DwrfDelete.supportedExact]] accepted.
+    * [[ExactFilter.owned]] accepted.
     */
   def deleteWhere(spark: SparkSession, root: String,
       tableSchema: StructType, filters: Array[Filter]): MorResult = {

@@ -16,6 +16,10 @@ final class ScanCounters extends Serializable {
   var stridesBloomSkipped = 0L
   var bytesRead = 0L
   var batchesEmitted = 0L
+  /** Rows decoded from the surviving stripes and strides, before the
+    * exact filters drop any: set against the scan's output rows, the
+    * filter's selectivity; set against the file rows, the skipping's. */
+  var rowsDecoded = 0L
   var preads = 0L
   /** Readers whose footer parse came from the JVM-wide footer cache. */
   var footerCacheHits = 0L
@@ -57,6 +61,10 @@ object DwrfMetrics {
     override def name(): String = "batchesEmitted"
     override def description(): String = "dwrf columnar batches emitted"
   }
+  final class RowsDecoded extends CustomSumMetric {
+    override def name(): String = "rowsDecoded"
+    override def description(): String = "dwrf rows decoded after skipping"
+  }
   final class Preads extends CustomSumMetric {
     override def name(): String = "preads"
     override def description(): String = "dwrf positioned reads issued"
@@ -73,7 +81,7 @@ object DwrfMetrics {
   val all: Array[CustomMetric] = Array(
     new StripesRead, new StripesSkipped, new StridesSkipped,
     new StridesBloomSkipped, new BytesRead,
-    new BatchesEmitted, new Preads, new FooterCacheHits, new DecompressMs)
+    new BatchesEmitted, new RowsDecoded, new Preads, new FooterCacheHits, new DecompressMs)
 
   def task(metricName: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
     // NB: the parameter must not be called `name` — inside the anonymous
@@ -90,6 +98,7 @@ object DwrfMetrics {
     task("stridesBloomSkipped", c.stridesBloomSkipped),
     task("bytesRead", c.bytesRead),
     task("batchesEmitted", c.batchesEmitted),
+    task("rowsDecoded", c.rowsDecoded),
     task("preads", c.preads),
     task("footerCacheHits", c.footerCacheHits),
     // reference M5's DECOMPRESSION_TIME: nanos bracketed per next()

@@ -227,4 +227,29 @@ class DwrfDeleteSpec extends AnyFunSuite {
     assert(!fs.exists(torn))
     assert(s.read.format("dwrf").load(dir).as[Long].collect().toSeq == Seq(2L))
   }
+
+  test("NaN and -0.0 follow Spark's ordering (NaN = NaN, NaN above all, -0.0 = 0.0)") {
+    val s = spark
+    import s.implicits._
+    val rows = Seq[(Long, java.lang.Double)]((1L, 0.5), (2L, Double.NaN),
+      (3L, 2.0), (4L, -0.0), (5L, null), (6L, 1.0))
+    // a second file whose only NaN hides above a max of 0.5
+    val nanOnly = Seq[(Long, java.lang.Double)]((7L, Double.NaN), (8L, 0.5))
+    val all = (rows ++ nanOnly).toDF("id", "v")
+    Seq("v > 1.0", "v = 0.0", "v = double('NaN')", "v <= 0.5",
+      "v IN (0.0, double('NaN'))", "v <=> double('NaN')", "NOT (v < 1.0)")
+      .foreach { cond =>
+        val dir = mkdir()
+        rows.toDF("id", "v").coalesce(1).write.format("dwrf").mode("overwrite").save(dir)
+        nanOnly.toDF("id", "v").coalesce(1).write.format("dwrf").mode("append").save(dir)
+        s.sql("DROP TABLE IF EXISTS dwrf_del_nan")
+        s.sql(s"CREATE TABLE dwrf_del_nan USING dwrf LOCATION '$dir'")
+        s.sql(s"DELETE FROM dwrf_del_nan WHERE $cond")
+        val want = all.filter(s"NOT ($cond) OR ($cond) IS NULL")
+          .select("id").as[Long].collect().sorted.toSeq
+        assert(s.table("dwrf_del_nan").select("id").as[Long].collect().sorted.toSeq == want,
+          s"DELETE WHERE $cond")
+        s.sql("DROP TABLE dwrf_del_nan")
+      }
+  }
 }

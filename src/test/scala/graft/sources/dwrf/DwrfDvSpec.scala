@@ -443,4 +443,29 @@ class DwrfDvSpec extends AnyFunSuite {
       assert(DwrfLog.latest(new Path(dir), conf).get.dvs.nonEmpty)
     } finally spark.sql("DROP TABLE IF EXISTS dv_sql_t")
   }
+
+  test("MoR delete: NaN and -0.0 follow Spark's ordering") {
+    val s = spark
+    import s.implicits._
+    val rows = Seq[(Long, java.lang.Double)]((1L, 0.5), (2L, Double.NaN),
+      (3L, 2.0), (4L, -0.0), (5L, null), (6L, 1.0), (7L, Double.NaN), (8L, 0.5))
+    val all = rows.toDF("id", "v")
+    Seq("v > 1.0", "v = 0.0", "v = double('NaN')", "v <= 0.5",
+      "v IN (0.0, double('NaN'))", "NOT (v < 1.0)").foreach { cond =>
+      val dir = tmpDir()
+      all.repartition(2).write.format("dwrf").mode("overwrite").save(dir)
+      DwrfLog.enable(new Path(dir), conf)
+      spark.sql("DROP TABLE IF EXISTS dv_nan_t")
+      spark.sql(
+        s"""CREATE TABLE dv_nan_t USING dwrf LOCATION '$dir'
+           |TBLPROPERTIES ('${DwrfDv.DeleteModeKey}'='${DwrfDv.ModeMergeOnRead}')
+           |""".stripMargin)
+      try {
+        spark.sql(s"DELETE FROM dv_nan_t WHERE $cond")
+        val want = all.filter(s"NOT ($cond) OR ($cond) IS NULL")
+          .select("id").as[Long].collect().sorted.toSeq
+        assert(ids(dir) === want, s"DELETE WHERE $cond")
+      } finally spark.sql("DROP TABLE IF EXISTS dv_nan_t")
+    }
+  }
 }

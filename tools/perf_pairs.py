@@ -1,0 +1,128 @@
+#!/usr/bin/env python3
+"""Alternating parent/change pairs of the benchmark, summarised per metric.
+
+    python3 tools/perf_pairs.py --parent DIR --change DIR --workload scan \
+        --seeds 111-116,131-134 [--seconds 3] [--trace 0|1] \
+        [--keep DIR] [--out pairs.json]
+
+Runs `python3 perfbench/run.py --workload W --seed N --seconds S --trace T`
+once in each checkout per seed, the parent first on even pairs and the
+change first on odd ones, so a host that speeds up or slows down over the
+session does not favour either side. Every run's last stdout line is the
+benchmark's result record; a run that fails or reports incorrect outputs
+stops the tool.
+
+For each metric of the record (the end-to-end ones with --trace 0, the
+per-layer ones with --trace 1) it prints both sides' median [Q1, Q3], the
+median change, how many pairs the change won (per the metric's `better`
+direction in BENCHMARK.json), whether the median gap exceeds the parent's
+inter-quartile range, and, for end-to-end metrics, whether the change's
+median is worse than the parent's by more than the metric's `bound`.
+`--keep DIR` keeps each run's full report under DIR/<side>-<seed>/;
+`--out` writes every run's metrics as JSON. The tool reads BENCHMARK.json
+and changes nothing in either checkout.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+
+def parse_seeds(spec):
+    seeds = []
+    for part in spec.split(","):
+        part = part.strip()
+        if "-" in part:
+            lo, hi = part.split("-")
+            seeds.extend(range(int(lo), int(hi) + 1))
+        elif part:
+            seeds.append(int(part))
+    return seeds
+
+
+def quartiles(xs):
+    xs = sorted(xs)
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q = statistics.quantiles(xs, n=4, method="inclusive")
+    return q[0], statistics.median(xs), q[2]
+
+
+def run(checkout, args, seed, keep):
+    cmd = [sys.executable, "perfbench/run.py", "--workload", args.workload,
+           "--seed", str(seed), "--seconds", str(args.seconds), "--trace", str(args.trace)]
+    if keep:
+        cmd += ["--keep", keep]
+    p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+                       text=True)
+    lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
+    if p.returncode != 0 or not lines:
+        sys.stderr.write(p.stderr[-4000:])
+        sys.exit(f"{checkout}: seed {seed} exited {p.returncode}")
+    rec = json.loads(lines[-1])
+    if not rec.get("correct"):
+        sys.exit(f"{checkout}: seed {seed}: {rec.get('failed')} of "
+                 f"{rec.get('attempted')} outputs incorrect")
+    return {k: m["value"] for k, m in rec["metrics"].items()}
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--parent", required=True, help="checkout of the parent commit")
+    ap.add_argument("--change", required=True, help="checkout of the change")
+    ap.add_argument("--workload", required=True, choices=("scan", "write", "pipeline"))
+    ap.add_argument("--seeds", required=True, help="e.g. 111-116,131-134")
+    ap.add_argument("--seconds", type=float, default=3)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--keep", help="keep each run's report under this directory")
+    ap.add_argument("--out", help="write every run's metrics to this JSON file")
+    args = ap.parse_args()
+
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
+                           "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
+    spec = {m["name"]: m for m in bench["end_to_end"] + bench["per_layer"]}
+
+    runs = {"parent": [], "change": []}
+    for i, seed in enumerate(parse_seeds(args.seeds)):
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        for side in order:
+            keep = os.path.join(args.keep, f"{side}-{seed}") if args.keep else None
+            m = run(getattr(args, side), args, seed, keep)
+            runs[side].append({"seed": seed, "metrics": m})
+            print(f"[pairs] seed {seed} {side}: " +
+                  ", ".join(f"{k}={v:.4g}" for k, v in sorted(m.items()) if k in spec),
+                  file=sys.stderr, flush=True)
+        if args.out:
+            with open(args.out, "w") as fh:
+                json.dump(runs, fh, indent=1)
+
+    n = len(runs["parent"])
+    print(f"{args.workload}, {n} pairs, --seconds {args.seconds} --trace {args.trace}")
+    print(f"{'metric':<34} {'parent median [Q1, Q3]':>30} {'change median [Q1, Q3]':>30}"
+          f" {'delta':>8} {'wins':>6} {'>IQR':>5} {'bound':>8}")
+    for name in sorted(runs["parent"][0]["metrics"]):
+        if name not in spec:
+            continue
+        pv = [r["metrics"][name] for r in runs["parent"]]
+        cv = [r["metrics"][name] for r in runs["change"]]
+        p1, pm, p3 = quartiles(pv)
+        c1, cm, c3 = quartiles(cv)
+        lower = spec[name]["better"] == "lower"
+        wins = sum((c < p) if lower else (c > p) for p, c in zip(pv, cv))
+        delta = (cm - pm) / pm if pm else float("nan")
+        beyond_iqr = abs(cm - pm) > (p3 - p1) and ((cm < pm) == lower)
+        if "bound" in spec[name]:
+            worse = (cm - pm) / pm if lower else (pm - cm) / pm
+            verdict = "over" if pm and worse > spec[name]["bound"] else "ok"
+        else:
+            verdict = "-"
+        print(f"{name:<34} {pm:>12.4g} [{p1:.4g}, {p3:.4g}]".ljust(65) +
+              f" {cm:>12.4g} [{c1:.4g}, {c3:.4g}]".ljust(31) +
+              f" {delta:>+8.1%} {wins:>3}/{n:<2} {'yes' if beyond_iqr else 'no':>5} {verdict:>8}")
+
+
+if __name__ == "__main__":
+    main()
