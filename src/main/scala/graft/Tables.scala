@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Test-table access. All driver tables are parquet files under an sf dir
   * (TESTDATA.md). Queries receive the sf dir and read from it; the driver's
@@ -11,6 +12,72 @@ object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Content stamp of a parquet file OR directory: (Σ mtime+length,
+    * Σ length + file count). A bare (lastModified, length) of the top
+    * entry has 1-second mtime granularity and a directory's own length
+    * is not content-derived — a fixture rewritten in place within the
+    * same second would serve a stale memo entry. Walking the tree makes
+    * any rewritten part file move the stamp (the staging-epoch
+    * discipline).
+    */
+  private[graft] def contentStamp(f: java.io.File): (Long, Long) = {
+    if (!f.isDirectory) (f.lastModified(), f.length())
+    else {
+      var a = 0L; var b = 0L
+      val walk = java.nio.file.Files.walk(f.toPath)
+      try {
+        val it = walk.iterator()
+        while (it.hasNext) {
+          val p = it.next().toFile
+          if (p.isFile) { a += p.lastModified() + p.length(); b += p.length() + 1 }
+        }
+      } finally walk.close()
+      (a, b)
+    }
+  }
+
+  /** Inferred parquet schemas, keyed on (path, content stamp, inference
+    * confs). `spark.read.parquet` infers the schema with a one-task Spark
+    * job (`mergeSchemasInParallel`) on every call, even for one file — on
+    * the driver tables that job costs ~55 ms per load, more than many
+    * queries' data work. A hit reads with the memoized schema instead,
+    * which launches no job. The confs in the key are every explicitly set
+    * `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` value (nanosAsLong,
+    * binaryAsString, int96AsTimestamp, inferTimestampNTZ, field ids, …)
+    * plus case sensitivity and ignoreCorruptFiles: flipping any of them
+    * misses, and an unset conf reads its default, which cannot change
+    * within a JVM.
+    */
+  private val schemaMemo =
+    scala.collection.concurrent.TrieMap.empty[(String, (Long, Long), Seq[(String, String)]), StructType]
+
+  private def inferenceConfs(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive" || k == "spark.sql.files.ignoreCorruptFiles"
+    }.sorted
+
+  /** `spark.read.parquet(path)`, with the schema inference memoized per
+    * content stamp. Only local paths are memoized: the stamp is a local
+    * file walk. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val f = new java.io.File(path)
+    if (!f.exists()) spark.read.parquet(path)
+    else {
+      // bound the memo: one JVM visiting many datasets must not grow it
+      // without limit, and a miss costs only one inference
+      if (schemaMemo.size > 256) schemaMemo.clear()
+      val key = (f.getAbsolutePath, contentStamp(f), inferenceConfs(spark))
+      schemaMemo.get(key) match {
+        case Some(schema) => spark.read.schema(schema).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          schemaMemo.put(key, df.schema)
+          df
+      }
+    }
+  }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // events.parquet stores TIMESTAMP(NANOS) which Spark's vectorized
@@ -23,7 +90,7 @@ object Tables {
     val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
     if (!spark.conf.getOption(nanosKey).contains("true"))
       spark.conf.set(nanosKey, "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = readParquet(spark, s"$sfDir/$name.parquet")
     // The driver has shipped events.ts as both TIMESTAMP(NANOS) (read as
     // int64 under nanosAsLong) and plain timestamp[us] (read as
     // TIMESTAMP_NTZ) across testdata generations. Normalize BY SCHEMA to

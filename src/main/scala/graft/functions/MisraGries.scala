@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * evicts every count-1 entry at once, and under heavy-tailed token
   * distributions most entries are singletons, so sweeps are rare.
   */
-final class MgBuffer(val k: Int) {
+final class MgBuffer(val k: Int) extends Serializable {
   val counts = new java.util.HashMap[String, Long](k * 2)
 
   def add(item: String): Unit = {
@@ -71,9 +71,11 @@ final class MgBuffer(val k: Int) {
   * pattern is sketch-then-confirm: this pass shuffles at most k pairs
   * per partition instead of the full item domain, the candidate keys are
   * broadcast back, and one filtered groupBy computes EXACT counts for
-  * candidates only — exact top-k without ever shuffling the long tail
-  * (see `text_heavy_hitters`, which fails loud if k was too small for
-  * the requested top-k rather than returning a possibly-wrong answer).
+  * candidates only — exact top-k without ever shuffling the long tail.
+  * (`text_heavy_hitters` runs the same two passes over [[MgBuffer]]
+  * directly, one tree-merged RDD job each, and fails loud if k was too
+  * small for the requested top-k rather than returning a possibly-wrong
+  * answer.)
   *
   * Why not Spark's built-in `approx_top_k`: its estimate step
   * (`ApproxTopKEstimate`) returns `ItemsSketch.getFrequentItems(

@@ -419,24 +419,13 @@ object DedupQueries extends QueryPack {
   // bare 16-byte (id_a, id_b) pairs ride the collision join — a pair that
   // collides in b bands is deduplicated BEFORE the 256-byte signature
   // arrays are joined back (once per pair) for the estimate.
-  private def minhashLshFull(s: SparkSession, dir: String,
-      cache: Boolean = true): (DataFrame, Seq[DataFrame]) = {
+  private val minhashK = 32
+
+  private def minhashLshPairs(s: SparkSession, sigs: DataFrame): DataFrame = {
     import s.implicits._
-    val k = 32
+    val k = minhashK
     val bands = 8
     val rowsPerBand = k / bands
-    val docs = Tables.load(s, dir, "documents")
-    graft.functions.GraftFunctions.register(s)
-    // whole signature in ONE native pass (minhash_signature kernel):
-    // shuffle-free narrow Project — no shingle explode, no k×min groupBy.
-    // Bit-identical to the aggregate form it replaces (ShingleHashesSpec).
-    // Referenced twice (band explode + per-pair signature join-back):
-    // persist; the public query materializes and unpersists explicitly
-    val sigs0 = docs.select($"doc_id",
-      expr(s"minhash_signature(text, 5, $k)").as("sig"))
-    val sigs = if (cache)
-      sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sigs0
     val banded = sigs.select($"doc_id",
       posexplode(expr(
         s"transform(sequence(0, ${bands - 1}), b -> xxhash64(${
@@ -451,7 +440,7 @@ object DedupQueries extends QueryPack {
         $"a.doc_id" < $"b.doc_id")
       .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"))
       .distinct()
-    val pairs0 = cand
+    cand
       .join(sigs.select($"doc_id".as("id_a"), $"sig".as("sig_a")), "id_a")
       .join(sigs.select($"doc_id".as("id_b"), $"sig".as("sig_b")), "id_b")
       .select($"id_a", $"id_b",
@@ -459,39 +448,60 @@ object DedupQueries extends QueryPack {
                  |0, (acc, v) -> acc + v) / CAST($k AS DOUBLE)""".stripMargin)
           .as("est_jaccard"))
       .filter($"est_jaccard" >= 0.5)
-    // referenced twice (candidate-id collection + final join)
-    val pairs = if (cache)
-      pairs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else pairs0
+  }
+
+  /** Signatures of every document, one native pass (minhash_signature
+    * kernel): a shuffle-free narrow Project — no shingle explode, no
+    * k×min groupBy. Bit-identical to the aggregate form it replaces
+    * (ShingleHashesSpec). */
+  private def minhashSigs(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    graft.functions.GraftFunctions.register(s)
+    Tables.load(s, dir, "documents")
+      .select($"doc_id", expr(s"minhash_signature(text, 5, $minhashK)").as("sig"))
+  }
+
+  /** The lazy candidate-pair plan (band self-join + signature estimate),
+    * for the plan-shape gate. */
+  private[queries] def minhashLshPlan(s: SparkSession, dir: String): DataFrame =
+    minhashLshPairs(s, minhashSigs(s, dir))
+
+  private def minhashLsh(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    // signatures are referenced twice (band explode + per-pair signature
+    // join-back): persist for the one pair pass, then free
+    val sigs = minhashSigs(s, dir)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // near-dup pairs at est ≥ 0.5 are driver-sized: collect them in one
+    // action
+    val pairsDf = minhashLshPairs(s, sigs)
+    val pairs = try pairsDf.collect() finally sigs.unpersist()
     // self-validating confirm column: recompute the EXACT Jaccard for the
     // surviving candidates (few) from their shingle sets, so the rows-only
-    // check carries its own ground truth (est vs true side by side). The
-    // candidate id set is tiny => broadcast-join it against documents
-    // FIRST, so the confirm pass re-shingles only the candidate docs, not
-    // the corpus.
-    val candIds = pairs
-      .select(explode(array($"id_a", $"id_b")).as("doc_id")).distinct()
-    val sets = docs.join(broadcast(candIds), "doc_id")
+    // check carries its own ground truth (est vs true side by side). Only
+    // the candidate docs are re-shingled, in one narrow filtered scan.
+    val candIds = pairs.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
+    val setsDf = Tables.load(s, dir, "documents")
+      .filter($"doc_id".isin(candIds: _*))
       .select($"doc_id", expr(shingle5Sql).as("gs"))
-    val result = pairs
-      .join(sets.select($"doc_id".as("id_a"), $"gs".as("gs_a")), "id_a")
-      .join(sets.select($"doc_id".as("id_b"), $"gs".as("gs_b")), "id_b")
+    val sets: Map[Long, Any] =
+      if (candIds.isEmpty) Map.empty
+      else setsDf.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    val gs = setsDf.schema("gs")
+    val joined = s.createDataFrame(
+      java.util.Arrays.asList(pairs.toSeq.map { r =>
+        org.apache.spark.sql.Row(r.getLong(0), r.getLong(1), r.getDouble(2),
+          sets(r.getLong(0)), sets(r.getLong(1)))
+      }: _*),
+      org.apache.spark.sql.types.StructType(pairsDf.schema.fields ++
+        Seq(gs.copy(name = "gs_a"), gs.copy(name = "gs_b"))))
+    // the same column expressions as a distributed plan, evaluated on the
+    // driver over the local rows; the total order is a driver sort
+    val result = joined
       .select($"id_a", $"id_b", round($"est_jaccard", 4).as("est_jaccard"),
         round(size(array_intersect($"gs_a", $"gs_b")).cast("double") /
           size(array_union($"gs_a", $"gs_b")), 4).as("true_jaccard"))
-      .orderBy($"id_a", $"id_b")
-    (result, Seq(sigs, pairs))
-  }
-
-  private[queries] def minhashLshPlan(s: SparkSession, dir: String): DataFrame =
-    minhashLshFull(s, dir, cache = false)._1
-
-  private def minhashLsh(s: SparkSession, dir: String): DataFrame = {
-    // near-dup pairs at est ≥ 0.5 are driver-sized: materialize, then free
-    // both caches (same pattern as ann_ivf_topk)
-    val (result, caches) = minhashLshFull(s, dir)
-    val rows = result.collect()
-    caches.foreach(_.unpersist())
+    val rows = result.collect().sortBy(r => (r.getLong(0), r.getLong(1)))
     s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
   }
 
@@ -726,7 +736,7 @@ object DedupQueries extends QueryPack {
       .select($"vec_id", expr("transform(raw, x -> x / nrm)").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = phased(ph, "normalize_count") { corpus.count() }
+      val n = phased(ph, "normalize_count") { countRows(corpus) }
       val Cells =
         math.max(4, ((n + SemanticTargetCellSize - 1) / SemanticTargetCellSize).toInt)
       // arithmetic policy (Exact scaladoc): exactArith defaults to
@@ -829,10 +839,16 @@ object DedupQueries extends QueryPack {
         // the linearity claim rests on bounded cell populations, so
         // measure them (on PRIMARY cells) and refuse on collapse: one
         // mega-cell means the quadratic plan the clustering exists to
-        // avoid is back
+        // avoid is back. One job: per-partition populations (Cells longs
+        // each), summed on the driver
         val maxCellPop = phased(ph, "assign") {
-          assigned.groupBy($"cell").count()
-            .agg(max($"count")).head().getLong(0)
+          assigned.select($"cell").as[Int].rdd
+            .mapPartitions { it =>
+              val pop = new Array[Long](Cells)
+              it.foreach(c => pop(c) += 1)
+              Iterator.single(pop)
+            }
+            .collect().transpose.map(_.sum).foldLeft(0L)(math.max)
         }
         require(maxCellPop <= 16L * SemanticTargetCellSize,
           s"semantic-dedup clustering collapsed: largest cell has " +
@@ -871,7 +887,7 @@ object DedupQueries extends QueryPack {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // materialize while `assigned` is still cached — the count doubles
         // as the pairs_within_cell metric, so nothing is paid twice
-        val pairsWithin = phased(ph, "within_join") { within.count() }
+        val pairsWithin = phased(ph, "within_join") { countRows(within) }
         lastSemanticPhases = ph.toMap
         SemanticTier(corpus, within, n, Cells, maxCellPop, pairsWithin)
       } finally assigned.unpersist()
@@ -901,9 +917,12 @@ object DedupQueries extends QueryPack {
       // rows, not multiplying (measured 38 s vs ~1 s here at n=2100)
       val ph = scala.collection.mutable.LinkedHashMap(
         lastSemanticPhases.toSeq: _*)
+      // vec_id is unique, so the driver sort gives the order an orderBy
+      // would — without its sampling job and range shuffle
       val vecs = phased(ph, "exact_verifier") {
-        tier.corpus.orderBy($"vec_id")
-          .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        tier.corpus.collect()
+          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+          .sortBy(_._1)
       }
       val off = SimilarityQueries.PlantIdOffset
       // parallel striped rows over the common pool (the simhash-audit
@@ -941,9 +960,21 @@ object DedupQueries extends QueryPack {
       val nExact = nExactAcc.get()
       val plantedExact = plantedAcc.get()
       val nWithin = tier.pairsWithin
+      // one pass over the persisted (driver-sized) pair set: the distinct
+      // dropped ids and the planted pairs per partition, merged here
       val (nDropped, plantedWithin) = phased(ph, "rollup") {
-        (within.select($"id_b").distinct().count(),
-          within.filter($"id_b" === $"id_a" + off).count())
+        val parts = within.select($"id_a", $"id_b").as[(Long, Long)].rdd
+          .mapPartitions { it =>
+            val dropped = scala.collection.mutable.HashSet.empty[Long]
+            var planted = 0L
+            it.foreach { case (a, b) =>
+              dropped += b
+              if (b == a + off) planted += 1
+            }
+            Iterator.single((dropped.toArray, planted))
+          }
+          .collect()
+        (parts.iterator.flatMap(_._1).toSet.size.toLong, parts.map(_._2).sum)
       }
       lastSemanticPhases = ph.toMap
       def ratio(a: Long, b: Long): Double =

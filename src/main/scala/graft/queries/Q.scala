@@ -79,6 +79,13 @@ trait QueryPack {
     a
   }
 
+  /** Row count of `df` in ONE Spark job: its physical plan's partitions
+    * counted and summed on the driver. `Dataset.count()` plans a global
+    * aggregate, which adaptive execution runs as a shuffle-map job plus a
+    * result job. On a persisted frame this pass also fills the cache.
+    */
+  protected def countRows(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
   /** Per-row double arithmetic is bit-deterministic; only the aggregation
     * order isn't. So: cast each term to an exact DECIMAL, sum (exact, so
     * order-independent), round, and only then go back to DOUBLE.

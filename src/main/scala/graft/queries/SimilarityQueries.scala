@@ -537,7 +537,7 @@ object SimilarityQueries extends QueryPack {
     val f = new java.io.File(s"$dir/embeddings.parquet")
     // same walked content stamp as trainCache (r14): a fixture rewritten
     // in place within one mtime second must move the key
-    val (stampA, stampB) = contentStamp(f)
+    val (stampA, stampB) = Tables.contentStamp(f)
     if (exactTopCache.size > 32) exactTopCache.clear()
     exactTopCache.getOrElseUpdate((f.getPath, stampA, stampB), {
       // driver-side brute force over the bounded corpus (≤2000 × 64
@@ -800,33 +800,9 @@ object SimilarityQueries extends QueryPack {
   private[graft] def structureCachesEmpty: Boolean =
     trainCache.isEmpty && exactTopCache.isEmpty
 
-  /** Content stamp of a parquet file OR directory: (Σ mtime+length,
-    * Σ length + file count). A bare (lastModified, length) of the top
-    * entry has 1-second mtime granularity and a directory's own length
-    * is not content-derived — a fixture rewritten in place within the
-    * same second would serve stale centroids/codebooks into what are
-    * now hash-exact oracle checks. Walking the tree makes any rewritten
-    * part file move the stamp (the staging-epoch discipline).
-    */
-  private def contentStamp(f: java.io.File): (Long, Long) = {
-    if (!f.isDirectory) (f.lastModified(), f.length())
-    else {
-      var a = 0L; var b = 0L
-      val walk = java.nio.file.Files.walk(f.toPath)
-      try {
-        val it = walk.iterator()
-        while (it.hasNext) {
-          val p = it.next().toFile
-          if (p.isFile) { a += p.lastModified() + p.length(); b += p.length() + 1 }
-        }
-      } finally walk.close()
-      (a, b)
-    }
-  }
-
   private def trained[A <: AnyRef](dir: String, tag: String)(build: => A): A = {
     val f = new java.io.File(s"$dir/embeddings.parquet")
-    val (stampA, stampB) = contentStamp(f)
+    val (stampA, stampB) = Tables.contentStamp(f)
     // bound the memo: one JVM visiting many datasets (Verify × bench ×
     // opscale staging dirs) must not grow trained structures without
     // limit — trained things are cheap to rebuild relative to a leak
@@ -846,7 +822,7 @@ object SimilarityQueries extends QueryPack {
   private def ivfRows(emb: DataFrame, dir: String): (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType, Int, Int) = {
     val s = emb.sparkSession
     import s.implicits._
-    val (k, nprobe) = ivfGeometry(emb.count())
+    val (k, nprobe) = ivfGeometry(countRows(emb))
 
     // assignment via the bound-pruned argmin kernel (r14, the
     // dedup_semantic treatment applied to the IVF trainer): identical

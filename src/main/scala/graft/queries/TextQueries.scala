@@ -167,49 +167,57 @@ object TextQueries extends QueryPack {
     |""".stripMargin.trim
 
   // ------------------------------------------------ exact heavy hitters
-  // Sketch-then-confirm top-30 tokens: a Misra-Gries pass (native
-  // TypedImperativeAggregate, <= 4096 counters per partial buffer — the
-  // shuffle carries the sketch, never the token domain) nominates
-  // candidates with the mergeable-summaries guarantee that every token
-  // with count > N/4097 survives; the candidate keys broadcast back and
-  // ONE filtered groupBy computes exact counts for candidates only. The
-  // result is provably exact top-k — the require fails loud if the
-  // 30th count does not clear the MG threshold (k too small for this
-  // corpus) instead of returning a silently-wrong answer. At 100 TB this
-  // replaces text_token_freq's full-vocabulary shuffle with a
-  // fixed-size sketch + a long-tail-free confirm.
+  // Sketch-then-confirm top-30 tokens: a Misra-Gries pass (<= 4096
+  // counters per partition buffer, merged in a tree — the driver receives
+  // sketches, never the token domain) nominates candidates with the
+  // mergeable-summaries guarantee that every token with count > N/4097
+  // survives; a second pass counts the candidates only, exactly. Each
+  // pass is ONE Spark job (per-partition buffers, tree-merged), where a
+  // global aggregate plus a broadcast-join groupBy and a sorted limit
+  // cost five under adaptive execution. The result is provably exact
+  // top-k — the require fails loud if the 30th count does not clear the
+  // MG threshold (k too small for this corpus) instead of returning a
+  // silently-wrong answer. At 100 TB this replaces text_token_freq's
+  // full-vocabulary shuffle with a fixed-size sketch + a long-tail-free
+  // confirm.
   private def heavyHitters(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(s)
+    import s.implicits._
     val counters = 4096
     def tokens = Tables.load(s, dir, "documents")
       .select(explode(split(col("text"), " ")).as("token"))
       .filter(length(col("token")) > 0)
-    val sketch = tokens
-      .agg(expr(s"mg_topk(token, $counters)").as("mg"), count(lit(1)).as("n"))
-      .head() // driver-sized: one row, <= 4096 map entries
-    val n = sketch.getLong(1)
-    val cand = sketch.getMap[String, Long](0).keys.toSeq.sorted
-    val candDf = s.createDataFrame(
-      cand.map(org.apache.spark.sql.Row(_)).asJava,
+      .as[String].rdd
+    val (sketch, n) = tokens.treeAggregate((new graft.functions.MgBuffer(counters), 0L))(
+      { case ((b, c), t) => b.add(t); (b, c + 1) },
+      { case ((a, ca), (b, cb)) => (a.mergeIn(b), ca + cb) })
+    val cand = sketch.counts.keySet.asScala.toSet
+    val exact = tokens
+      .mapPartitions { it =>
+        val c = new java.util.HashMap[String, Long]
+        it.foreach(t => if (cand(t)) c.put(t, c.getOrDefault(t, 0L) + 1L))
+        Iterator.single(c)
+      }
+      .treeReduce { (a, b) =>
+        b.forEach((t, k) => a.put(t, a.getOrDefault(t, 0L) + k)); a
+      }
+    // ORDER BY n_occurrences DESC, token — strings in Spark's (UTF-8
+    // byte) order
+    val top = exact.asScala.toSeq
+      .sortWith { case ((ta, na), (tb, nb)) =>
+        na > nb || (na == nb && org.apache.spark.unsafe.types.UTF8String.fromString(ta)
+          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(tb)) < 0)
+      }
+      .take(30)
+    require(top.length == 30 && top.last._2 > n / (counters + 1L),
+      s"mg_topk($counters) cannot certify top-30 here: 30th count " +
+        s"${top.lastOption.map(_._2)} vs threshold ${n / (counters + 1L)}")
+    s.createDataFrame(top.map { case (t, k) => org.apache.spark.sql.Row(t, k) }.asJava,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("token",
-          org.apache.spark.sql.types.StringType, nullable = false))))
-    val top = tokens
-      .join(broadcast(candDf), Seq("token"))
-      .groupBy("token")
-      .agg(count(lit(1)).as("n_occurrences"))
-      .orderBy(col("n_occurrences").desc, col("token"))
-      .limit(30)
-      .collect() // driver-sized: 30 rows
-    require(top.length == 30 && top.last.getLong(1) > n / (counters + 1L),
-      s"mg_topk($counters) cannot certify top-30 here: 30th count " +
-        s"${top.lastOption.map(_.getLong(1))} vs threshold ${n / (counters + 1L)}")
-    s.createDataFrame(top.toSeq.asJava, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("token",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("n_occurrences",
-        org.apache.spark.sql.types.LongType, nullable = false))))
+          org.apache.spark.sql.types.StringType, nullable = false),
+        org.apache.spark.sql.types.StructField("n_occurrences",
+          org.apache.spark.sql.types.LongType, nullable = false))))
   }
 
   private val heavyHittersOracle = """

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,8 +25,7 @@ class BenchOpScaleSpec extends AnyFunSuite {
   test("2-copy prefixed corpus doubles the exact dedup clusters exactly") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "opscale-spec-").toString
+    val dir = graft.TestDirs.tmp("opscale-spec-").toString
     BenchOpScale.scaledCorpus(s, sf, 2)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val base = SparkEntry.queries("dedup_clusters")(s, sf)
@@ -41,8 +39,7 @@ class BenchOpScaleSpec extends AnyFunSuite {
   test("df cap drops boilerplate-only pairs, keeps rare-shingle near-dups") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dfcap-spec-").toString
+    val dir = graft.TestDirs.tmp("dfcap-spec-").toString
     // 60 docs sharing 40 words of boilerplate (df 60 > 50 for every
     // boilerplate shingle) + 4 unique words each: uncapped Jaccard
     // between any two is ~36/52 >= 0.5, capped n_common is 0

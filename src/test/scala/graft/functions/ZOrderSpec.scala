@@ -1,6 +1,5 @@
 package graft.functions
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
@@ -93,8 +92,7 @@ class ZOrderSpec extends AnyFunSuite {
       pmod(col("id") * 2654435761L, lit(n.toLong)).as("k"))
       .select((col("k") % 256).as("x"), (col("k") / 256).cast("long").as("y"))
 
-    def tmp(tag: String) = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), s"dwrf-z-$tag-").toString
+    def tmp(tag: String) = graft.TestDirs.tmp(s"dwrf-z-$tag-").toString
     val zDir = tmp("z"); val xDir = tmp("x")
 
     grid.withColumn("z", expr("z_order(x, y)"))

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
@@ -51,8 +50,7 @@ class RocksDbStateSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ck = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), s"rocksdb-$name-").toString
+    val ck = graft.TestDirs.tmp(s"rocksdb-$name-").toString
     val stream = MemoryStream[Long]
     val metrics = scala.collection.mutable.Set.empty[String]
     val total = new java.util.concurrent.atomic.AtomicLong
@@ -99,8 +97,7 @@ class RocksDbStateSpec extends AnyFunSuite {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     withProvider(Some(RocksDb)) {
-      val ck = Files.createTempDirectory(
-        Paths.get("/root/repo/target"), "rocksdb-win-").toString
+      val ck = graft.TestDirs.tmp("rocksdb-win-").toString
       val stream = MemoryStream[(java.sql.Timestamp, Long)]
       val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
       def drain(): Unit = {

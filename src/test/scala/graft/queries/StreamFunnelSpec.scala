@@ -50,8 +50,7 @@ class StreamFunnelSpec extends AnyFunSuite {
       // batch 4: watermark sentinel far beyond every horizon
       chunk(Seq((-1L, base + 3L * 24 * 3600 * 1000000000L, "__wm_sentinel__"))))
 
-    val root = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-funnel-spec-")
+    val root = graft.TestDirs.tmp("stream-funnel-spec-")
     val srcDir = root.resolve("src"); Files.createDirectories(srcDir)
     chunks.zipWithIndex.foreach { case (rows, i) =>
       val dir = root.resolve(s"chunk$i").toString

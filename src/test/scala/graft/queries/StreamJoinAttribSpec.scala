@@ -50,8 +50,7 @@ class StreamJoinAttribSpec extends AnyFunSuite {
       // batch 4: watermark sentinel far beyond every window
       Seq((-1L, base + 3L * 24 * 3600 * 1000000000L, "__wm_sentinel__")))
 
-    val root = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-join-attrib-spec-")
+    val root = graft.TestDirs.tmp("stream-join-attrib-spec-")
     val srcDir = root.resolve("src"); Files.createDirectories(srcDir)
     chunks.zipWithIndex.foreach { case (rows, i) =>
       val dir = root.resolve(s"chunk$i").toString

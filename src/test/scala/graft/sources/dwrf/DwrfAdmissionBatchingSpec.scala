@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -22,8 +21,7 @@ class DwrfAdmissionBatchingSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   private def tmpDir(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-admission-").toString
+    graft.TestDirs.tmp("dwrf-admission-").toString
 
   /** v0 snapshot, v1 append, v2 CoW UPDATE, v3 MoR DELETE — the same
     * commit-kind ladder the declared queries stage. */

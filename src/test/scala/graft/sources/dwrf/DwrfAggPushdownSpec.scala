@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LocalTableScanExec
@@ -34,8 +33,7 @@ class DwrfAggPushdownSpec extends AnyFunSuite {
   private def writeFixture(): String = {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-aggpush-").toString
+    val dir = graft.TestDirs.tmp("dwrf-aggpush-").toString
     // two files (two write partitions), nulls in `maybe`, strings incl.
     // an empty one, a timestamp column — every supported stats shape
     spark.range(0, 10000, 1, 2).select(
@@ -71,8 +69,7 @@ class DwrfAggPushdownSpec extends AnyFunSuite {
   test("all-null and empty-table edges return SQL-correct nulls/zeros") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-aggnull-").toString
+    val dir = graft.TestDirs.tmp("dwrf-aggnull-").toString
     spark.range(0, 100, 1, 1)
       .select(col("id"), lit(null).cast("long").as("allnull"))
       .write.format("dwrf").mode("overwrite").save(dir)
@@ -103,8 +100,7 @@ class DwrfAggPushdownSpec extends AnyFunSuite {
   }
 
   test("double/float MIN/MAX push when NaN-free, fall back when a NaN exists") {
-    val ddir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-aggdbl-").toString
+    val ddir = graft.TestDirs.tmp("dwrf-aggdbl-").toString
     spark.range(0, 100, 1, 2).select(
       col("id"),
       (col("id") * 1.5 - 20.25).as("d"),
@@ -123,8 +119,7 @@ class DwrfAggPushdownSpec extends AnyFunSuite {
     assert(r.getDouble(4) == -2.0 * 98 && r.getDouble(5) == -2.0)
     assert(r.getLong(6) == 100 - 34) // multiples of 3 in [0,100) are null
     // infinities are ordinary bounds (sum stays ±Inf, not NaN)
-    val idir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-agginf-").toString
+    val idir = graft.TestDirs.tmp("dwrf-agginf-").toString
     spark.range(10).select(
       when(col("id") === 0, lit(Double.PositiveInfinity))
         .otherwise(col("id") * 1.0).as("v"))
@@ -135,8 +130,7 @@ class DwrfAggPushdownSpec extends AnyFunSuite {
     // one NaN anywhere => the footer bounds are wrong for MAX (Spark
     // orders NaN above every double) => must keep the distributed plan,
     // which then returns the NaN
-    val ndir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-aggnan-").toString
+    val ndir = graft.TestDirs.tmp("dwrf-aggnan-").toString
     spark.range(10).select(
       when(col("id") === 7, lit(Double.NaN)).otherwise(col("id") * 1.0).as("v"))
       .write.format("dwrf").mode("overwrite").save(ndir)
@@ -152,8 +146,7 @@ class DwrfAggPushdownSpec extends AnyFunSuite {
   test("schema evolution (column missing in an older file) falls back") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-aggevo-").toString
+    val dir = graft.TestDirs.tmp("dwrf-aggevo-").toString
     spark.range(0, 50, 1, 1).select(col("id"))
       .write.format("dwrf").mode("overwrite").save(dir)
     spark.range(50, 100, 1, 1).select(col("id"), (col("id") * 2).as("extra"))
@@ -177,15 +170,13 @@ class DwrfAggPushdownSpec extends AnyFunSuite {
     assert(r.getLong(0) == (0L until 10000L).sum)
     assert(r.getLong(1) == (0L until 10000L).filter(_ % 7 != 0).map(_ * 3).sum)
     // sum over an all-null column is NULL
-    val ndir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-sumnull-").toString
+    val ndir = graft.TestDirs.tmp("dwrf-sumnull-").toString
     spark.range(10).select(lit(null).cast("long").as("n"))
       .write.format("dwrf").mode("overwrite").save(ndir)
     val nagg = spark.read.format("dwrf").load(ndir).agg(sum(col("n")))
     assert(isLocal(nagg) && nagg.head().isNullAt(0))
     // a file whose own running sum overflowed keeps the distributed plan
-    val odir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-sumovf-").toString
+    val odir = graft.TestDirs.tmp("dwrf-sumovf-").toString
     spark.range(3).select(
       when(col("id") < 2, lit(Long.MaxValue / 2 + 1)).otherwise(lit(-1L)).as("v"))
       .write.format("dwrf").mode("overwrite").save(odir)
@@ -197,8 +188,7 @@ class DwrfAggPushdownSpec extends AnyFunSuite {
   test("GROUP BY partition column answers per-group from footers") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-agggrp-").toString
+    val dir = graft.TestDirs.tmp("dwrf-agggrp-").toString
     spark.range(0, 1200, 1, 3)
       .select(col("id"), (col("id") % 4).as("p"))
       .write.format("dwrf").partitionBy("p").mode("overwrite").save(dir)
@@ -222,8 +212,7 @@ class DwrfAggPushdownSpec extends AnyFunSuite {
       val rnd = new scala.util.Random(seed)
       val n = 500 + rnd.nextInt(2000)
       val nullEvery = 2 + rnd.nextInt(9)
-      val dir = Files.createTempDirectory(
-        java.nio.file.Paths.get("/root/repo/target"), s"dwrf-aggfuzz-").toString
+      val dir = graft.TestDirs.tmp(s"dwrf-aggfuzz-").toString
       val base = rnd.nextLong() % 1000000
       spark.range(0, n, 1, 1 + rnd.nextInt(3)).select(
         (col("id") * (rnd.nextInt(100) - 50) + base).as("v"),
@@ -246,8 +235,7 @@ class DwrfAggPushdownSpec extends AnyFunSuite {
   test("partitioned table: partition-column aggregates fall back, data ones push") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-aggpart-").toString
+    val dir = graft.TestDirs.tmp("dwrf-aggpart-").toString
     spark.range(0, 1000, 1, 2)
       .select(col("id"), (col("id") % 5).as("p"))
       .write.format("dwrf").partitionBy("p").mode("overwrite").save(dir)

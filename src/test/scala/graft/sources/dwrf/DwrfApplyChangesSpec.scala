@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -17,8 +16,7 @@ class DwrfApplyChangesSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   private def tmpDir(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-apply-").toString
+    graft.TestDirs.tmp("dwrf-apply-").toString
 
   private def rowsOf(table: String): Seq[(Long, Double)] = {
     val s = spark

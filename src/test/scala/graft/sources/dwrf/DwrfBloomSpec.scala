@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -33,8 +32,7 @@ class DwrfBloomSpec extends AnyFunSuite {
     * file's stats range, so min/max pruning is provably useless and only
     * the bloom can refute it. */
   private def writeFixture(extra: Map[String, String]): String = {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-bloom-").toString
+    val dir = graft.TestDirs.tmp("dwrf-bloom-").toString
     val w = spark.range(0, 8000, 1, 1)
       .select((col("id") * 2).as("id"),
         concat(lit("user-"), col("id") * 2 * 7919).as("name"))
@@ -133,8 +131,7 @@ class DwrfBloomSpec extends AnyFunSuite {
   }
 
   test("misconfiguration fails loud at write time") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-bloombad-").toString
+    val dir = graft.TestDirs.tmp("dwrf-bloombad-").toString
     val df = spark.range(10).select(col("id"), (col("id") * 1.5).as("d"))
     def chain(t: Throwable): String =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)

@@ -1,6 +1,6 @@
 package graft.sources.dwrf
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -33,8 +33,7 @@ class DwrfBloomStrideSpec extends AnyFunSuite {
       stripes: Int = 1): java.nio.file.Path = {
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("tag", StringType)))
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "bloomstride-")
+    val dir = graft.TestDirs.tmp("bloomstride-")
     val p = dir.resolve("t.dwrf")
     val os = Files.newOutputStream(p)
     val w = new DwrfFileWriter(schema, DwrfWriteOptions.fromMap(Map(
@@ -107,8 +106,7 @@ class DwrfBloomStrideSpec extends AnyFunSuite {
     // ids (scrambled), odd probe
     val pSparse = {
       val schema = StructType(Seq(StructField("id", LongType)))
-      val dir = Files.createTempDirectory(
-        Paths.get("/root/repo/target"), "bloomstride-")
+      val dir = graft.TestDirs.tmp("bloomstride-")
       val f = dir.resolve("t.dwrf")
       val os = Files.newOutputStream(f)
       val w = new DwrfFileWriter(schema, DwrfWriteOptions.fromMap(Map(
@@ -162,8 +160,7 @@ class DwrfBloomStrideSpec extends AnyFunSuite {
 
   test("columnar DataFrame path prunes and stays exact end to end") {
     val spark = TestSpark.spark
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "bloomstride-df-").toString
+    val dir = graft.TestDirs.tmp("bloomstride-df-").toString
     spark.range(0, Rows, 1, 1)
       .select(((col("id") * 2654435761L) % Rows).as("id"),
         concat(lit("v-"), (col("id") * 2654435761L) % Rows).as("tag"))

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
@@ -25,8 +24,7 @@ class DwrfBucketSaltSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.graftsalt.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), "dwrf-salt-wh-").toString
+  private lazy val warehouse = graft.TestDirs.tmp("dwrf-salt-wh-").toString
 
   private def shufflesIn(df: org.apache.spark.sql.DataFrame): Int = {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec

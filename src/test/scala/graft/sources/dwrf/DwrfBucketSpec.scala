@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,8 +20,7 @@ class DwrfBucketSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.graftbkt.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), "dwrf-bkt-wh-").toString
+  private lazy val warehouse = graft.TestDirs.tmp("dwrf-bkt-wh-").toString
 
   private def shufflesIn(df: org.apache.spark.sql.DataFrame): Int = {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -200,8 +198,7 @@ class DwrfBucketSpec extends AnyFunSuite {
   test("path-based per-write bucket opt-in writes a bucketed layout") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-bkt-path-").toString
+    val dir = graft.TestDirs.tmp("dwrf-bkt-path-").toString
     // no catalog, no FunctionCatalog: the write must not request the
     // (unresolvable) bucket-transform distribution, just route rows
     s.range(0, 200).select($"id", ($"id" * 2).as("v"))

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -18,8 +17,7 @@ class DwrfCdfStreamSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), prefix).toString
+    graft.TestDirs.tmp(prefix).toString
 
   private def seed(dir: String, n: Int, parts: Int): Unit = {
     val s = spark

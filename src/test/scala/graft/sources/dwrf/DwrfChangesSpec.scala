@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -18,8 +17,7 @@ class DwrfChangesSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   private def tmpDir(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-cdc-").toString
+    graft.TestDirs.tmp("dwrf-cdc-").toString
 
   private def writeRange(dir: String, lo: Int, hi: Int,
       mode: String = "overwrite", parts: Int = 2): Unit = {

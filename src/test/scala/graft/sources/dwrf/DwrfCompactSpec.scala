@@ -15,8 +15,7 @@ class DwrfCompactSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   private def mkdir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), prefix).toString
+    graft.TestDirs.tmp(prefix).toString
 
   private def files(dir: String): Seq[String] =
     DwrfUtil.listDataFiles(new Path(dir), conf).map(_.getName).sorted

@@ -1,6 +1,6 @@
 package graft.sources.dwrf
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -71,8 +71,7 @@ class DwrfCorruptionSpec extends AnyFunSuite with TimeLimits {
 
   private def fuzz(kind: String, flips: Int): Unit = {
     val base = validFile(kind)
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), s"corrupt-$kind-")
+    val dir = graft.TestDirs.tmp(s"corrupt-$kind-")
     assert(tryRead(base, dir) == Right(Rows.toLong), "fixture must be valid")
     val rnd = new scala.util.Random(0xC0FFEE)
     var failedClean = 0
@@ -111,8 +110,7 @@ class DwrfCorruptionSpec extends AnyFunSuite with TimeLimits {
     // never to a crash (BloomFilter.deserialize → None, stats keep)
     import org.apache.spark.sql.sources.EqualTo
     val base = validFile("zlib")
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "corrupt-filt-")
+    val dir = graft.TestDirs.tmp("corrupt-filt-")
     val filt = Seq(EqualTo("id", 1234L))
     val clean = tryRead(base, dir, filt)
     assert(clean.isRight && clean.toOption.get >= 1L)
@@ -138,8 +136,7 @@ class DwrfCorruptionSpec extends AnyFunSuite with TimeLimits {
 
   test("every truncation point fails cleanly or reads a valid prefix") {
     val base = validFile("zlib")
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "corrupt-trunc-")
+    val dir = graft.TestDirs.tmp("corrupt-trunc-")
     val rnd = new scala.util.Random(0xBEEF)
     val cuts = (1 until 25).map(_ => 1 + rnd.nextInt(base.length - 1)).distinct
     cuts.foreach { cut =>
@@ -159,8 +156,7 @@ class DwrfCorruptionSpec extends AnyFunSuite with TimeLimits {
     // the valid file's postscript with one whose footerLength is 1 TB
     import graft.format.{MetaIO, PostScript, CompressionKind}
     val base = validFile("zlib")
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "corrupt-len-")
+    val dir = graft.TestDirs.tmp("corrupt-len-")
     val psLen = base(base.length - 1) & 0xff
     val body = java.util.Arrays.copyOf(base, base.length - 1 - psLen)
     val bos = new java.io.ByteArrayOutputStream()

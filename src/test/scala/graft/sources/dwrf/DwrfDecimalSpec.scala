@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,8 +14,7 @@ class DwrfDecimalSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  private def mkdir(): String = Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), "dwrf-dec-").toString
+  private def mkdir(): String = graft.TestDirs.tmp("dwrf-dec-").toString
 
   test("decimal columns round-trip exactly through both read paths") {
     val s = spark

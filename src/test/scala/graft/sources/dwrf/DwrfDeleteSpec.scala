@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,8 +14,7 @@ class DwrfDeleteSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  private def mkdir(): String = Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), "dwrf-delete-").toString
+  private def mkdir(): String = graft.TestDirs.tmp("dwrf-delete-").toString
 
   private def conf = DwrfUtil.sessionHadoopConf()
 

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -16,8 +15,7 @@ class DwrfDeltaSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   private def tmpDir(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-delta-").toString
+    graft.TestDirs.tmp("dwrf-delta-").toString
 
   private def seed(dir: String, n: Int, parts: Int): Unit = {
     val s = spark

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -19,8 +18,7 @@ class DwrfDvSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   private def tmpDir(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-dv-").toString
+    graft.TestDirs.tmp("dwrf-dv-").toString
 
   private def writeRange(dir: String, lo: Int, hi: Int,
       mode: String = "overwrite", parts: Int = 2): Unit = {

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,8 +14,7 @@ class DwrfFileMetaSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  private def mkdir(): String = Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), "dwrf-filemeta-").toString
+  private def mkdir(): String = graft.TestDirs.tmp("dwrf-filemeta-").toString
 
   test("_file names each row's data file; partitioned + multi-file correct") {
     val s = spark

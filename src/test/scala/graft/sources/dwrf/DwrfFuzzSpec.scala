@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import scala.util.Random
 
@@ -94,8 +93,7 @@ class DwrfFuzzSpec extends AnyFunSuite {
         // on unique-heavy string columns; default leaves it dormant
         "dictionary.abandon.bytes" ->
           Seq("1024", (32L * 1024 * 1024).toString)(rnd.nextInt(2)))
-      val dir = Files.createTempDirectory(
-        java.nio.file.Paths.get("/root/repo/target"), s"fuzz-$iter-").toString
+      val dir = graft.TestDirs.tmp(s"fuzz-$iter-").toString
       val w = df.write.format("dwrf").mode("overwrite")
       opts.foreach { case (k, v) => w.option(k, v) }
       w.save(dir)

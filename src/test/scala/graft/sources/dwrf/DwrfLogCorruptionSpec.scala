@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -21,8 +20,7 @@ class DwrfLogCorruptionSpec extends AnyFunSuite {
   private def stage(): (String, Path) = {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-logcorr-").toString
+    val dir = graft.TestDirs.tmp("dwrf-logcorr-").toString
     spark.range(0, 100, 1, 2).select($"id").write.format("dwrf")
       .mode("overwrite").save(dir)
     DwrfLog.enable(new Path(dir), conf)

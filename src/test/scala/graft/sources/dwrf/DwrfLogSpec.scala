@@ -16,8 +16,7 @@ class DwrfLogSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   private def tmpDir(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-log-").toString
+    graft.TestDirs.tmp("dwrf-log-").toString
 
   private def writeRange(dir: String, lo: Int, hi: Int, mode: String = "overwrite",
       parts: Int = 2): Unit = {

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -21,8 +20,7 @@ class DwrfLogStatsSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   private def tmpDir(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-lstats-").toString
+    graft.TestDirs.tmp("dwrf-lstats-").toString
 
   /** 8 range-disjoint files over id 0..799 (file k holds [k*100,(k+1)*100)). */
   private def writeRanged(dir: String): Unit =

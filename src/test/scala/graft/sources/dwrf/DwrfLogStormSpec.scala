@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileUtil, Path}
@@ -25,8 +24,7 @@ class DwrfLogStormSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   private def tmpDir(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-storm-").toString
+    graft.TestDirs.tmp("dwrf-storm-").toString
 
   private def writeRange(dir: String, n: Int, parts: Int): Unit = {
     val s = spark

@@ -121,8 +121,7 @@ class DwrfMemoryGovernorSpec extends AnyFunSuite {
       extra.foreach(DwrfMemoryGovernor.unregister)
       // the footer must show DIRECT encoding (dictionary abandoned) and
       // the file must read back every value intact
-      val dir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("/root/repo/target"), "dwrf-gov-")
+      val dir = graft.TestDirs.tmp("dwrf-gov-")
       val f = dir.resolve("t.dwrf")
       java.nio.file.Files.write(f, bos.toByteArray)
       val r = new DwrfFileReader(

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -16,8 +15,7 @@ class DwrfOptimizeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val conf = new Configuration()
 
-  private def tmpDir(): String = Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), "dwrf-opt-").toString
+  private def tmpDir(): String = graft.TestDirs.tmp("dwrf-opt-").toString
 
   /** An out-of-order table: ids shuffled across 6 files. */
   private def messyTable(dir: String, n: Int = 20000): Unit = {

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,8 +17,7 @@ class DwrfOverwriteSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private def conf = DwrfUtil.sessionHadoopConf()
 
-  private def mkdir(): String = Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), "dwrf-ovw-").toString
+  private def mkdir(): String = graft.TestDirs.tmp("dwrf-ovw-").toString
 
   private def files(dir: String): Map[String, (Long, Long)] =
     DwrfUtil.listDataFileStatuses(new Path(dir), conf)

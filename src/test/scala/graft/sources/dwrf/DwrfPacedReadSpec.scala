@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -16,8 +15,7 @@ class DwrfPacedReadSpec extends AnyFunSuite {
 
   private def writeFile(n: Int): String = {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-paced-").toString
+    val dir = graft.TestDirs.tmp("dwrf-paced-").toString
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("s", StringType)))
     val os = new java.io.FileOutputStream(s"$dir/t.dwrf")
@@ -74,8 +72,7 @@ class DwrfPacedReadSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(0xd1ce)
     for (codec <- Seq("zlib", "snappy", "zstd", "none")) {
       import org.apache.spark.sql.types._
-      val dir = Files.createTempDirectory(
-        java.nio.file.Paths.get("/root/repo/target"), "dwrf-paced-fuzz-").toString
+      val dir = graft.TestDirs.tmp("dwrf-paced-fuzz-").toString
       val schema = StructType(Seq(
         StructField("id", LongType), StructField("s", StringType)))
       val os = new java.io.FileOutputStream(s"$dir/t.dwrf")

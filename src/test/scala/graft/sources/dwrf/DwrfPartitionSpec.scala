@@ -17,8 +17,7 @@ class DwrfPartitionSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  private def tmp(prefix: String): String = Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), prefix).toString
+  private def tmp(prefix: String): String = graft.TestDirs.tmp(prefix).toString
 
   test("partitioned write lays out col=value dirs; reads splice columns back") {
     val dir = tmp("dwrf-part-")

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -17,8 +16,7 @@ class DwrfPushdownSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def writeSorted(stride: Int): String = {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-push-").toString
+    val dir = graft.TestDirs.tmp("dwrf-push-").toString
     // sorted ids 0..9999 in ONE file/partition => stride k holds [k*stride,(k+1)*stride)
     spark.range(0, 10000, 1, 1).select(
       col("id"),
@@ -124,8 +122,7 @@ class DwrfPushdownSpec extends AnyFunSuite {
   }
 
   test("nulls interact correctly with skipping") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-null-").toString
+    val dir = graft.TestDirs.tmp("dwrf-null-").toString
     spark.range(0, 4000, 1, 1).select(
       col("id"),
       when(col("id") < 2000, col("id") * 2).as("v"))
@@ -215,8 +212,7 @@ class DwrfPushdownSpec extends AnyFunSuite {
   test("stride skipping prunes I/O, not just decode (byte-range reads)") {
     // bigger file so per-stride byte ranges dominate fixed overheads;
     // NONE compression makes byte accounting deterministic
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-ioprune-").toString
+    val dir = graft.TestDirs.tmp("dwrf-ioprune-").toString
     spark.range(0, 100000, 1, 1).select(
       col("id"),
       format_string("%064d", col("id")).as("payload"))
@@ -254,8 +250,7 @@ class DwrfPushdownSpec extends AnyFunSuite {
   }
 
   test("array and map columns vectorize, including filtered stride-seek reads") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-nestedvec-").toString
+    val dir = graft.TestDirs.tmp("dwrf-nestedvec-").toString
     spark.range(0, 8000, 1, 1).select(
       col("id"),
       when(col("id") % 11 =!= 0,
@@ -285,8 +280,7 @@ class DwrfPushdownSpec extends AnyFunSuite {
     // 1 KB chunks + 10-byte varints: boundary-straddling RLE runs span
     // several chunks; the pruning slack must still cover their tails.
     // Large alternating values defeat delta runs => max-width literals.
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-slack-").toString
+    val dir = graft.TestDirs.tmp("dwrf-slack-").toString
     spark.range(0, 20000, 1, 1).select(
       col("id"),
       (when(col("id") % 2 === 0, lit(Long.MaxValue) - col("id") * 7)
@@ -315,8 +309,7 @@ class DwrfPushdownSpec extends AnyFunSuite {
   }
 
   test("nested struct-field predicates skip stripes and strides") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-nestpush-").toString
+    val dir = graft.TestDirs.tmp("dwrf-nestpush-").toString
     // st.ok = id*2, sorted => stride k holds st.ok in [2k*1000, 2(k+1)*1000)
     spark.range(0, 10000, 1, 1).select(
       col("id"),
@@ -370,8 +363,7 @@ class DwrfPushdownSpec extends AnyFunSuite {
   }
 
   test("A3: dictionary abandons mid-stripe for unique-heavy strings") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-abandon-").toString
+    val dir = graft.TestDirs.tmp("dwrf-abandon-").toString
     // 30k unique strings; abandon threshold crossed after ~1k rows (29 B
     // keys + 64 B/key bookkeeping > 64 KB), so the conversion fires
     // mid-stripe with stride markers recorded before AND after it

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.hadoop.fs.Path
@@ -24,10 +23,7 @@ class DwrfReaderFilterSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  private def tmp(prefix: String): String = {
-    Files.createDirectories(Paths.get("target"))
-    Files.createTempDirectory(Paths.get("target"), prefix).toAbsolutePath.toString
-  }
+  private def tmp(prefix: String): String = graft.TestDirs.tmp(prefix).toString
 
   private def filterExecs(df: DataFrame): Seq[FilterExec] = {
     df.collect()

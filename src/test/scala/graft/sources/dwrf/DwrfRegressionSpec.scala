@@ -17,8 +17,7 @@ class DwrfRegressionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def tmpDir(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-reg-").toString
+    graft.TestDirs.tmp("dwrf-reg-").toString
 
   test("nested struct subfield projection reads the right ordinal") {
     // With nestedSchemaPruning (default on) Catalyst hands the scan a

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,8 +29,7 @@ class DwrfRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
 
   private def tmpDir(): String = {
-    val d = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-test-").toString
+    val d = graft.TestDirs.tmp("dwrf-test-").toString
     d
   }
 

@@ -17,8 +17,7 @@ class DwrfRowLevelSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  private def mkdir(): String = Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), "dwrf-rlo-").toString
+  private def mkdir(): String = graft.TestDirs.tmp("dwrf-rlo-").toString
 
   private def conf = DwrfUtil.sessionHadoopConf()
 

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
@@ -16,8 +15,7 @@ class DwrfRuntimeFilterSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("runtime filters prune whole files via footer stats") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-rtf-").toString
+    val dir = graft.TestDirs.tmp("dwrf-rtf-").toString
     // 8 files, each holding a disjoint contiguous id range
     spark.range(0, 80000, 1, 1)
       .repartitionByRange(8, col("id"))

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -17,8 +16,7 @@ class DwrfSeekSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("rowsFrom(n) matches full scan at every probe offset") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "seek-").toString
+    val dir = graft.TestDirs.tmp("seek-").toString
     val n = 25000
     spark.range(0, n, 1, 1).select(
       col("id"),
@@ -62,8 +60,7 @@ class DwrfSeekSpec extends AnyFunSuite {
   }
 
   test("user metadata round trips through the DSv2 write") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "meta-").toString
+    val dir = graft.TestDirs.tmp("meta-").toString
     spark.range(0, 100).write.format("dwrf").mode("overwrite")
       .option("metadata.writer", "graft-test")
       .option("metadata.purpose", "unit")
@@ -77,8 +74,7 @@ class DwrfSeekSpec extends AnyFunSuite {
   }
 
   test("dictionary memory cap forces early stripe flush") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dictcap-").toString
+    val dir = graft.TestDirs.tmp("dictcap-").toString
     // unique-ish strings, tiny dictionary cap: writer must flush stripes
     // long before the 64 MB stripe budget
     spark.range(0, 20000, 1, 1)

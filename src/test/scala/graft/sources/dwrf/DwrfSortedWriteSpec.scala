@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -30,8 +29,7 @@ class DwrfSortedWriteSpec extends AnyFunSuite {
       concat(lit("v-"), col("id")).as("payload"))
   }
 
-  private def tmp(): String = Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), "dwrf-sorted-").toString
+  private def tmp(): String = graft.TestDirs.tmp("dwrf-sorted-").toString
 
   // order-sensitive (asserts file order == key order), so this one keeps
   // its own reader loop rather than DwrfUtil.surfacedRows' count

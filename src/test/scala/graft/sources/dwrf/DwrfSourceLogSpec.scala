@@ -13,8 +13,7 @@ class DwrfSourceLogSpec extends AnyFunSuite {
 
   private val conf = new Configuration()
 
-  private def mkdir(): Path = new Path(java.nio.file.Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), "srclog-").toString)
+  private def mkdir(): Path = new Path(graft.TestDirs.tmp("srclog-").toString)
 
   test("entries round-trip across restarts, including hostile path strings") {
     val dir = mkdir()

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,8 +12,7 @@ class DwrfSqlDdlSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  private def mkdir(): String = Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), "dwrf-ddl-").toString
+  private def mkdir(): String = graft.TestDirs.tmp("dwrf-ddl-").toString
 
   test("CREATE TABLE USING dwrf + INSERT INTO/OVERWRITE + SELECT") {
     val s = spark

@@ -17,8 +17,7 @@ class DwrfStreamRetentionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def mkdir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), prefix).toString
+    graft.TestDirs.tmp(prefix).toString
 
   /** Stage one single-part dwrf file into `dir` with a pinned mtime. */
   private def stageOne(dir: String, name: String, mtime: Long,

@@ -22,8 +22,7 @@ class DwrfStreamSourceSpec extends AnyFunSuite {
   test("partitioned landing dir streams partition-column VALUES, not nulls") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "streamsrcpart-").toString
+    val dir = graft.TestDirs.tmp("streamsrcpart-").toString
     // Hive-partitioned landing dir, as the partitioned streaming sink lays out
     Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "ds")
       .write.format("dwrf").partitionBy("ds").mode("overwrite").save(dir)
@@ -46,8 +45,7 @@ class DwrfStreamSourceSpec extends AnyFunSuite {
   test("widened files mid-stream flip to the row path and upcast correctly") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "streamwiden-").toString
+    val dir = graft.TestDirs.tmp("streamwiden-").toString
     def stageOne(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
       val tmp = s"$dir/tmp"
       df.coalesce(1).write.mode("overwrite").format("dwrf").save(tmp)
@@ -87,8 +85,7 @@ class DwrfStreamSourceSpec extends AnyFunSuite {
   test("landing dir drains epoch by epoch; stream == batch") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "streamsrc-").toString
+    val dir = graft.TestDirs.tmp("streamsrc-").toString
 
     // three arrival files with strictly increasing mtimes
     (0 until 3).foreach { i =>

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
@@ -24,8 +23,7 @@ class DwrfStreamingSinkSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "streamsink-").toString
+    val dir = graft.TestDirs.tmp("streamsink-").toString
     val stream = MemoryStream[(Long, String, Double)]
     val q = stream.toDF().toDF("id", "tag", "v")
       .writeStream
@@ -54,8 +52,7 @@ class DwrfStreamingSinkSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "streampart-").toString
+    val dir = graft.TestDirs.tmp("streampart-").toString
     val stream = MemoryStream[(Long, String)]
     stream.addData((1L, "a"), (2L, "b"), (3L, "a"))
     // .partitionBy is DROPPED by Spark for V2 path-based streaming sinks;
@@ -78,8 +75,7 @@ class DwrfStreamingSinkSpec extends AnyFunSuite {
   }
 
   test("uncommitted epoch files are invisible to a concurrent reader") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "streaminflight-").toString
+    val dir = graft.TestDirs.tmp("streaminflight-").toString
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType)))
@@ -105,8 +101,7 @@ class DwrfStreamingSinkSpec extends AnyFunSuite {
   }
 
   test("uncommitted PARTITIONED epoch files are invisible too") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "streaminflightpart-").toString
+    val dir = graft.TestDirs.tmp("streaminflightpart-").toString
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType),
@@ -137,8 +132,7 @@ class DwrfStreamingSinkSpec extends AnyFunSuite {
   test("replaying an epoch overwrites its file instead of duplicating") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "streamreplay-").toString
+    val dir = graft.TestDirs.tmp("streamreplay-").toString
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType)))
@@ -174,8 +168,7 @@ class DwrfStreamingSinkSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "streamsort-").toString
+    val dir = graft.TestDirs.tmp("streamsort-").toString
     val stream = MemoryStream[Long]
     val q = stream.toDF().toDF("raw")
       .selectExpr("pmod(raw * 2654435761, 1000) AS key") // scrambled

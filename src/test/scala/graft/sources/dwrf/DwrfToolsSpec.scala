@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -12,8 +11,7 @@ class DwrfToolsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), prefix).toString
+    graft.TestDirs.tmp(prefix).toString
 
   test("DwrfDump prints structure") {
     val dir = tmp("dump-")

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
@@ -16,8 +15,7 @@ class DwrfUnionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def tmpDir(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dwrf-union-").toString
+    graft.TestDirs.tmp("dwrf-union-").toString
 
   test("union with nested branches round trips exactly") {
     val dir = tmpDir()

@@ -14,8 +14,7 @@ class DwrfValidationSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("reading a directory without .dwrf files errors clearly") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "notdwrf-").toString
+    val dir = graft.TestDirs.tmp("notdwrf-").toString
     spark.range(0, 10).write.mode("overwrite").parquet(dir)
     val e = intercept[Exception] {
       spark.read.format("dwrf").load(dir).count()
@@ -24,8 +23,7 @@ class DwrfValidationSpec extends AnyFunSuite {
   }
 
   test("a non-GRFT file with .dwrf extension fails the magic check") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "badmagic-").toString
+    val dir = graft.TestDirs.tmp("badmagic-").toString
     val f = Paths.get(dir, "fake.dwrf")
     Files.write(f, Array.fill[Byte](4096)(42))
     val e = intercept[Exception] {
@@ -36,8 +34,7 @@ class DwrfValidationSpec extends AnyFunSuite {
   }
 
   test("a truncated file fails cleanly") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "trunc-").toString
+    val dir = graft.TestDirs.tmp("trunc-").toString
     spark.range(0, 1000).write.format("dwrf").mode("overwrite").save(dir)
     val file = DwrfUtil.listDataFiles(new Path(dir), new Configuration()).head
     val bytes = Files.readAllBytes(Paths.get(file.toUri))

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,8 +13,7 @@ class DwrfWriteMetricsSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  private def tmp(): String = Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), "dwrf-wmetrics-").toString
+  private def tmp(): String = graft.TestDirs.tmp("dwrf-wmetrics-").toString
 
   test("DwrfFileWriter accumulates encode/flush/compress counters") {
     import org.apache.spark.sql.types._

@@ -1,6 +1,6 @@
 package graft.sources.dwrf
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -59,7 +59,7 @@ class EncodingIntervalSpec extends AnyFunSuite {
   }
 
   private def withReader[T](bytes: Array[Byte])(f: DwrfFileReader => T): T = {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "encint-")
+    val dir = graft.TestDirs.tmp("encint-")
     val p = dir.resolve("t.dwrf")
     Files.write(p, bytes)
     val r = new DwrfFileReader(new Path(p.toString), new Configuration())

@@ -18,8 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GoldenDumpSpec extends AnyFunSuite {
 
-  private val fixturePath = Paths.get(
-    "/root/repo/src/test/resources/golden/dwrf-dump-21000.txt")
+  private val fixturePath = Paths.get("src/test/resources/golden/dwrf-dump-21000.txt")
 
   test("structural dump matches committed golden fixture") {
     val spark = TestSpark.spark
@@ -35,7 +34,7 @@ class GoldenDumpSpec extends AnyFunSuite {
     val rows = (0 until 21000).map { i =>
       (rnd1.nextInt(), rnd2.nextLong(), words(i % words.length))
     }
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "golden-").toString
+    val dir = graft.TestDirs.tmp("golden-").toString
     rows.toDF("i", "l", "s").coalesce(1)
       .write.format("dwrf").mode("overwrite")
       .option("compress", "SNAPPY")

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -18,8 +17,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.graftcat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), "graft-cat-").toString
+  private lazy val warehouse = graft.TestDirs.tmp("graft-cat-").toString
   private val conf = new Configuration()
 
   test("namespace + table CRUD with INSERT/SELECT through the catalog") {

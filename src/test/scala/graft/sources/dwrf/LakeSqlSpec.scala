@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -18,8 +17,7 @@ class LakeSqlSpec extends AnyFunSuite {
   private def stageLogTable(): String = {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "lakesql-").toString
+    val dir = graft.TestDirs.tmp("lakesql-").toString
     spark.range(0, 1000, 1, 4)
       .select($"id", ($"id" % 7).as("grp"))
       .write.format("dwrf").mode("overwrite").save(dir)
@@ -88,8 +86,7 @@ class LakeSqlSpec extends AnyFunSuite {
     // a partitioned plain directory (no log): version -1, columns named
     val s = spark
     import s.implicits._
-    val pdir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "lakesql-part-").toString
+    val pdir = graft.TestDirs.tmp("lakesql-part-").toString
     spark.range(0, 100).select($"id", ($"id" % 3).cast("int").as("grp"))
       .write.format("dwrf").partitionBy("grp").mode("overwrite").save(pdir)
     val p = spark.sql(s"DESCRIBE DETAIL '$pdir'").collect().head

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
@@ -23,8 +22,7 @@ class NestedBulkSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def roundTrip(df: DataFrame, opts: Map[String, String] = Map.empty): DataFrame = {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "nestedbulk-").toString
+    val dir = graft.TestDirs.tmp("nestedbulk-").toString
     val w = df.write.format("dwrf").mode("overwrite")
       .option("row.index.stride", "1000")
     opts.foreach { case (k, v) => w.option(k, v) }

@@ -1,6 +1,5 @@
 package graft.sources.dwrf
 
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -29,8 +28,7 @@ class StrideDictSpec extends AnyFunSuite {
   }
 
   test("singletons go to stride dictionaries; global dictionary shrinks") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "stridedict-").toString
+    val dir = graft.TestDirs.tmp("stridedict-").toString
     mixedDf(8000).write.format("dwrf").mode("overwrite")
       .option("row.index.stride", "1000")
       .option("entropy.string.threshold", "10").save(dir)
@@ -51,8 +49,7 @@ class StrideDictSpec extends AnyFunSuite {
   }
 
   test("round trip exact through both scan paths") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "stridedict-rt-").toString
+    val dir = graft.TestDirs.tmp("stridedict-rt-").toString
     val df = mixedDf(8000)
     df.write.format("dwrf").mode("overwrite")
       .option("row.index.stride", "1000")
@@ -73,8 +70,7 @@ class StrideDictSpec extends AnyFunSuite {
   }
 
   test("stride-seek reads resolve side-dictionary values correctly") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "stridedict-seek-").toString
+    val dir = graft.TestDirs.tmp("stridedict-seek-").toString
     mixedDf(8000).write.format("dwrf").mode("overwrite")
       .option("row.index.stride", "1000")
       .option("entropy.string.threshold", "10").save(dir)
@@ -99,8 +95,7 @@ class StrideDictSpec extends AnyFunSuite {
   }
 
   test("nested strings get stride dictionaries too (E8 parity)") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "stridedict-nested-").toString
+    val dir = graft.TestDirs.tmp("stridedict-nested-").toString
     // struct-nested AND array-nested string columns with the mixed
     // hot/singleton shape; parent nulls make value position != row
     // position, which the flat (stride-major) side-dictionary id space
@@ -153,8 +148,7 @@ class StrideDictSpec extends AnyFunSuite {
   }
 
   test("unsorted dictionary mode round trips") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "unsorted-").toString
+    val dir = graft.TestDirs.tmp("unsorted-").toString
     val df = mixedDf(4000)
     df.write.format("dwrf").mode("overwrite")
       .option("dictionary.sort.keys", "false")
@@ -164,8 +158,7 @@ class StrideDictSpec extends AnyFunSuite {
   }
 
   test("disabled via option: single global dictionary again") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "stridedict-off-").toString
+    val dir = graft.TestDirs.tmp("stridedict-off-").toString
     mixedDf(4000).write.format("dwrf").mode("overwrite")
       .option("row.index.stride", "1000")
       .option("use.stride.dictionaries", "false")

@@ -3,7 +3,7 @@
 
     python3 tools/perf_pairs.py --parent DIR --change DIR --workload scan \
         --seeds 111-116,131-134 [--seconds 3] [--trace 0|1] \
-        [--keep DIR] [--out pairs.json]
+        [--keep DIR [--by-kind]] [--out pairs.json]
 
 Runs `python3 perfbench/run.py --workload W --seed N --seconds S --trace T`
 once in each checkout per seed, the parent first on even pairs and the
@@ -19,6 +19,9 @@ direction in BENCHMARK.json), whether the median gap exceeds the parent's
 inter-quartile range, and, for end-to-end metrics, whether the change's
 median is worse than the parent's by more than the metric's `bound`.
 `--keep DIR` keeps each run's full report under DIR/<side>-<seed>/;
+with `--by-kind` it also prints, per op kind (per query of `pipeline`),
+each side's median of the kept reports' `op_p50_ms_by_kind`, so an
+untraced set of pairs shows which ops moved and that the others did not.
 `--out` writes every run's metrics as JSON. The tool reads BENCHMARK.json
 and changes nothing in either checkout.
 """
@@ -77,8 +80,12 @@ def main():
     ap.add_argument("--seconds", type=float, default=3)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--keep", help="keep each run's report under this directory")
+    ap.add_argument("--by-kind", action="store_true",
+                    help="with --keep: print both sides' median p50 per op kind")
     ap.add_argument("--out", help="write every run's metrics to this JSON file")
     args = ap.parse_args()
+    if args.by_kind and not args.keep:
+        ap.error("--by-kind reads the kept reports: it needs --keep")
 
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
                            "BENCHMARK.json")) as fh:
@@ -122,6 +129,32 @@ def main():
         print(f"{name:<34} {pm:>12.4g} [{p1:.4g}, {p3:.4g}]".ljust(65) +
               f" {cm:>12.4g} [{c1:.4g}, {c3:.4g}]".ljust(31) +
               f" {delta:>+8.1%} {wins:>3}/{n:<2} {'yes' if beyond_iqr else 'no':>5} {verdict:>8}")
+    if args.by_kind:
+        print_by_kind(args, runs)
+
+
+def kept_p50_by_kind(keep, workload, side, seed):
+    with open(os.path.join(keep, f"{side}-{seed}", f"{workload}-report.json")) as fh:
+        return json.load(fh)["op_p50_ms_by_kind"]
+
+
+def print_by_kind(args, runs):
+    """Median over each side's kept reports of the per-kind p50 (ms), with
+    the pairs in which the change's p50 was lower."""
+    per = {side: [kept_p50_by_kind(args.keep, args.workload, side, r["seed"])
+                  for r in runs[side]] for side in runs}
+    n = len(per["parent"])
+    print(f"\nop_p50_ms by kind, median of {n} runs per side")
+    print(f"{'kind':<34} {'parent':>10} {'change':>10} {'delta':>8} {'lower':>6}")
+    for kind in sorted(set().union(*per["parent"], *per["change"])):
+        pv = [r[kind] for r in per["parent"] if kind in r]
+        cv = [r[kind] for r in per["change"] if kind in r]
+        if not pv or not cv:
+            continue
+        pm, cm = statistics.median(pv), statistics.median(cv)
+        lower = sum(c < p for p, c in zip(pv, cv))
+        print(f"{kind:<34} {pm:>10.1f} {cm:>10.1f} {(cm - pm) / pm:>+8.1%} "
+              f"{lower:>3}/{min(len(pv), len(cv)):<2}")
 
 
 if __name__ == "__main__":
