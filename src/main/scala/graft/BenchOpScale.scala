@@ -891,7 +891,7 @@ object BenchOpScale {
     // of the bytes a full-width read does — the projection-pushdown
     // contract that makes a 100 TB feature-store scan pay for what it
     // SELECTs, not for the table width. Byte accounting is exact (the
-    // reader's own pread counter on the row path), the DataFrame-path
+    // reader's own pread counter under `rows`), the DataFrame-path
     // timing contrast rides the same files.
     if (sec("wide")) {
       import org.apache.hadoop.fs.Path

@@ -7,34 +7,17 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.format._
 
-/** Vectorized scan path: decodes stripes straight into Spark
+/** The dwrf read path: decodes stripes straight into Spark
   * `OnHeapColumnVector`s in 4096-row batches, bypassing per-row boxing
   * entirely. EVERY type vectorizes (atomics, structs, arrays, maps,
-  * recursively), with or without pushed filters — filtered scans apply
-  * the same stripe/stride stats skipping as the row path, seeking the
-  * decoders past skipped stride runs. The reference is row-at-a-time
-  * everywhere (SURVEY §4 "vectorization: none") — this is where the
-  * Spark build overtakes it. The row path remains for point reads
-  * (rowsFrom) and tools.
+  * recursively), with or without pushed filters; filtered scans seek the
+  * decoders past the stride runs stats skipping refutes. The reference is
+  * row-at-a-time everywhere (SURVEY §4 "vectorization: none"). Every
+  * scan, point read and tool decodes through these vectors: row readers
+  * ([[DwrfFileReader.rows]]) are an adapter over the batches.
+  *
+  * A `VectorDecoder` fills one column's vectors from a stripe's streams.
   */
-object ColumnarSupport {
-  def supported(schema: StructType): Boolean =
-    schema.fields.nonEmpty && schema.fields.forall(f => supportedType(f.dataType))
-
-  /** Every type vectorizes: atomics, structs, arrays, maps — recursively. */
-  private def supportedType(dt: DataType): Boolean = dt match {
-    case BooleanType | ByteType | ShortType | IntegerType | LongType |
-         FloatType | DoubleType | StringType | BinaryType |
-         TimestampType | TimestampNTZType | DateType => true
-    case d: DecimalType if d.precision <= 18 => true
-    case s: StructType => s.fields.forall(f => supportedType(f.dataType))
-    case a: ArrayType => supportedType(a.elementType)
-    case m: MapType => supportedType(m.keyType) && supportedType(m.valueType)
-    case _ => false
-  }
-}
-
-/** Per-column vector filler over the stripe's streams. */
 abstract class VectorDecoder(val columnId: Int) {
   protected var present: BitFieldReader = null
 
@@ -46,9 +29,8 @@ abstract class VectorDecoder(val columnId: Int) {
 
   protected def startValues(src: StreamSource): Unit
 
-  /** Seek to a row-index stride (mirrors TreeReader.seekTree): used by the
-    * columnar path to emit batches only from strides that survive stats
-    * skipping.
+  /** Seek this subtree to a row-index stride, so batches decode only
+    * the strides that survive stats skipping.
     */
   final def seekStride(entries: Map[Int, RowIndexEntry]): Unit = {
     entries.get(columnId).foreach { e =>
@@ -141,25 +123,39 @@ abstract class VectorDecoder(val columnId: Int) {
 }
 
 object VectorDecoder {
-  def create(columnId: Int, dt: DataType): VectorDecoder = dt match {
-    case BooleanType => new BoolVectorDecoder(columnId)
-    case ByteType => new ByteVectorDecoder(columnId)
-    case ShortType | IntegerType | LongType => new LongVectorDecoder(columnId, dt)
-    // short decimals decode through the long kernels; the vector stores
-    // unscaled ints (p <= 9) or longs, Spark's own decimal vector layout
-    case d: DecimalType if d.precision <= 18 => new LongVectorDecoder(columnId, d)
-    case DateType => new DateVectorDecoder(columnId)
-    case FloatType => new FloatVectorDecoder(columnId)
-    case DoubleType => new DoubleVectorDecoder(columnId)
-    case StringType => new StringVectorDecoder(columnId)
-    case BinaryType => new BinaryVectorDecoder(columnId)
-    case TimestampType | TimestampNTZType => new TimestampVectorDecoder(columnId)
-    case s: StructType => new StructVectorDecoder(columnId, s)
-    case a: ArrayType => new ListVectorDecoder(columnId, a)
-    case m: MapType => new MapVectorDecoder(columnId, m)
-    case other =>
-      throw new UnsupportedOperationException(s"columnar: unsupported $other")
-  }
+  /** A decoder of column `columnId`, written as `fileType`, into vectors
+    * of `readType`: the same type or, for a file of an older generation,
+    * a widening of it ([[TypeWidening.widen]]). Values decode by the
+    * file's type and store by the read type, at any nesting depth; any
+    * other pair fails here, before a row is decoded.
+    */
+  def create(columnId: Int, fileType: DataType, readType: DataType): VectorDecoder =
+    (fileType, readType) match {
+      case (s: StructType, r: StructType) if s.length == r.length =>
+        new StructVectorDecoder(columnId, s, r)
+      case (a: ArrayType, r: ArrayType) => new ListVectorDecoder(columnId, a, r)
+      case (m: MapType, r: MapType) => new MapVectorDecoder(columnId, m, r)
+      case _ if fileType == readType ||
+          TypeWidening.widen(fileType, readType).contains(readType) =>
+        fileType match {
+          case BooleanType => new BoolVectorDecoder(columnId)
+          case ByteType => new ByteVectorDecoder(columnId, readType)
+          case ShortType | IntegerType | LongType => new LongVectorDecoder(columnId, readType)
+          // short decimals decode through the long kernels; the vector stores
+          // unscaled ints (p <= 9) or longs, Spark's own decimal vector layout
+          case d: DecimalType if d.precision <= 18 => new LongVectorDecoder(columnId, d)
+          case DateType => new DateVectorDecoder(columnId)
+          case FloatType => new FloatVectorDecoder(columnId, readType)
+          case DoubleType => new DoubleVectorDecoder(columnId)
+          case StringType => new StringVectorDecoder(columnId)
+          case BinaryType => new BinaryVectorDecoder(columnId)
+          case TimestampType | TimestampNTZType => new TimestampVectorDecoder(columnId)
+          case other =>
+            throw new UnsupportedOperationException(s"dwrf: unsupported type $other")
+        }
+      case _ => throw new IllegalArgumentException(
+        s"dwrf: cannot read ${fileType.simpleString} as ${readType.simpleString}")
+    }
 }
 
 private[dwrf] object VectorUtil {
@@ -256,9 +252,10 @@ private[dwrf] object VectorUtil {
   * column with running batch-local offsets (putArray bookkeeping). A null
   * array row consumes no length and no elements, matching the writer.
   */
-final class ListVectorDecoder(c: Int, at: ArrayType) extends VectorDecoder(c) {
+final class ListVectorDecoder(c: Int, at: ArrayType, readType: ArrayType)
+    extends VectorDecoder(c) {
   private var lengths: RunLengthIntegerReader = null
-  private val elem = VectorDecoder.create(c + 1, at.elementType)
+  private val elem = VectorDecoder.create(c + 1, at.elementType, readType.elementType)
   private var elemCount = 0
 
   override def decoderChildren: Seq[VectorDecoder] = Seq(elem)
@@ -338,11 +335,12 @@ final class ListVectorDecoder(c: Int, at: ArrayType) extends VectorDecoder(c) {
 }
 
 /** Map: LENGTH stream + key/value children sharing the array offsets. */
-final class MapVectorDecoder(c: Int, mt: MapType) extends VectorDecoder(c) {
+final class MapVectorDecoder(c: Int, mt: MapType, readType: MapType)
+    extends VectorDecoder(c) {
   private var lengths: RunLengthIntegerReader = null
-  private val key = VectorDecoder.create(c + 1, mt.keyType)
+  private val key = VectorDecoder.create(c + 1, mt.keyType, readType.keyType)
   private val value = VectorDecoder.create(
-    c + 1 + ColumnTree.subtreeSize(mt.keyType), mt.valueType)
+    c + 1 + ColumnTree.subtreeSize(mt.keyType), mt.valueType, readType.valueType)
   private var entryCount = 0
 
   override def decoderChildren: Seq[VectorDecoder] = Seq(key, value)
@@ -439,11 +437,12 @@ final class NullVectorDecoder extends VectorDecoder(-1) {
   * vector's child columns. A null struct row consumes no child values
   * (matching the writers, which only write children of non-null parents).
   */
-final class StructVectorDecoder(c: Int, st: StructType) extends VectorDecoder(c) {
+final class StructVectorDecoder(c: Int, st: StructType, readType: StructType)
+    extends VectorDecoder(c) {
   private val children: Array[VectorDecoder] = {
     var id = c + 1
-    st.fields.map { f =>
-      val d = VectorDecoder.create(id, f.dataType)
+    st.fields.zip(readType.fields).map { case (f, r) =>
+      val d = VectorDecoder.create(id, f.dataType, r.dataType)
       id += ColumnTree.subtreeSize(f.dataType)
       d
     }
@@ -512,18 +511,30 @@ final class BoolVectorDecoder(c: Int) extends VectorDecoder(c) {
     e.positions.get(StreamKind.Data).foreach(p => data.seek(new ArrayPositionProvider(p)))
 }
 
-final class ByteVectorDecoder(c: Int) extends VectorDecoder(c) {
+/** Bytes, stored by the read type: a byte, or a short, int or long for
+  * a column a later file generation widened. */
+final class ByteVectorDecoder(c: Int, readType: DataType) extends VectorDecoder(c) {
   private var data: RunLengthByteReader = null
   private var scratch: Array[Byte] = null
+  private val putter: (OnHeapColumnVector, Int, Byte) => Unit = readType match {
+    case ByteType => (v, i, x) => v.putByte(i, x)
+    case ShortType => (v, i, x) => v.putShort(i, x)
+    case IntegerType => (v, i, x) => v.putInt(i, x)
+    case _ => (v, i, x) => v.putLong(i, x)
+  }
   override protected def startValues(src: StreamSource): Unit =
     data = src.stream(c, StreamKind.Data).map(new RunLengthByteReader(_)).orNull
   override protected def put(v: OnHeapColumnVector, i: Int): Unit =
-    v.putByte(i, data.next())
+    putter(v, i, data.next())
   override protected def fillBulk(v: OnHeapColumnVector, n: Int): Boolean = {
     if (data == null) return false
     if (scratch == null || scratch.length < n) scratch = new Array[Byte](n)
     data.nextBytes(scratch, 0, n)
-    v.putBytes(0, n, scratch, 0)
+    if (readType == ByteType) v.putBytes(0, n, scratch, 0)
+    else {
+      var i = 0
+      while (i < n) { putter(v, i, scratch(i)); i += 1 }
+    }
     true
   }
   override protected def fillBulkNullable(v: OnHeapColumnVector, n: Int): Boolean = {
@@ -534,7 +545,7 @@ final class ByteVectorDecoder(c: Int) extends VectorDecoder(c) {
     var i = 0
     var j = 0
     while (i < n) {
-      if (presentScratch(i)) { v.putByte(i, scratch(j)); j += 1 }
+      if (presentScratch(i)) { putter(v, i, scratch(j)); j += 1 }
       i += 1
     }
     true
@@ -669,18 +680,28 @@ private[dwrf] object BulkBytes {
   }
 }
 
-final class FloatVectorDecoder(c: Int) extends VectorDecoder(c) {
+/** Floats, stored as floats, or as doubles for a column a later file
+  * generation widened. */
+final class FloatVectorDecoder(c: Int, readType: DataType) extends VectorDecoder(c) {
+  private val asDouble = readType == DoubleType
   private var data: InStream = null
   private var scratch: Array[Byte] = null
   override protected def startValues(src: StreamSource): Unit =
     data = src.stream(c, StreamKind.Data).orNull
+  private def putValue(v: OnHeapColumnVector, i: Int, x: Float): Unit =
+    if (asDouble) v.putDouble(i, x) else v.putFloat(i, x)
   override protected def put(v: OnHeapColumnVector, i: Int): Unit =
-    v.putFloat(i, Serialization.readFloat(data))
+    putValue(v, i, Serialization.readFloat(data))
   override protected def fillBulk(v: OnHeapColumnVector, n: Int): Boolean = {
     if (data == null) return false
     if (scratch == null || scratch.length < n * 4) scratch = new Array[Byte](n * 4)
     BulkBytes.readFully(data, scratch, n * 4)
-    v.putFloats(0, n, scratch, 0) // wire is IEEE-LE, exactly putFloats' layout
+    if (!asDouble) v.putFloats(0, n, scratch, 0) // wire is IEEE-LE, exactly putFloats' layout
+    else {
+      val bb = java.nio.ByteBuffer.wrap(scratch).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      var i = 0
+      while (i < n) { v.putDouble(i, bb.getFloat(i * 4)); i += 1 }
+    }
     true
   }
   override protected def fillBulkNullable(v: OnHeapColumnVector, n: Int): Boolean = {
@@ -692,7 +713,7 @@ final class FloatVectorDecoder(c: Int) extends VectorDecoder(c) {
     var i = 0
     var j = 0
     while (i < n) {
-      if (presentScratch(i)) { v.putFloat(i, bb.getFloat(j * 4)); j += 1 }
+      if (presentScratch(i)) { putValue(v, i, bb.getFloat(j * 4)); j += 1 }
       i += 1
     }
     true
@@ -1026,33 +1047,84 @@ final class TimestampVectorDecoder(c: Int) extends VectorDecoder(c) {
   }
 }
 
-/** PartitionReader producing ColumnarBatches over the partition's stripes.
-  *
-  * Pushed `filters` drive the SAME stripe- and stride-level stats skipping
-  * as the row path (reference intent: RecordReaderImpl.java:281-430 lazy
-  * materialization): surviving strides are grouped into contiguous runs,
-  * decoders seek once per run, and batches are emitted run-local so a
-  * skipped stride is never decoded.
-  *
-  * `exact` filters (those [[ExactFilter.owned]] accepts, which Spark no
-  * longer re-evaluates) are then decided per batch by the vectorized
-  * evaluator: a batch whose every row matches passes through as is, one
-  * with no match is never emitted, and the rest are compacted in place
-  * ([[VectorUtil.compact]]) to hold only the matching rows — Spark always
-  * sees the decoders' own `OnHeapColumnVector`s.
-  * `readSchema` may end with predicate-only columns: decoded for the
-  * filter, they stay out of the first `outputWidth` output columns.
+/** `_pos`: each row's physical position in its file, counting from
+  * `first`, the position of the batch's first row. */
+final class PositionVectorDecoder extends VectorDecoder(-1) {
+  var first = 0L
+  override protected def startValues(src: StreamSource): Unit = ()
+  override protected def seekValues(e: RowIndexEntry): Unit = ()
+  override protected def put(v: OnHeapColumnVector, i: Int): Unit =
+    v.putLong(i, first + i)
+}
+
+/** Physical row positions that select rows of one file: a delete vector
+  * drops the listed positions (`keep` false), a change-feed delta keeps
+  * only them (`keep` true). `positions` ascend strictly; batches must be
+  * applied in file order.
   */
-final class DwrfColumnarPartitionReader(
+final class PositionMask(positions: Array[Long], keep: Boolean) {
+  /** The first listed position at or after the last batch's first row. */
+  private var next = 0
+
+  /** Sets the result of every row of the batch `[first, first + n)` that
+    * the mask drops to F. */
+  def apply(results: Array[Byte], first: Long, n: Int): Unit = {
+    val at = java.util.Arrays.binarySearch(positions, next, positions.length, first)
+    next = if (at >= 0) at else -(at + 1)
+    var j = next
+    if (keep) {
+      var i = 0
+      while (i < n) {
+        if (j < positions.length && positions(j) == first + i) j += 1
+        else results(i) = ExactFilter.F
+        i += 1
+      }
+    } else {
+      while (j < positions.length && positions(j) < first + n) {
+        results((positions(j) - first).toInt) = ExactFilter.F
+        j += 1
+      }
+    }
+  }
+}
+
+/** The batches of `readSchema` decoded from `stripes` of one file (made
+  * by [[DwrfFileReader.batches]]), 4096 rows at most; every batch refills
+  * the same vectors.
+  *
+  * Pushed `filters` drive the stripe and stride skipping of
+  * [[DwrfFileReader.segments]] (reference intent:
+  * RecordReaderImpl.java:281-430 lazy materialization): decoders seek
+  * once per run of surviving strides, so a skipped stride is never
+  * decoded.
+  *
+  * Rows are then kept per batch by the `exact` filters (those
+  * [[ExactFilter.owned]] accepts, which Spark no longer re-evaluates,
+  * decided by the vectorized evaluator), by the position `mask` and by
+  * `from`, the first file row wanted: a batch whose every row is kept
+  * passes through as is, one with none kept is never emitted, and the
+  * rest are compacted in place ([[VectorUtil.compact]]) to hold only the
+  * kept rows — Spark always sees the decoders' own `OnHeapColumnVector`s.
+  * `partValues` name constant columns; with `withPos` the `_pos` column
+  * holds each row's physical position in the file. `readSchema` may end
+  * with predicate-only columns: decoded for the filter, they stay out of
+  * the first `outputWidth` output columns. An empty output yields
+  * zero-column batches that carry only their row count.
+  */
+final class DwrfBatches(
     reader: DwrfFileReader,
     stripes: Seq[StripeInformation],
     readSchema: StructType,
-    filters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
-    batchSize: Int = 4096,
-    partValues: Map[String, Any] = Map.empty,
-    exact: Seq[org.apache.spark.sql.sources.Filter] = Nil,
-    outputWidth: Int = -1)
-    extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
+    filters: Seq[org.apache.spark.sql.sources.Filter],
+    exact: Seq[org.apache.spark.sql.sources.Filter],
+    partValues: Map[String, Any],
+    outputWidth: Int,
+    withPos: Boolean,
+    mask: PositionMask,
+    from: Long)
+    extends Iterator[ColumnarBatch] with AutoCloseable {
+
+  private final val batchSize = 4096
 
   private val vectors: Array[OnHeapColumnVector] =
     OnHeapColumnVector.allocateColumns(batchSize, readSchema)
@@ -1060,15 +1132,13 @@ final class DwrfColumnarPartitionReader(
   private val batch = new ColumnarBatch(
     vectors.take(width).toArray[org.apache.spark.sql.vectorized.ColumnVector])
 
-  private val idByName = {
-    val ids = ColumnTree.topLevelIds(reader.schema)
-    reader.schema.fields.map(_.name).zip(ids.zip(reader.schema.fields.map(_.dataType))).toMap
-  }
+  private val positions = new PositionVectorDecoder
   private val decoders: Array[VectorDecoder] = readSchema.fields.map { f =>
     if (partValues.contains(f.name)) // partition column: constant fill
       new ConstantVectorDecoder(partValues(f.name), f.dataType)
-    else ColumnAliases.resolve(f, idByName) match {
-      case Some((id, dt)) => VectorDecoder.create(id, dt)
+    else if (withPos && f.name == DwrfUtil.PosMetaColumn) positions
+    else ColumnAliases.resolve(f, reader.idByName) match {
+      case Some((id, dt)) => VectorDecoder.create(id, dt, f.dataType)
       case None => new NullVectorDecoder // schema evolution: all-null
     }
   }
@@ -1092,112 +1162,62 @@ final class DwrfColumnarPartitionReader(
   private val wanted: Array[Boolean] = {
     val inc = new Array[Boolean](ColumnTree.columnCount(reader.schema))
     readSchema.fields.foreach { f =>
-      ColumnAliases.resolve(f, idByName).foreach { case (id, dt) =>
+      ColumnAliases.resolve(f, reader.idByName).foreach { case (id, dt) =>
         ColumnTree.includeSubtree(inc, id, dt)
       }
     }
     inc
   }
 
-  /** A maximal run of contiguous surviving strides: seek to `entries`
-    * (None = stripe start, no seek needed), then `rows` rows are valid.
-    * Plain class (never pattern-matched): a nested case class would
-    * synthesize an equals whose outer-instance type test scalac rightly
-    * warns cannot be checked. */
-  private final class Segment(
-      val entries: Option[Map[Int, RowIndexEntry]], val rows: Long)
+  private val segments: Iterator[Segment] =
+    if (refuted) Iterator.empty
+    else reader.segments(stripes, filters, wanted, from)(src => decoders.foreach(_.start(src)))
+  /** Rows left in the current segment. */
+  private var remaining = 0L
+  /** Physical position in the file of the next row decoded. */
+  private var pos = 0L
+  private var ready = false
 
-  private val stripeIt = stripes.iterator
-  private var segments: Iterator[Segment] = Iterator.empty
-  private var remainingInSegment = 0L
-
-  /** Advance to the next stripe with any surviving rows; fills `segments`.
-    * Returns false when stripes are exhausted.
-    */
-  private def advanceStripe(): Boolean = {
-    while (stripeIt.hasNext) {
-      val si = stripeIt.next()
-      val sf = reader.readStripeFooter(si)
-      def stripeStatsOf(attr: String): Option[ColumnStats] =
-        reader.statIdByPath.get(attr).flatMap { case (id, _) => sf.stats.get(id) }
-      if (filters.nonEmpty && !StatsFilter.mayMatch(filters, reader.schema, stripeStatsOf)) {
-        reader.counters.stripesSkipped += 1
-      } else {
-        val stride = reader.footer.rowIndexStride
-        def fullRead(): Boolean = {
-          reader.counters.stripesRead += 1
-          val src = reader.openStripe(si, sf, wanted)
-          decoders.foreach(_.start(src))
-          segments = Iterator(new Segment(None, si.numRows))
-          true
-        }
-        if (filters.isEmpty || stride <= 0 || si.numRows <= stride) return fullRead()
-        val wantedIds = wanted.indices.filter(wanted).toSet
-        val indexes = reader.readRowIndexes(si, sf, wantedIds)
-        val numStrides = ((si.numRows + stride - 1) / stride).toInt
-        if (indexes.isEmpty || indexes.values.exists(_.length != numStrides))
-          return fullRead()
-        def strideStatsOf(k: Int)(attr: String): Option[ColumnStats] =
-          reader.statIdByPath.get(attr).flatMap { case (id, _) =>
-            indexes.get(id).map(_(k).stats)
-          }
-        val statsMatching = (0 until numStrides)
-          .filter(k => StatsFilter.mayMatch(filters, reader.schema, strideStatsOf(k)))
-        reader.counters.stridesSkipped += numStrides - statsMatching.length
-        // equality/IN conjuncts get a second, bloom-backed refutation pass
-        val matching =
-          reader.bloomRefineStrides(si, sf, filters, numStrides, statsMatching)
-        if (matching.isEmpty) {
-          reader.counters.stripesSkipped += 1 // all strides eliminated
-        } else if (matching.length == numStrides) {
-          return fullRead()
-        } else {
-          reader.counters.stripesRead += 1
-          val runs = reader.runsOf(matching)
-          // stride-granular I/O pruning: only byte ranges covering the
-          // surviving runs are read (see openStripe)
-          val src = reader.openStripe(si, sf, wanted,
-            Some(StrideSelection(indexes, runs, numStrides)))
-          decoders.foreach(_.start(src))
-          segments = runs.iterator.map { case (a, b) =>
-            val base = a.toLong * stride
-            val rows = math.min(b.toLong * stride, si.numRows) - base
-            new Segment(Some(indexes.map { case (id, es) => id -> es(a) }), rows)
-          }
-          return true
-        }
-      }
-    }
-    false
-  }
-
-  // hoisted once: the reader runs on one task thread by Spark's contract
+  // hoisted once: a reader runs on one task thread by Spark's contract
   private val prof = graft.format.ReadProfile.get
 
-  override def next(): Boolean = {
+  override def hasNext: Boolean = {
+    if (!ready) ready = advance()
+    ready
+  }
+
+  override def next(): ColumnarBatch = {
+    if (!hasNext) throw new NoSuchElementException("dwrf: no more batches")
+    ready = false
+    batch
+  }
+
+  /** Decodes until a batch keeps a row; false at the end of the stripes. */
+  private def advance(): Boolean = {
     // bracket the decompress profile so interleaved readers in one task
     // thread (SPJ) attribute their own nanos, never each other's
     val d0 = prof.decompressNanos
     try {
-      if (refuted) return false
       while (true) {
-        while (remainingInSegment == 0) {
-          if (segments.hasNext) {
-            val seg = segments.next()
-            seg.entries.foreach(e => decoders.foreach(_.seekStride(e)))
-            remainingInSegment = seg.rows
-          } else if (!advanceStripe()) return false
+        while (remaining == 0) {
+          if (!segments.hasNext) return false
+          val seg = segments.next()
+          seg.entries.foreach(e => decoders.foreach(_.seekStride(e)))
+          remaining = seg.rows
+          pos = seg.firstRow
         }
-        val n = math.min(batchSize.toLong, remainingInSegment).toInt
+        val n = math.min(batchSize.toLong, remaining).toInt
+        positions.first = pos
         var i = 0
         while (i < vectors.length) {
           vectors(i).reset()
           decoders(i).fill(vectors(i), n)
           i += 1
         }
-        remainingInSegment -= n
+        remaining -= n
         reader.counters.rowsDecoded += n
-        val kept = if (predicate == null) n else filterBatch(n)
+        val kept = if (predicate == null && mask == null && pos >= from) n else filterBatch(n)
+        pos += n
         if (kept > 0) {
           batch.setNumRows(kept)
           reader.counters.batchesEmitted += 1
@@ -1210,31 +1230,49 @@ final class DwrfColumnarPartitionReader(
     }
   }
 
-  /** Evaluates the exact filters over the decoded batch of `n` rows and
-    * compacts the output columns to the rows that match; returns how
-    * many. */
+  /** Decides which of the decoded batch's `n` rows are kept and compacts
+    * the output columns to them; returns how many. */
   private def filterBatch(n: Int): Int = {
-    var i = 0
-    while (i < decoders.length) {
-      predicateIn.dicts(i) = decoders(i).attachedDictionary
-      i += 1
+    if (predicate == null) java.util.Arrays.fill(results, 0, n, ExactFilter.T)
+    else {
+      var i = 0
+      while (i < decoders.length) {
+        predicateIn.dicts(i) = decoders(i).attachedDictionary
+        i += 1
+      }
+      predicate.evalBatch(predicateIn, n, results)
     }
-    predicate.evalBatch(predicateIn, n, results)
+    if (pos < from)
+      java.util.Arrays.fill(results, 0, math.min(n.toLong, from - pos).toInt, ExactFilter.F)
+    if (mask != null) mask(results, pos, n)
     val k = ExactFilter.select(results, n, selected)
     if (k > 0 && k < n) {
-      i = 0
+      var i = 0
       while (i < width) { VectorUtil.compact(vectors(i), selected, k); i += 1 }
     }
     k
   }
 
-  override def get(): ColumnarBatch = batch
+  override def close(): Unit = vectors.foreach(_.close())
+}
+
+/** Spark's reader of one input partition: `batches` of `reader`'s file
+  * ([[DwrfFileReader.batches]]), closing the file at the end. */
+final class DwrfColumnarPartitionReader(reader: DwrfFileReader, batches: DwrfBatches)
+    extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
+
+  private var current: ColumnarBatch = null
+
+  override def next(): Boolean =
+    batches.hasNext && { current = batches.next(); true }
+
+  override def get(): ColumnarBatch = current
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     DwrfMetrics.taskValues(reader.counters)
 
   override def close(): Unit = {
-    vectors.foreach(_.close())
+    batches.close()
     reader.close()
   }
 }

@@ -166,11 +166,7 @@ final class DwrfCdfMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // the row path unconditionally: DV masks / inverse masks and the
-    // constant splice live there, and mixed historic schemas (widened
-    // files) read correctly without a per-batch uniformity probe
     new DwrfPartitionReaderFactory(readSchema.json, Array.empty, hadoopConf,
-      rowFallback = true,
       fileMetaRequested =
         readSchema.fieldNames.contains(DwrfUtil.FileMetaColumn) &&
           !tableSchema.fieldNames.contains(DwrfUtil.FileMetaColumn))

@@ -255,9 +255,8 @@ object DwrfUtil {
   /** Physical row position within the data file (0-based, pre-mask file
     * order). With [[FileMetaColumn]] it is a STABLE row identity —
     * deterministic across reads, immune to task ordering — which is what
-    * the change feed keys row-level deletes on. Requesting it routes the
-    * scan to the counted row path (no reader-level skipping, no
-    * vectorized batches): provenance reads pay for exactness.
+    * the change feed keys row-level deletes on. The reader numbers each
+    * batch from its stride's first row, so stride skipping stays on.
     */
   val PosMetaColumn = "_pos"
 
@@ -979,7 +978,7 @@ final class DwrfScanBuilder(tableSchema: StructType, path: String,
     *
     * Top-level pruning ONLY: with nestedSchemaPruning (default on) Catalyst
     * may hand us a nested-pruned struct (e.g. `st: struct<b>` for
-    * `SELECT st.b`), but TreeReaders decode whole top-level columns from
+    * `SELECT st.b`), but the readers decode whole top-level columns from
     * the file schema — reporting the pruned shape verbatim would misalign
     * struct ordinals downstream (silent corruption). Map each requested
     * field back to its full file type; Catalyst projects the subfield.
@@ -1075,7 +1074,6 @@ private final case class DwrfFileTail(
     numRows: Long,
     rawDataSize: Long,
     statsByName: Map[String, graft.format.ColumnStats],
-    widened: Boolean,
     partSpec: Seq[(String, String)],
     blooms: Map[String, graft.format.BloomFilter] = Map.empty,
     dvPath: Option[String] = None,
@@ -1096,6 +1094,10 @@ final class DwrfScan(tableSchema: StructType, readSchema: StructType, path: Stri
     with SupportsRuntimeFiltering with SupportsReportPartitioning {
 
   override def readSchema(): StructType = readSchema
+
+  /** Every dwrf read is columnar, a scan that plans no partition too. */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.SUPPORTED
 
   /** What the readers decode: `readSchema`, then the columns only the
     * owned filters reference (Spark pruned those from `readSchema` once
@@ -1279,13 +1281,6 @@ final class DwrfScan(tableSchema: StructType, readSchema: StructType, path: Stri
         val statsByName = ColumnTree.pathIds(r.schema).flatMap {
           case (path, (id, _)) => r.footer.fileStats.get(id).map(path -> _)
         }
-        // does any read column need a widening upcast from this file's
-        // narrower on-disk type? (drives the columnar-vs-row choice;
-        // renamed columns resolve at the file's own generation's name)
-        val fileFieldByName = r.schema.fields.map(f => f.name -> f).toMap
-        val widened = decodeSchema.fields.exists { f =>
-          ColumnAliases.resolve(f, fileFieldByName).exists(_.dataType != f.dataType)
-        }
         // partition values surface as min=max stats: the regular pruner
         // then skips whole partitions for static AND runtime filters
         // (= dynamic partition pruning through one code path)
@@ -1301,8 +1296,7 @@ final class DwrfScan(tableSchema: StructType, readSchema: StructType, path: Stri
               .map(k.stripPrefix(DwrfBloom.MetaPrefix) -> _)
         }.flatten.toMap
         // a bound delete vector: its masked-row count corrects the
-        // row-count estimate; its presence routes the scan to the
-        // masked row path
+        // row-count estimate; the reader masks its positions
         val dvPath = dvOf.get(file.toString)
         val dvCount = dvPath.map(p =>
           DwrfDv.count(new Path(p), hadoopConf.value)).getOrElse(0L)
@@ -1320,7 +1314,7 @@ final class DwrfScan(tableSchema: StructType, readSchema: StructType, path: Stri
         }.toMap
         DwrfFileTail(file.toString, r.footer.stripes, r.footer.numRows,
           r.footer.rawDataSize, statsByName ++ aliasStats ++ partStats,
-          widened, spec, blooms ++ aliasBlooms, dvPath, dvCount)
+          spec, blooms ++ aliasBlooms, dvPath, dvCount)
       } finally r.close()
     }
   }
@@ -1467,22 +1461,11 @@ final class DwrfScan(tableSchema: StructType, readSchema: StructType, path: Stri
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // supportColumnarReads must be uniform across partitions (Spark
-    // rejects mixed scans), so ONE widened file sends the whole scan down
-    // the row path — the rare evolution case pays, the common case doesn't
     new DwrfPartitionReaderFactory(decodeSchema.json,
       // copy-on-write: no reader-level (stripe/stride) row skipping —
-      // surviving files must stream back EVERY row for the rewrite.
-      // Same for `_pos` provenance reads: a skipped stride would
-      // silently misnumber every row after it.
-      if (replacedFilesOut != null || posMetaRequested) Array.empty
-      else allFilters,
+      // surviving files must stream back EVERY row for the rewrite
+      if (replacedFilesOut != null) Array.empty else allFilters,
       hadoopConf,
-      // delete-vector'd files read on the masked row path (position
-      // masking needs every physical row surfaced in order); Spark
-      // requires columnar-vs-row uniform across the scan
-      rowFallback = posMetaRequested ||
-        fileTails.exists(t => t.widened || t.dvPath.nonEmpty),
       // `_file`/`_pos` are METADATA columns only when no data column
       // shadows the name
       fileMetaRequested =
@@ -1566,11 +1549,12 @@ final case class DwrfCdfDeltaPartition(path: String, offset: Long,
   * stats skipping; `exact` filters are evaluated exactly and only their
   * matching rows are returned. When `outputWidth` is set, the schema's
   * columns past it are decoded for `exact` only and never output.
+  * Every partition reads columnar, whatever its types, delete vector,
+  * `_pos` column or widened file: there is no row reader.
   */
 final class DwrfPartitionReaderFactory(readSchemaJson: String,
     pushed: Array[org.apache.spark.sql.sources.Filter],
     hadoopConf: SerializableHadoopConf,
-    rowFallback: Boolean = false,
     fileMetaRequested: Boolean = false,
     posMetaRequested: Boolean = false,
     exact: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
@@ -1580,14 +1564,7 @@ final class DwrfPartitionReaderFactory(readSchemaJson: String,
   @transient private lazy val parsedSchema =
     org.apache.spark.sql.types.DataType.fromJson(readSchemaJson).asInstanceOf[StructType]
 
-  /** Every projection takes the vectorized path — all types, nested
-    * included — WITH or without pushed filters: the columnar reader
-    * applies the same stripe/stride stats skipping as the row path,
-    * seeking decoders to surviving stride runs, and the same exact
-    * filters. Exception: the scans `rowFallback` names read rows.
-    */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    !rowFallback && ColumnarSupport.supported(parsedSchema)
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   /** Typed constants for the partition columns present in `readSchema`,
     * plus the `_file` metadata column when requested — a per-partition
@@ -1604,152 +1581,35 @@ final class DwrfPartitionReaderFactory(readSchemaJson: String,
     else parts
   }
 
+  /** The rows of `p`'s file selected by position: a bound delete vector
+    * masks its positions; a change-feed delta keeps only the positions
+    * its new delete vector adds over the old one. */
+  private def maskOf(p: DwrfPartitionBase): PositionMask = {
+    val conf = hadoopConf.value
+    def positions(dv: String): Array[Long] = DwrfDv.read(new Path(dv), conf)._1
+    p match {
+      case d: DwrfCdfDeltaPartition =>
+        val old = d.oldDvPath.map(positions).getOrElse(Array.emptyLongArray)
+        new PositionMask(positions(d.newDvPath)
+          .filter(java.util.Arrays.binarySearch(old, _) < 0), keep = true)
+      case _ => p.dvPath.map(dv => new PositionMask(positions(dv), keep = false)).orNull
+    }
+  }
+
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[DwrfPartitionBase]
+    val mask = maskOf(p)
     val reader = new DwrfFileReader(new Path(p.path), hadoopConf.value)
-    new DwrfColumnarPartitionReader(reader,
+    new DwrfColumnarPartitionReader(reader, reader.batches(
       reader.stripesInRange(p.offset, p.length), parsedSchema, pushed.toSeq,
-      partValues = partValuesOf(p), exact = exact.toSeq,
-      outputWidth = outputWidth)
+      exact.toSeq, partValuesOf(p), outputWidth, posMetaRequested, mask))
   }
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[DwrfPartitionBase]
-    val partVals = partValuesOf(p)
-    // partition columns (and the metadata columns) never live in the
-    // data files: read the rest, then splice into each output row
-    val dataSchema = StructType(parsedSchema.fields.filterNot(f =>
-      partVals.contains(f.name) ||
-        (posMetaRequested && f.name == DwrfUtil.PosMetaColumn)))
-    val reader = new DwrfFileReader(new Path(p.path), hadoopConf.value)
-    val group = reader.stripesInRange(p.offset, p.length)
-    // the surfaced row's physical position, readable by the splice stage
-    // below (set before each element is mapped — iterator stages run
-    // element-at-a-time on one thread)
-    val posHolder = new Array[Long](1)
-    // delete-vector masking: positions are file-global over PHYSICAL
-    // rows, so the reader must surface every row of the stripe group in
-    // order (no stride/stripe skipping — drop the pushed filters, which
-    // were only an I/O saving; the exact filters still apply to each
-    // surfaced row below) and the mask walks alongside a running position
-    // starting at the rows preceding this group. `_pos` provenance reads
-    // use the same counted walk (the scan already dropped the filters).
-    def rowBase: Long = reader.footer.stripes
-      .filter(_.offset < p.offset).map(_.numRows).sum
-    val inner: Iterator[InternalRow] = p match {
-      case d: DwrfCdfDeltaPartition =>
-        // keep ONLY newly-masked positions: new sidecar minus old — the
-        // change feed's exact row-level deletes for a rebind commit
-        val conf = hadoopConf.value
-        val neu = DwrfDv.read(new Path(d.newDvPath), conf)._1
-        val keep = d.oldDvPath match {
-          case Some(old) =>
-            val oldArr = DwrfDv.read(new Path(old), conf)._1
-            val oldSet = new java.util.HashSet[java.lang.Long](oldArr.length * 2)
-            oldArr.foreach(oldSet.add(_))
-            neu.filterNot(oldSet.contains(_))
-          case None => neu
-        }
-        val base = rowBase
-        var pos = base - 1
-        var idx = {
-          val i = java.util.Arrays.binarySearch(keep, base)
-          if (i >= 0) i else -(i + 1)
-        }
-        reader.rows(group, dataSchema).filter { _ =>
-          pos += 1
-          if (idx < keep.length && keep(idx) == pos) {
-            idx += 1; posHolder(0) = pos; true
-          } else false
-        }
-      case _ => p.dvPath match {
-        case None if !posMetaRequested =>
-          reader.rows(group, dataSchema, pushed.toSeq)
-        case None =>
-          var pos = rowBase - 1
-          reader.rows(group, dataSchema).map { r =>
-            pos += 1; posHolder(0) = pos; r
-          }
-        case Some(dv) =>
-          val masked = DwrfDv.read(new Path(dv), hadoopConf.value)._1
-          val base = rowBase
-          var pos = base - 1
-          var idx = {
-            // first masked position at or past this group's row range
-            val i = java.util.Arrays.binarySearch(masked, base)
-            if (i >= 0) i else -(i + 1)
-          }
-          reader.rows(group, dataSchema).filter { _ =>
-            pos += 1
-            if (idx < masked.length && masked(idx) == pos) { idx += 1; false }
-            else { posHolder(0) = pos; true }
-          }
-      }
-    }
-    // the exact filters, on the data row: partition columns are per-file
-    // constants, and a column the file lacks reads NULL from the row
-    val predicate = ExactFilter.compile(exact.toSeq, parsedSchema(_).dataType, { name =>
-      if (partVals.contains(name)) ExactFilter.Constant(partVals(name))
-      else ExactFilter.Slot(dataSchema.fieldIndex(name), dataSchema(name).dataType)
-    })
-    val filtered: Iterator[InternalRow] = predicate match {
-      case null => inner.map { r => reader.counters.rowsDecoded += 1; r }
-      case _: ExactFilter.Const => Iterator.empty // false or NULL for the whole file
-      case pred => inner.filter { r =>
-        reader.counters.rowsDecoded += 1
-        pred.evalRow(r) == ExactFilter.T
-      }
-    }
-    // columns past outputWidth were decoded for the filters only
-    val outFields = parsedSchema.fields.take(
-      if (outputWidth < 0) parsedSchema.length else outputWidth)
-    val it: Iterator[InternalRow] =
-      if (partVals.isEmpty && !posMetaRequested &&
-          outFields.length == parsedSchema.length) filtered
-      else {
-        val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          outFields.length)
-        // ordinal plan: data column source index, -1 = constant,
-        // -2 = the per-row `_pos` value
-        val srcIdx = outFields.map(f =>
-          if (posMetaRequested && f.name == DwrfUtil.PosMetaColumn) -2
-          else if (partVals.contains(f.name)) -1
-          else dataSchema.fieldIndex(f.name))
-        outFields.zipWithIndex.foreach { case (f, i) =>
-          if (srcIdx(i) == -1) out.update(i, partVals(f.name))
-        }
-        filtered.map { r =>
-          var i = 0
-          while (i < srcIdx.length) {
-            if (srcIdx(i) >= 0)
-              out.update(i, if (r.isNullAt(srcIdx(i))) null
-                else r.get(srcIdx(i), dataSchema.fields(srcIdx(i)).dataType))
-            else if (srcIdx(i) == -2) out.update(i, posHolder(0))
-            i += 1
-          }
-          out: InternalRow
-        }
-      }
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = null
-      // hoisted once: the reader runs on one task thread by Spark's
-      // contract, and a ThreadLocal.get per row would tax the hot path
-      private val prof = graft.format.ReadProfile.get
-      override def next(): Boolean = {
-        // bracket the decompress profile so interleaved readers in one
-        // task thread (SPJ) attribute their own nanos, never each other's
-        val d0 = prof.decompressNanos
-        val more = if (it.hasNext) { current = it.next(); true } else false
-        reader.counters.decompressNanosAcc += prof.decompressNanos - d0
-        more
-      }
-      override def get(): InternalRow = current
-      override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-        DwrfMetrics.taskValues(reader.counters)
-      override def close(): Unit = reader.close()
-    }
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "dwrf: every read is columnar; no row reader for " +
+        s"${partition.asInstanceOf[DwrfPartitionBase].path}")
 }
 
 // --------------------------------------------------------------- write

@@ -251,7 +251,7 @@ object DwrfDelete {
             totalRows += 1
             // DELETE removes rows where the condition is TRUE; NULL keeps
             if (!matches(row)) {
-              w.addRow(row.copy())
+              w.addRow(row)
               keptRows += 1
             }
           }

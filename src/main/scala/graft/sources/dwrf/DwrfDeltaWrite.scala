@@ -48,8 +48,8 @@ import graft.format.DeleteVector
   * Cost model at 100 TB: bytes written ∝ rows CHANGED (new row versions
   * + delta-varint positions), not files touched — a 50-row GDPR update
   * across 10k files writes 10k tiny sidecars + one small data file
-  * instead of rewriting 10 TB. The read-side debt (masked row path, no
-  * footer aggregates while DVs bound) is the standard merge-on-read
+  * instead of rewriting 10 TB. The read-side debt (per-batch position
+  * masking, no footer aggregates while DVs bound) is the standard merge-on-read
   * trade, repaid by `OPTIMIZE` which purges masks and folds in the
   * appended files. Snapshot-log tables only: the sidecar/file rebinding
   * must be one atomic publication.

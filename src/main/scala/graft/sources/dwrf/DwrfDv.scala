@@ -27,11 +27,11 @@ import graft.format.DeleteVector
   * leave the live set whole, no sidecar, no decode) and the exact
   * three-valued row evaluator ([[DwrfDelete.matcherFor]] — NULL keeps).
   *
-  * The read-time cost — and the way back out of it: a DV'd file scans
-  * on the masked row path (no vectorized batches, no stride skipping),
-  * so accumulated DVs tax every query. [[DwrfOptimize]] or any
-  * copy-on-write rewrite purges them (rewrites apply the mask and drop
-  * the binding), restoring the columnar path — the standard
+  * The read-time cost — and the way back out of it: a DV'd file still
+  * decodes its masked rows (each batch then drops them by position), and
+  * bound DVs disable footer aggregates, so accumulated DVs tax every
+  * query. [[DwrfOptimize]] or any copy-on-write rewrite purges them
+  * (rewrites apply the mask and drop the binding) — the standard
   * merge-on-read maintenance loop.
   *
   * Reference baseline: hive-dwrf is append-only (OrcOutputFormat.java

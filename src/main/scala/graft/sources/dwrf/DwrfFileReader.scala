@@ -1,9 +1,11 @@
 package graft.sources.dwrf
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.format._
@@ -17,6 +19,22 @@ final case class StrideSelection(
     indexes: Map[Int, IndexedSeq[RowIndexEntry]],
     runs: Seq[(Int, Int)],
     numStrides: Int)
+
+/** Per-stripe stream access for the decoders. */
+trait StreamSource {
+  /** The stream's bytes for (column, kind), if present in this stripe. */
+  def stream(column: Int, kind: Int): Option[InStream]
+  def encoding(column: Int): ColumnEncoding
+  /** Whether integer streams use varints (false = fixed 8-byte LE). */
+  def useVInts: Boolean = true
+}
+
+/** A run of contiguous rows of one stripe that may hold wanted rows:
+  * seek to `entries` (None = the stripe start, no seek needed), then
+  * `rows` rows follow, the first at physical position `firstRow` of the
+  * file. */
+final class Segment(val entries: Option[Map[Int, RowIndexEntry]],
+    val firstRow: Long, val rows: Long)
 
 /** Reads one GRFT file: tail parse (postscript + footer), then per-stripe
   * decoding of only the streams the projection needs, with adjacent wanted
@@ -144,117 +162,115 @@ final class DwrfFileReader(path: Path, conf: Configuration) extends AutoCloseabl
     runs.toSeq
   }
 
-  private lazy val idByName: Map[String, (Int, org.apache.spark.sql.types.DataType)] = {
+  /** The file's top-level columns by name: tree id and written type. */
+  private[dwrf] lazy val idByName: Map[String, (Int, DataType)] = {
     val fullIds = ColumnTree.topLevelIds(schema)
     schema.fields.map(_.name).zip(fullIds.zip(schema.fields.map(_.dataType))).toMap
   }
 
   /** Stats lookups accept dotted struct paths too (`st.ok`) — the writer
     * records stats per column id at every nesting level. */
-  private[dwrf] lazy val statIdByPath: Map[String, (Int, org.apache.spark.sql.types.DataType)] =
+  private[dwrf] lazy val statIdByPath: Map[String, (Int, DataType)] =
     ColumnTree.pathIds(schema)
 
-  /** Readers for `readSchema`'s fields against this file: absent columns
-    * read all-null, present-but-narrower columns (schema evolution type
-    * widening) decode as written and upcast per value, renamed columns
+  /** The physical position of each stripe's first row, by stripe offset. */
+  private lazy val rowBase: Map[Long, Long] =
+    footer.stripes.map(_.offset).zip(footer.stripes.scanLeft(0L)(_ + _.numRows)).toMap
+
+  /** Batches of `readSchema`'s fields over the given stripes, read
+    * against this file: absent columns read all-null, columns an older
+    * generation wrote narrower are widened, renamed columns
     * ([[ColumnAliases]]) resolve at the file's own generation's name.
+    * [[DwrfBatches]] documents the parameters.
     */
-  private def makeReaders(readSchema: StructType): Array[TreeReader] =
-    readSchema.fields.map { f =>
-      ColumnAliases.resolve(f, idByName) match {
-        case Some((id, dt)) =>
-          val base = TreeReader.create(id, dt)
-          TypeWidening.converter(dt, f.dataType) match {
-            case Some(c) => new UpcastTreeReader(base, c)
-            case None => base
-          }
-        case None => new NullColumnTreeReader // schema evolution: all-null
-      }
-    }
+  def batches(
+      stripes: Seq[StripeInformation],
+      readSchema: StructType,
+      filters: Seq[Filter] = Nil,
+      exact: Seq[Filter] = Nil,
+      partValues: Map[String, Any] = Map.empty,
+      outputWidth: Int = -1,
+      withPos: Boolean = false,
+      mask: PositionMask = null,
+      from: Long = 0L): DwrfBatches =
+    new DwrfBatches(this, stripes, readSchema, filters, exact, partValues,
+      outputWidth, withPos, mask, from)
 
   /** Row iterator over the given stripes, producing only `readSchema`'s
-    * top-level fields (a subset of the file schema's fields). `filters`
-    * (a conjunction) trigger stripe- and stride-level skipping via stats;
-    * Spark still re-evaluates them, so skipping is pure I/O savings.
+    * top-level fields. `filters` (a conjunction) only skip stripes and
+    * strides by their stats and blooms, so rows they do not match may
+    * still surface. Every row is a fresh copy, safe to keep.
     */
   def rows(
       stripes: Seq[StripeInformation],
       readSchema: StructType,
-      filters: Seq[org.apache.spark.sql.sources.Filter] = Nil): Iterator[InternalRow] = {
-    val readers: Array[TreeReader] = makeReaders(readSchema)
-    val wantedColumns: Array[Boolean] = {
-      val inc = new Array[Boolean](ColumnTree.columnCount(schema))
-      readSchema.fields.foreach { f =>
-        ColumnAliases.resolve(f, idByName).foreach { case (id, dt) =>
-          ColumnTree.includeSubtree(inc, id, dt)
-        }
-      }
-      inc
-    }
-    val width = readers.length
+      filters: Seq[Filter] = Nil): Iterator[InternalRow] =
+    rowsOf(batches(stripes, readSchema, filters))
 
-    def readAll(si: StripeInformation, sf: StripeFooter): Iterator[InternalRow] = {
-      val src = openStripe(si, sf, wantedColumns)
-      readers.foreach(_.startStripe(src))
-      (0L until si.numRows).iterator.map { _ =>
-        val row = new GenericInternalRow(width)
-        var i = 0
-        while (i < width) {
-          row.update(i, readers(i).next())
-          i += 1
-        }
-        row: InternalRow
-      }
-    }
+  private def rowsOf(bs: DwrfBatches): Iterator[InternalRow] =
+    bs.flatMap(_.rowIterator.asScala.map(_.copy()))
 
+  /** The stripe and stride skipping loop of every read: the segments of
+    * `stripes` that lie at or after file row `from` and whose stripe and
+    * stride stats and stride blooms may match `filters` (a conjunction).
+    * `start` receives each surviving stripe's streams (the `wanted`
+    * columns only, read in the surviving strides' byte ranges) before
+    * that stripe's first segment.
+    */
+  private[dwrf] def segments(
+      stripes: Seq[StripeInformation],
+      filters: Seq[Filter],
+      wanted: Array[Boolean],
+      from: Long)(start: StreamSource => Unit): Iterator[Segment] = {
+    val stride = footer.rowIndexStride
+    lazy val wantedIds = wanted.indices.filter(wanted).toSet
     stripes.iterator.flatMap { si =>
-      val sf = readStripeFooter(si)
-      def stripeStatsOf(attr: String): Option[ColumnStats] =
-        statIdByPath.get(attr).flatMap { case (id, _) => sf.stats.get(id) }
-      if (filters.nonEmpty && !StatsFilter.mayMatch(filters, schema, stripeStatsOf)) {
-        counters.stripesSkipped += 1
-        Iterator.empty // whole stripe skipped on stats
-      } else {
-        counters.stripesRead += 1
-        val stride = footer.rowIndexStride
-        if (filters.isEmpty || stride <= 0 || si.numRows <= stride) readAll(si, sf)
-        else {
-          // stride-level skipping: row indexes of every wanted column
-          val wantedIds = (0 until wantedColumns.length).filter(wantedColumns)
-          val indexes: Map[Int, IndexedSeq[RowIndexEntry]] =
-            readRowIndexes(si, sf, wantedIds.toSet)
+      val base = rowBase(si.offset)
+      if (base + si.numRows <= from) Iterator.empty // wholly before `from`
+      else {
+        val sf = readStripeFooter(si)
+        def stripeStatsOf(attr: String): Option[ColumnStats] =
+          statIdByPath.get(attr).flatMap { case (id, _) => sf.stats.get(id) }
+        def whole(): Iterator[Segment] = {
+          counters.stripesRead += 1
+          start(openStripe(si, sf, wanted))
+          Iterator(new Segment(None, base, si.numRows))
+        }
+        // strides wholly before `from` are never decoded
+        val lead = if (stride > 0 && from > base) ((from - base) / stride).toInt else 0
+        if (filters.nonEmpty && !StatsFilter.mayMatch(filters, schema, stripeStatsOf)) {
+          counters.stripesSkipped += 1
+          Iterator.empty
+        } else if ((filters.isEmpty && lead == 0) || stride <= 0 || si.numRows <= stride) {
+          whole()
+        } else {
+          val indexes = readRowIndexes(si, sf, wantedIds)
           val numStrides = ((si.numRows + stride - 1) / stride).toInt
-          if (indexes.isEmpty || indexes.values.exists(_.length != numStrides)) {
-            readAll(si, sf) // index unavailable/inconsistent: full read
-          } else {
+          if (indexes.isEmpty || indexes.values.exists(_.length != numStrides)) whole()
+          else {
             def strideStatsOf(k: Int)(attr: String): Option[ColumnStats] =
               statIdByPath.get(attr).flatMap { case (id, _) =>
                 indexes.get(id).map(_(k).stats)
               }
-            val statsMatching = (0 until numStrides)
+            val statsMatching = (lead until numStrides)
               .filter(k => StatsFilter.mayMatch(filters, schema, strideStatsOf(k)))
-            counters.stridesSkipped += numStrides - statsMatching.length
-            val matching =
-              bloomRefineStrides(si, sf, filters, numStrides, statsMatching)
-            if (matching.isEmpty) Iterator.empty
-            else if (matching.length == numStrides) readAll(si, sf)
+            counters.stridesSkipped += numStrides - lead - statsMatching.length
+            // equality/IN conjuncts get a second, bloom-backed refutation pass
+            val matching = bloomRefineStrides(si, sf, filters, numStrides, statsMatching)
+            if (matching.isEmpty) {
+              counters.stripesSkipped += 1 // all strides eliminated
+              Iterator.empty
+            } else if (matching.length == numStrides) whole()
             else {
-              val src = openStripe(si, sf, wantedColumns,
-                Some(StrideSelection(indexes, runsOf(matching), numStrides)))
-              readers.foreach(_.startStripe(src))
-              matching.iterator.flatMap { k =>
-                val entries = indexes.map { case (id, es) => id -> es(k) }
-                readers.foreach(_.seekTree(entries))
-                val rowsHere = math.min(stride.toLong, si.numRows - k.toLong * stride)
-                (0L until rowsHere).iterator.map { _ =>
-                  val row = new GenericInternalRow(width)
-                  var i = 0
-                  while (i < width) {
-                    row.update(i, readers(i).next())
-                    i += 1
-                  }
-                  row: InternalRow
-                }
+              counters.stripesRead += 1
+              val runs = runsOf(matching)
+              // stride-granular I/O pruning: only byte ranges covering the
+              // surviving runs are read (see openStripe)
+              start(openStripe(si, sf, wanted, Some(StrideSelection(indexes, runs, numStrides))))
+              runs.iterator.map { case (a, b) =>
+                val first = a.toLong * stride
+                new Segment(Some(indexes.map { case (id, es) => id -> es(a) }),
+                  base + first, math.min(b.toLong * stride, si.numRows) - first)
               }
             }
           }
@@ -572,54 +588,11 @@ final class DwrfFileReader(path: Path, conf: Configuration) extends AutoCloseabl
 
   /** Point row access (P5, reference RecordReader.seekToRow /
     * RecordReaderImpl.java:494-543): iterator starting at absolute row
-    * `rowNumber`, seeking via the row index when present and skip-reading
-    * the remainder.
+    * `rowNumber`. The decoders seek to the stride holding it via the row
+    * index when present, then decode and drop the rows before it.
     */
-  def rowsFrom(rowNumber: Long, readSchema: StructType): Iterator[InternalRow] = {
-    var remaining = rowNumber
-    var firstIdx = 0
-    val stripes = footer.stripes
-    while (firstIdx < stripes.length && remaining >= stripes(firstIdx).numRows) {
-      remaining -= stripes(firstIdx).numRows
-      firstIdx += 1
-    }
-    if (firstIdx >= stripes.length) return Iterator.empty
-    val si = stripes(firstIdx)
-    val sf = readStripeFooter(si)
-    val readers: Array[TreeReader] = makeReaders(readSchema)
-    val wanted = {
-      val inc = new Array[Boolean](ColumnTree.columnCount(schema))
-      readSchema.fields.foreach { f =>
-        ColumnAliases.resolve(f, idByName).foreach { case (id, dt) =>
-          ColumnTree.includeSubtree(inc, id, dt)
-        }
-      }
-      inc
-    }
-    val src = openStripe(si, sf, wanted)
-    readers.foreach(_.startStripe(src))
-    val stride = footer.rowIndexStride
-    var toSkip = remaining
-    if (stride > 0 && remaining >= stride) {
-      val wantedIds = (0 until wanted.length).filter(wanted).toSet
-      val indexes = readRowIndexes(si, sf, wantedIds)
-      if (indexes.nonEmpty) {
-        val k = (remaining / stride).toInt
-        val entries = indexes.collect { case (id, es) if k < es.length => id -> es(k) }
-        readers.foreach(_.seekTree(entries))
-        toSkip = remaining - k.toLong * stride
-      }
-    }
-    readers.foreach(_.skipRows(toSkip))
-    val width = readers.length
-    val firstStripeRows = (0L until (si.numRows - remaining)).iterator.map { _ =>
-      val row = new GenericInternalRow(width)
-      var i = 0
-      while (i < width) { row.update(i, readers(i).next()); i += 1 }
-      row: InternalRow
-    }
-    firstStripeRows ++ rows(stripes.drop(firstIdx + 1), readSchema)
-  }
+  def rowsFrom(rowNumber: Long, readSchema: StructType): Iterator[InternalRow] =
+    rowsOf(batches(footer.stripes, readSchema, from = rowNumber))
 
   override def close(): Unit = in.close()
 }

@@ -66,7 +66,6 @@ final class DwrfLogMicroBatchStream(
     DwrfSourceOffset(DwrfSourceOffset.parse(json))
 
   @volatile private var availableNowEnd: Option[Long] = None
-  @volatile private var sawWidened = false
 
   private def latestEnd(): Long =
     DwrfLog.latestVersion(root, hadoopConf.value).map(_ + 1).getOrElse(0L)
@@ -139,16 +138,10 @@ final class DwrfLogMicroBatchStream(
     val files = (from until to).flatMap(addedBy)
     val tails = DwrfUtil.parMap(files) { file =>
       val r = new DwrfFileReader(file, hadoopConf.value)
-      try {
-        val widened = readSchema.fields.exists { f =>
-          r.schema.fields.find(_.name == f.name).exists(_.dataType != f.dataType)
-        }
-        (file.toString, r.footer.stripes, widened,
-          PartitionLayout.specOf(qualifiedRoot, file))
-      } finally r.close()
+      try (file.toString, r.footer.stripes, PartitionLayout.specOf(qualifiedRoot, file))
+      finally r.close()
     }
-    if (tails.exists(_._3)) sawWidened = true
-    tails.flatMap { case (file, stripes, _, partSpec) =>
+    tails.flatMap { case (file, stripes, partSpec) =>
       DwrfSplits.stripeGroups(stripes).map { case (off, len) =>
         DwrfInputPartition(file, off, len, partSpec)
       }
@@ -156,8 +149,7 @@ final class DwrfLogMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new DwrfPartitionReaderFactory(readSchema.json, pushed, hadoopConf,
-      rowFallback = sawWidened)
+    new DwrfPartitionReaderFactory(readSchema.json, pushed, hadoopConf)
 
   override def commit(end: Offset): Unit = () // retention = DwrfLog.vacuum
   override def stop(): Unit = ()

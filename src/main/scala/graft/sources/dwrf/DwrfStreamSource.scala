@@ -119,10 +119,6 @@ final class DwrfMicroBatchStream(
 
   // AvailableNow snapshot: fixed drain endpoint captured once per run
   @volatile private var availableNowEnd: Option[Long] = None
-  // sticky row fallback: once ANY planned file needs a widening upcast,
-  // later factories stay on the row path (monotone, so the factory/plan
-  // evaluation order inside a micro-batch can't race it back to columnar)
-  @volatile private var sawWidened = false
 
   override def prepareForTriggerAvailableNow(): Unit = {
     discover()
@@ -182,16 +178,10 @@ final class DwrfMicroBatchStream(
     val tails = DwrfUtil.parMap(slice.toSeq) { case (lp, _) =>
       val file = new Path(lp)
       val r = new DwrfFileReader(file, hadoopConf.value)
-      try {
-        val widened = readSchema.fields.exists { f =>
-          r.schema.fields.find(_.name == f.name).exists(_.dataType != f.dataType)
-        }
-        (lp, r.footer.stripes, widened,
-          PartitionLayout.specOf(qualifiedRoot, file))
-      } finally r.close()
+      try (lp, r.footer.stripes, PartitionLayout.specOf(qualifiedRoot, file))
+      finally r.close()
     }
-    if (tails.exists(_._3)) sawWidened = true
-    tails.flatMap { case (file, stripes, _, partSpec) =>
+    tails.flatMap { case (file, stripes, partSpec) =>
       DwrfSplits.stripeGroups(stripes).map { case (off, len) =>
         DwrfInputPartition(file, off, len, partSpec)
       }
@@ -199,8 +189,7 @@ final class DwrfMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new DwrfPartitionReaderFactory(readSchema.json, pushed, hadoopConf,
-      rowFallback = sawWidened)
+    new DwrfPartitionReaderFactory(readSchema.json, pushed, hadoopConf)
 
   // retention: earliest registry index whose file may still be present.
   // Resets to 0 on restart — commit then just re-skips absent files.

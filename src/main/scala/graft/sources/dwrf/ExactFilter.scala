@@ -11,9 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Exact evaluation of pushed filters with the semantics of Spark's
   * `Filter` operator. One evaluator serves DELETE (copy-on-write rewrite
-  * and merge-on-read position collection) and every dwrf scan: the
-  * columnar reader through [[Pred.evalBatch]], the row readers (delete
-  * vectors, `_pos`, widened files, change-feed deltas) through
+  * and merge-on-read position collection) and every dwrf scan: scans
+  * through [[Pred.evalBatch]], DELETE's row matcher through
   * [[Pred.evalRow]].
   *
   * A filter tree compiles once per file. Each column binds either to a

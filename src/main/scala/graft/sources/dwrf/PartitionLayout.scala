@@ -181,7 +181,7 @@ final class ConstantVectorDecoder(value: Any, dt: DataType)
       case ByteType => v.putByte(i, value.asInstanceOf[Byte])
       case ShortType => v.putShort(i, value.asInstanceOf[Short])
       case IntegerType | DateType => v.putInt(i, value.asInstanceOf[Int])
-      case LongType => v.putLong(i, value.asInstanceOf[Long])
+      case LongType | TimestampType => v.putLong(i, value.asInstanceOf[Long])
       case FloatType => v.putFloat(i, value.asInstanceOf[Float])
       case DoubleType => v.putDouble(i, value.asInstanceOf[Double])
       case BooleanType => v.putBoolean(i, value.asInstanceOf[Boolean])

@@ -1,17 +1,13 @@
 package graft.sources.dwrf
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
-
-import graft.format.RowIndexEntry
 
 /** Schema evolution beyond add/drop: numeric type WIDENING across file
   * generations (int→long, float→double — common when a long-lived
   * dataset's producer upgrades a column). `inferSchema` merges to the
-  * widest type; files written with the narrower one are decoded as
-  * written and upcast on read, recursively through structs/arrays/maps.
+  * widest type; files written with the narrower one decode as written
+  * and store into vectors of the wider type ([[VectorDecoder.create]]),
+  * recursively through structs/arrays/maps.
   * Narrowing (or int↔float drift) stays a hard error at merge time —
   * an upcast never loses a value, anything else could.
   */
@@ -47,92 +43,4 @@ object TypeWidening {
         }
       }
     }
-
-  /** A deep Catalyst-value converter from `from` to `to`; None when the
-    * types are identical (no conversion needed). Callers must have
-    * validated widenability (widen(from, to) == Some(to)) — unknown
-    * shapes fall back to identity-on-null-safe behavior via None here
-    * only for equal types, and throw at build time otherwise.
-    */
-  def converter(from: DataType, to: DataType): Option[Any => Any] = {
-    if (from == to) return None
-    val c: Any => Any = (from, to) match {
-      case (ByteType, ShortType) => v => v.asInstanceOf[Byte].toShort
-      case (ByteType, IntegerType) => v => v.asInstanceOf[Byte].toInt
-      case (ByteType, LongType) => v => v.asInstanceOf[Byte].toLong
-      case (ShortType, IntegerType) => v => v.asInstanceOf[Short].toInt
-      case (ShortType, LongType) => v => v.asInstanceOf[Short].toLong
-      case (IntegerType, LongType) => v => v.asInstanceOf[Int].toLong
-      case (FloatType, DoubleType) => v => v.asInstanceOf[Float].toDouble
-      case (sa: StructType, sb: StructType) =>
-        val fieldConvs: Array[Option[Any => Any]] =
-          sa.fields.zip(sb.fields).map { case (fa, fb) =>
-            converter(fa.dataType, fb.dataType)
-          }
-        val fromTypes = sa.fields.map(_.dataType)
-        v => {
-          val row = v.asInstanceOf[InternalRow]
-          val out = new Array[Any](fieldConvs.length)
-          var i = 0
-          while (i < fieldConvs.length) {
-            val raw = if (row.isNullAt(i)) null else row.get(i, fromTypes(i))
-            out(i) = fieldConvs(i) match {
-              case Some(fc) if raw != null => fc(raw)
-              case _ => raw
-            }
-            i += 1
-          }
-          new GenericInternalRow(out)
-        }
-      case (ArrayType(ea, _), ArrayType(eb, _)) =>
-        converter(ea, eb) match {
-          case None => return None
-          case Some(ec) =>
-            v => {
-              val arr = v.asInstanceOf[ArrayData].toObjectArray(ea)
-              new GenericArrayData(arr.map(e => if (e == null) null else ec(e)))
-            }
-        }
-      case (MapType(ka, va, _), MapType(kb, vb, _)) =>
-        val kc = converter(ka, kb)
-        val vc = converter(va, vb)
-        if (kc.isEmpty && vc.isEmpty) return None
-        v => {
-          val m = v.asInstanceOf[MapData]
-          val keys: Array[Any] = m.keyArray().toObjectArray(ka)
-            .map(k => kc match {
-              case Some(f) if k != null => f(k)
-              case _ => k
-            })
-          val vals: Array[Any] = m.valueArray().toObjectArray(va)
-            .map(x => vc match {
-              case Some(f) if x != null => f(x)
-              case _ => x
-            })
-          new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(vals))
-        }
-      case _ =>
-        throw new IllegalArgumentException(
-          s"dwrf: cannot widen ${from.simpleString} to ${to.simpleString}")
-    }
-    Some(c)
-  }
-}
-
-/** Wraps a file-typed TreeReader, upcasting each decoded value to the
-  * (wider) requested read type. Delegates stripe/seek machinery wholesale;
-  * its own `present` stays null so `next`/`skipRows` route straight to the
-  * inner reader, which owns null handling.
-  */
-final class UpcastTreeReader(inner: TreeReader, convert: Any => Any)
-    extends TreeReader(inner.columnId) {
-  override def startStripe(src: StreamSource): Unit = inner.startStripe(src)
-  override protected def startValues(src: StreamSource): Unit = ()
-  override protected def nextValue(): Any = {
-    val v = inner.next()
-    if (v == null) null else convert(v)
-  }
-  override protected def skipValues(n: Long): Unit = inner.skipRows(n)
-  override def seek(entry: RowIndexEntry): Unit = inner.seek(entry)
-  override def readerChildren: Seq[TreeReader] = inner.readerChildren
 }

@@ -405,10 +405,13 @@ class DwrfDvSpec extends AnyFunSuite {
     val factory = new DwrfPartitionReaderFactory(schema.json, Array.empty,
       new SerializableHadoopConf(conf))
     def readGroup(off: Long, len: Long): Seq[Long] = {
-      val rd = factory.createReader(
+      val rd = factory.createColumnarReader(
         DwrfInputPartition(file.toString, off, len, Nil, Some(dvAbs)))
       val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      while (rd.next()) buf += rd.get().getLong(0)
+      while (rd.next()) {
+        val it = rd.get().rowIterator()
+        while (it.hasNext) buf += it.next().getLong(0)
+      }
       rd.close()
       buf.toSeq
     }

@@ -159,8 +159,8 @@ class DwrfPushdownSpec extends AnyFunSuite {
     try {
       val readSchema = org.apache.spark.sql.types.StructType(
         r.schema.fields.filter(f => Seq("id", "bucket", "tag", "uid", "score").contains(f.name)))
-      val pr = new DwrfColumnarPartitionReader(r, r.footer.stripes, readSchema,
-        Seq(GreaterThanOrEqual("id", 4500L), LessThan("id", 5500L)))
+      val pr = new DwrfColumnarPartitionReader(r, r.batches(r.footer.stripes, readSchema,
+        Seq(GreaterThanOrEqual("id", 4500L), LessThan("id", 5500L))))
       val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
       val tags = scala.collection.mutable.ArrayBuffer.empty[String]
       while (pr.next()) {
@@ -188,8 +188,8 @@ class DwrfPushdownSpec extends AnyFunSuite {
       val readSchema = org.apache.spark.sql.types.StructType(
         r.schema.fields.filter(f => Seq("id", "uid").contains(f.name)))
       // strides 1 and 7 survive; the decoder must seek across the gap
-      val pr = new DwrfColumnarPartitionReader(r, r.footer.stripes, readSchema,
-        Seq(In("id", Array[Any](1500L, 7500L))))
+      val pr = new DwrfColumnarPartitionReader(r, r.batches(r.footer.stripes, readSchema,
+        Seq(In("id", Array[Any](1500L, 7500L)))))
       val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
       val uids = scala.collection.mutable.ArrayBuffer.empty[String]
       while (pr.next()) {
@@ -239,8 +239,8 @@ class DwrfPushdownSpec extends AnyFunSuite {
     // same through the columnar reader
     val r = new DwrfFileReader(file, new Configuration())
     try {
-      val pr = new DwrfColumnarPartitionReader(r, r.footer.stripes, r.schema,
-        Seq(GreaterThanOrEqual("id", 50000L), LessThan("id", 55000L)))
+      val pr = new DwrfColumnarPartitionReader(r, r.batches(r.footer.stripes, r.schema,
+        Seq(GreaterThanOrEqual("id", 50000L), LessThan("id", 55000L))))
       var rows = 0L
       while (pr.next()) rows += pr.get().numRows()
       assert(rows == 5000)

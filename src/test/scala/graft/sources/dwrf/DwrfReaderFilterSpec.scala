@@ -15,11 +15,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The reader filter: pushed predicates the dwrf reader owns are
   * evaluated exactly inside the reader, and Spark plans no `Filter` for
-  * them. Differential against parquet over every atomic type and every
-  * read path, plus the plan shape and the row-level operations that
+  * them. Differential against parquet over every atomic type, widened
+  * columns (nested ones too) and every kind of read — delete vectors,
+  * `_pos`, change-feed deltas, empty projections — each of which must
+  * read columnar, plus the plan shape and the row-level operations that
   * read through the same scan.
   */
-class DwrfReaderFilterSpec extends AnyFunSuite {
+class DwrfReaderFilterSpec extends AnyFunSuite
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   private lazy val spark = TestSpark.spark
 
@@ -59,30 +62,87 @@ class DwrfReaderFilterSpec extends AnyFunSuite {
     ("ts", TimestampType, IndexedSeq("1950-05-05 12:00:00",
       "1969-12-31 23:59:59.999999", "1970-01-01 00:00:00",
       "2024-01-01 10:11:12.123456").map(java.sql.Timestamp.valueOf)),
-    // int in the older files, long in the newer: widened at read
+    // narrower in the older files (see `narrower`): widened at read
     ("w", LongType, IndexedSeq(Int.MinValue.toLong, -1L, 0L, 9L, 1L << 33,
       Long.MaxValue)),
+    ("wb", LongType, IndexedSeq(-128L, -1L, 0L, 5L, 127L, 1L << 40, Long.MinValue)),
+    ("wf", DoubleType, IndexedSeq(Double.NaN, -0.0, 1.5, -2.25, 1e300,
+      Double.PositiveInfinity)),
     // only the newer files have it
     ("late", IntegerType, IndexedSeq(0, 1, 2)),
     ("p", IntegerType, IndexedSeq(0, 1, 2)))
 
-  /** Two file generations: the older lacks `late` and stores `w` as int
-    * (only the int-range values); `p` partitions both. */
+  /** The columns the older files store narrower: their type there and
+    * the values their rows draw from. */
+  private val narrower: Map[String, (DataType, IndexedSeq[Any])] = Map(
+    "w" -> (IntegerType, IndexedSeq(Int.MinValue, -1, 0, 9)),
+    "wb" -> (ByteType, IndexedSeq[Byte](-128, -1, 0, 5, 127)),
+    "wf" -> (FloatType, IndexedSeq(Float.NaN, -0.0f, 1.5f, -2.25f,
+      Float.PositiveInfinity)))
+
+  /** Nested columns whose leaves the older files store narrower: an
+    * array of bytes, a struct of int and float, a map of float values,
+    * all widened to long and double at read. */
+  private def nestedType(older: Boolean): Seq[StructField] = {
+    val (long, double) = if (older) (ByteType, FloatType) else (LongType, DoubleType)
+    Seq(StructField("na", ArrayType(long)),
+      StructField("ns", StructType(Seq(StructField("x",
+        if (older) IntegerType else LongType), StructField("y", double)))),
+      StructField("nm", MapType(StringType, double)))
+  }
+
+  private def nestedValues(older: Boolean, rnd: scala.util.Random): Seq[Any] = {
+    def long(): Any =
+      if (rnd.nextDouble() < 0.1) null
+      else if (older) Seq[Byte](-128, -1, 0, 7, 127)(rnd.nextInt(5))
+      else Seq(Long.MinValue, -1L, 0L, 7L, 1L << 40)(rnd.nextInt(5))
+    def double(): Any =
+      if (rnd.nextDouble() < 0.1) null
+      else if (older) Seq(Float.NaN, -0.0f, 0.1f, -2.25f)(rnd.nextInt(4))
+      else Seq(Double.NaN, -0.0, 0.1, 1e300)(rnd.nextInt(4))
+    def orNull(v: => Any): Any = if (rnd.nextDouble() < 0.12) null else v
+    Seq(
+      orNull(Seq.fill(rnd.nextInt(4))(long())),
+      orNull(Row(if (older) Seq(Int.MinValue, 0, 3)(rnd.nextInt(3))
+        else Seq(Long.MaxValue, 0L, 3L)(rnd.nextInt(3)), double())),
+      orNull((0 until rnd.nextInt(3)).map(j => s"k$j" -> double()).toMap))
+  }
+
+  /** Two file generations: the older lacks `late` and stores the
+    * `narrower` columns and the nested leaves narrower; `p` partitions
+    * both. */
   private def generation(older: Boolean, ids: Range, rnd: scala.util.Random): DataFrame = {
     val cols = pools.filterNot(older && _._1 == "late")
     val rows = ids.map { id =>
-      Row.fromSeq(id.toLong +: cols.map { case (name, dt, vs) =>
+      Row.fromSeq((id.toLong +: cols.map { case (name, dt, vs) =>
         val nullShare = if (name == "p") 0.1 else 0.12
         if (rnd.nextDouble() < nullShare) null
-        else if (name == "w" && older)
-          Seq(Int.MinValue, -1, 0, 9)(rnd.nextInt(4))
-        else vs(rnd.nextInt(vs.length))
-      } :+ s"u$id-${rnd.nextInt(1000)}")
+        else narrower.get(name) match {
+          case Some((_, olderVs)) if older => olderVs(rnd.nextInt(olderVs.length))
+          case _ => vs(rnd.nextInt(vs.length))
+        }
+      }) ++ nestedValues(older, rnd) :+ s"u$id-${rnd.nextInt(1000)}")
     }
-    val schema = StructType(StructField("id", LongType) +: cols.map { case (n, dt, _) =>
-      StructField(n, if (n == "w" && older) IntegerType else dt)
-    } :+ StructField("u", StringType))
+    val schema = StructType((StructField("id", LongType) +: cols.map { case (n, dt, _) =>
+      StructField(n, narrower.get(n).filter(_ => older).fold(dt)(_._1))
+    }) ++ nestedType(older) :+ StructField("u", StringType))
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+  }
+
+  /** The dwrf scans of `df`'s executed plan, adaptive stages included;
+    * `df` must have run. */
+  private def dwrfScans(df: DataFrame): Seq[BatchScanExec] =
+    collect(df.queryExecution.executedPlan) {
+      case b: BatchScanExec if b.scan.isInstanceOf[DwrfScan] => b
+    }
+
+  /** Collects `df` and asserts that every dwrf scan in its plan read
+    * columnar batches (a contradictory predicate plans none). */
+  private def collectColumnar(df: DataFrame, clue: String): Array[Row] = {
+    val rows = df.collect()
+    assert(dwrfScans(df).forall(_.supportsColumnar), s"$clue: a row scan\n" +
+      df.queryExecution.executedPlan)
+    rows
   }
 
   /** Deterministic stand-in for scalatestplus's forAll (as in
@@ -148,60 +208,123 @@ class DwrfReaderFilterSpec extends AnyFunSuite {
         .option("row.index.stride", "16").save(d)
       neu.write.format("dwrf").partitionBy("p").mode("append").save(d)
     }
-    val all = old.withColumn("w", col("w").cast(LongType))
-      .withColumn("late", lit(null).cast(IntegerType))
-      .unionByName(neu)
+    val widened = narrower.keys.foldLeft(old) { (df, n) =>
+      df.withColumn(n, col(n).cast(pools.find(_._1 == n).get._2))
+    }
+    val all = nestedType(older = false).foldLeft(widened) { (df, f) =>
+      df.withColumn(f.name, col(f.name).cast(f.dataType))
+    }.withColumn("late", lit(null).cast(IntegerType)).unionByName(neu)
     all.write.mode("overwrite").parquet(pq)
+
+    val dwrf = spark.read.format("dwrf").load(dir)
+    val ref = spark.read.parquet(pq)
+    assert(narrower.keys.forall(n => dwrf.schema(n).dataType == ref.schema(n).dataType))
+    assert(nestedType(older = false).forall(f =>
+      dwrf.schema(f.name).dataType.simpleString == f.dataType.simpleString))
+    val names = ref.columns.toSeq
+    def select(df: DataFrame, cols: Seq[String]): DataFrame = df.select(cols.map(col): _*)
+
+    // unfiltered: every column, widened ones included, and `_pos`
+    val full = collectColumnar(select(dwrf, names :+ "_file" :+ "_pos"), "unfiltered")
+    assert(sorted(full.map(r => Row.fromSeq(r.toSeq.take(names.length)))) ==
+      sorted(select(ref, names).collect()), "unfiltered")
+    // every row's provenance: each file's rows hold positions 0 until n
+    val where: Map[Long, (String, Long)] = full.map(r =>
+      r.getLong(0) -> (r.getString(names.length), r.getLong(names.length + 1))).toMap
+    assert(where.size == 600)
+    where.values.groupBy(_._1).foreach { case (file, ps) =>
+      assert(ps.map(_._2).toSeq.sorted == (0L until ps.size).toSeq, s"_pos of $file")
+    }
+    // an empty projection counts through the scan, not the footers
+    val noAgg = spark.read.format("dwrf").option("aggregate.pushdown", "false")
+    assert(collectColumnar(noAgg.load(dir).groupBy().count(), "count").head.getLong(0) == 600)
 
     // merge-on-read deletes give every file a delete vector
     DwrfLog.enable(new Path(dvDir), DwrfUtil.sessionHadoopConf())
+    val dvWhere: Map[Long, Long] = spark.read.format("dwrf").load(dvDir)
+      .select("id", "_pos").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     spark.sql("DROP TABLE IF EXISTS dwrf_rf_dv")
     spark.sql(s"CREATE TABLE dwrf_rf_dv USING dwrf LOCATION '$dvDir' " +
       "TBLPROPERTIES ('delete.mode'='merge-on-read')")
+    val deleteVersion = DwrfLog.latestVersion(new Path(dvDir), DwrfUtil.sessionHadoopConf())
+      .get + 1
     val deleted = (0L until 600L).filter(_ % 5 == 0)
     spark.sql(s"DELETE FROM dwrf_rf_dv WHERE id IN (${deleted.mkString(", ")})")
-
-    val dwrf = spark.read.format("dwrf").load(dir)
     val dv = spark.read.format("dwrf").load(dvDir)
-    val ref = spark.read.parquet(pq)
-    assert(dwrf.schema("w").dataType == LongType)
-    val names = ref.columns.toSeq
-    val noW = names.filterNot(_ == "w")
-    // every row's provenance, from an unfiltered read
-    val where: Map[Long, (String, Long)] = dwrf.select("id", "_file", "_pos")
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
-    assert(where.size == 600)
+    val kept = ref.filter(!col("id").isin(deleted: _*))
+    val dvFull = collectColumnar(select(dv, names :+ "_pos"), "unfiltered delete vectors")
+    assert(sorted(dvFull.map(r => Row.fromSeq(r.toSeq.init))) ==
+      sorted(select(kept, names).collect()), "unfiltered delete vectors")
+    dvFull.foreach(r => assert(r.getLong(names.length) == dvWhere(r.getLong(0)), "dv _pos"))
+    assert(collectColumnar(noAgg.load(dvDir).groupBy().count(), "dv count")
+      .head.getLong(0) == 480)
+
+    // the change feed of the delete: exactly the deleted rows
+    val feedOut = tmp("dwrf-rf-cdf-")
+    val q = spark.readStream.format("dwrf")
+      .option(DwrfChanges.ReadChangeFeedKey, "true")
+      .option("startingVersion", deleteVersion.toString)
+      .load(dvDir)
+      .writeStream.format("parquet")
+      .option("path", s"$feedOut/out").option("checkpointLocation", s"$feedOut/ck")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val feedScans = collect(q.asInstanceOf[
+      org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan) {
+      case m: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec => m
+    }
+    assert(feedScans.nonEmpty && feedScans.forall(_.supportsColumnar), "change feed: a row scan")
+    val feed = spark.read.parquet(s"$feedOut/out")
+    assert(feed.select("_change_type").distinct().collect().map(_.getString(0)).toSeq ==
+      Seq("delete"))
+    assert(sorted(select(feed, names).collect()) ==
+      sorted(select(ref.filter(col("id").isin(deleted: _*)), names).collect()), "change feed")
 
     forSamples(predGen(2), 40) { case (k, (pred, desc)) =>
       val want = ref.filter(pred)
       def clue(what: String) = s"case $k [$desc] $what"
 
-      // columnar unless the predicate needs the widened column
-      val a = dwrf.filter(pred).select(noW.map(col): _*)
-      assert(sorted(a.collect()) == sorted(want.select(noW.map(col): _*).collect()),
-        clue("columnar projection"))
+      // every column, with `_pos`
+      val a = select(dwrf.filter(pred), names :+ "_pos")
+      val got = collectColumnar(a, clue("all columns"))
+      assert(sorted(got.map(r => Row.fromSeq(r.toSeq.init))) ==
+        sorted(select(want, names).collect()), clue("all columns"))
       assert(filterExecs(a).isEmpty, clue(s"left a Filter:\n${a.queryExecution.executedPlan}"))
-      // every column: the widened column sends it down the row path, with `_pos`
-      val b = dwrf.filter(pred).select((names :+ "_pos").map(col): _*).collect()
-      assert(sorted(b.map(r => Row.fromSeq(r.toSeq.init))) ==
-        sorted(want.select(names.map(col): _*).collect()), clue("row path"))
-      b.foreach { r =>
-        val id = r.getLong(names.indexOf("id"))
+      got.foreach { r =>
+        val id = r.getLong(0)
         assert(r.getLong(names.length) == where(id)._2, clue(s"_pos of $id"))
       }
       // a projection without the predicate's columns, with `_file`
-      val c = dwrf.filter(pred).select("id", "_file").collect()
+      val c = collectColumnar(dwrf.filter(pred).select("id", "_file"), clue("id-only"))
       assert(c.map(_.getLong(0)).sorted.toSeq ==
         want.select("id").collect().map(_.getLong(0)).sorted.toSeq, clue("id-only"))
       c.foreach(r => assert(r.getString(1) == where(r.getLong(0))._1, clue("_file")))
       assert(dwrf.filter(pred).count() == c.length, clue("count"))
-      // delete-vector files
-      val d = dv.filter(pred).select(noW.map(col): _*)
-      assert(sorted(d.collect()) == sorted(want.filter(!col("id").isin(deleted: _*))
-        .select(noW.map(col): _*).collect()), clue("delete vectors"))
+      // delete-vector files, with `_pos`
+      val d = collectColumnar(select(dv.filter(pred), names :+ "_pos"), clue("delete vectors"))
+      assert(sorted(d.map(r => Row.fromSeq(r.toSeq.init))) ==
+        sorted(select(want.filter(!col("id").isin(deleted: _*)), names).collect()),
+        clue("delete vectors"))
+      d.foreach(r => assert(r.getLong(names.length) == dvWhere(r.getLong(0)),
+        clue("delete-vector _pos")))
     }
     old.unpersist(); neu.unpersist()
     spark.sql("DROP TABLE dwrf_rf_dv")
+  }
+
+  test("no row reader: a row read fails loudly, naming the partition") {
+    val dir = tmp("dwrf-rf-norow-")
+    spark.range(0, 10, 1, 1).write.format("dwrf").mode("overwrite").save(dir)
+    val file = DwrfUtil.listDataFiles(new Path(dir), DwrfUtil.sessionHadoopConf()).head
+    val factory = new DwrfPartitionReaderFactory(
+      StructType(Seq(StructField("id", LongType))).json, Array.empty,
+      new SerializableHadoopConf(DwrfUtil.sessionHadoopConf()))
+    val partition = DwrfInputPartition(file.toString, 0L, Long.MaxValue)
+    assert(factory.supportColumnarReads(partition))
+    val e = intercept[UnsupportedOperationException](factory.createReader(partition))
+    assert(e.getMessage.contains(file.toString), e.getMessage)
   }
 
   test("evaluator: Spark's double ordering, inexact and out-of-range literals") {

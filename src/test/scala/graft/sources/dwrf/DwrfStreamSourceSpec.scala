@@ -42,7 +42,7 @@ class DwrfStreamSourceSpec extends AnyFunSuite {
       "partition values must ride the streamed splits")
   }
 
-  test("widened files mid-stream flip to the row path and upcast correctly") {
+  test("widened files mid-stream upcast and read columnar") {
     val s = spark
     import s.implicits._
     val dir = graft.TestDirs.tmp("streamwiden-").toString
@@ -65,7 +65,7 @@ class DwrfStreamSourceSpec extends AnyFunSuite {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType)))
-    s.readStream
+    val q = s.readStream
       .format("dwrf")
       .schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -76,10 +76,19 @@ class DwrfStreamSourceSpec extends AnyFunSuite {
       .option("checkpointLocation", s"$dir-ck")
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start().awaitTermination()
+      .start()
+    q.awaitTermination()
     val back = s.read.parquet(s"$dir-out").orderBy($"id").as[Long].collect()
     assert(back.toSeq == Seq(1L, 2L, 3L, 4L),
       "int files must upcast through the streamed read")
+    // the batch after the widened file still reads columnar batches
+    val scans = q.asInstanceOf[
+      org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.collect {
+        case m: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec => m
+      }
+    assert(scans.nonEmpty && scans.forall(_.supportsColumnar),
+      "every streamed batch reads columnar")
   }
 
   test("landing dir drains epoch by epoch; stream == batch") {

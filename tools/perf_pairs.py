@@ -16,8 +16,12 @@ For each metric of the record (the end-to-end ones with --trace 0, the
 per-layer ones with --trace 1) it prints both sides' median [Q1, Q3], the
 median change, how many pairs the change won (per the metric's `better`
 direction in BENCHMARK.json), whether the median gap exceeds the parent's
-inter-quartile range, and, for end-to-end metrics, whether the change's
-median is worse than the parent's by more than the metric's `bound`.
+inter-quartile range, and, for end-to-end metrics, a verdict against the
+metric's `bound`: `over` when the change's median is worse than the
+parent's by more than the bound; `unresolved` when it is not, but the
+parent's own runs spread wider than the bound (IQR / median > bound) and
+some change run is no better than some parent run, since such a spread
+cannot show that the change is no worse; `ok` otherwise.
 `--keep DIR` keeps each run's full report under DIR/<side>-<seed>/;
 with `--by-kind` it also prints, per op kind (per query of `pipeline`),
 each side's median of the kept reports' `op_p50_ms_by_kind`, so an
@@ -51,6 +55,22 @@ def quartiles(xs):
         return xs[0], xs[0], xs[0]
     q = statistics.quantiles(xs, n=4, method="inclusive")
     return q[0], statistics.median(xs), q[2]
+
+
+def bound_verdict(pv, cv, lower, bound):
+    """`over`, `unresolved` or `ok` for one end-to-end metric's parent runs
+    `pv` and change runs `cv` (see the module docstring)."""
+    p1, pm, p3 = quartiles(pv)
+    cm = statistics.median(cv)
+    if not pm:
+        return "ok"
+    worse = (cm - pm) / pm if lower else (pm - cm) / pm
+    if worse > bound:
+        return "over"
+    all_better = max(cv) < min(pv) if lower else min(cv) > max(pv)
+    if (p3 - p1) / abs(pm) > bound and not all_better:
+        return "unresolved"
+    return "ok"
 
 
 def run(checkout, args, seed, keep):
@@ -109,7 +129,7 @@ def main():
     n = len(runs["parent"])
     print(f"{args.workload}, {n} pairs, --seconds {args.seconds} --trace {args.trace}")
     print(f"{'metric':<34} {'parent median [Q1, Q3]':>30} {'change median [Q1, Q3]':>30}"
-          f" {'delta':>8} {'wins':>6} {'>IQR':>5} {'bound':>8}")
+          f" {'delta':>8} {'wins':>6} {'>IQR':>5} {'bound':>10}")
     for name in sorted(runs["parent"][0]["metrics"]):
         if name not in spec:
             continue
@@ -121,14 +141,11 @@ def main():
         wins = sum((c < p) if lower else (c > p) for p, c in zip(pv, cv))
         delta = (cm - pm) / pm if pm else float("nan")
         beyond_iqr = abs(cm - pm) > (p3 - p1) and ((cm < pm) == lower)
-        if "bound" in spec[name]:
-            worse = (cm - pm) / pm if lower else (pm - cm) / pm
-            verdict = "over" if pm and worse > spec[name]["bound"] else "ok"
-        else:
-            verdict = "-"
+        verdict = bound_verdict(pv, cv, lower, spec[name]["bound"]) \
+            if "bound" in spec[name] else "-"
         print(f"{name:<34} {pm:>12.4g} [{p1:.4g}, {p3:.4g}]".ljust(65) +
               f" {cm:>12.4g} [{c1:.4g}, {c3:.4g}]".ljust(31) +
-              f" {delta:>+8.1%} {wins:>3}/{n:<2} {'yes' if beyond_iqr else 'no':>5} {verdict:>8}")
+              f" {delta:>+8.1%} {wins:>3}/{n:<2} {'yes' if beyond_iqr else 'no':>5} {verdict:>10}")
     if args.by_kind:
         print_by_kind(args, runs)
 
